@@ -31,18 +31,12 @@ z71 -> d13_containment_neardup, z73 -> d14_bloom_decontam,
 z95 -> k12_sql_merge_upsert, z96 -> k13_sql_delete_update (same code,
 new registry names after the driver-window rotation).
 
-Round-7: the window rotation renamed several bench subjects again; the
-report KEEPS the round-6 output keys (so BENCH_r7 compares key-for-key
-against BENCH_r6) and resolves the registry through _R7_RENAMES.
+Rounds 7-14: each window rotation renamed some bench subjects again;
+the report KEEPS the earlier output keys (so every BENCH_r{N} compares
+key-for-key) and resolves each key's current registry name through the
+one _REGISTRY_NAMES table.
 
-Round-8: same drill — the round-8 rotation demoted d02/k12/k13/s08 to
-zf-tier names and promoted z65/z67 into the window; _R8_RENAMES keeps
-the output keys of every prior round.
-
-Round-9: the debt-to-zero rotation promoted all 17 remaining
-never-driver-checked z-tier names and demoted 17 multi-round-green
-names to zg-tier; _R9_RENAMES covers the four bench subjects affected.
-The report also emits "value_normalized" = value x 0.343/calibration
+Round-9: the report also emits "value_normalized" = value x 0.343/calibration
 (0.343 = the r6/r7 reference calibration) so cross-round comparison
 cancels machine drift without a judge's footnote."""
 
@@ -73,115 +67,107 @@ HEADLINE = [
 
 N_RUNS = 3
 
-# round-7 driver-window rotation: bench output key -> current registry
-# name (same code; stable keys keep BENCH_r{N} cross-round comparable)
-_R7_RENAMES = {
+# bench output key -> current registry name.  Every driver-window
+# rotation (rounds 7-14) renamed some bench subjects; the output keys
+# stay fixed so BENCH_r{N} files compare key-for-key across rounds.  A
+# key absent here is its own registry name.
+_REGISTRY_NAMES = {
+    "d02_minhash_lsh_neardup": "zf01_minhash_lsh_neardup",
+    "d10_duplicate_spans": "zg18_duplicate_spans",
+    "d12_semantic_dedup": "zg24_semantic_dedup",
+    "d13_containment_neardup": "zg25_containment_neardup",
+    "d14_bloom_decontam": "zg26_bloom_decontam",
+    "k02_keyed_insert_compact": "zd32_keyed_insert_compact",
+    "k12_sql_merge_upsert": "zf09_sql_merge_upsert",
+    "k13_sql_delete_update": "zf10_sql_delete_update",
     "q01_pricing_summary": "zd01_pricing_summary",
-    "q03_regional_revenue": "zd03_regional_revenue",
+    "q03_regional_revenue": "a01_regional_revenue",
     "q07_topk_parts_per_supplier": "zd07_topk_parts_per_supplier",
     "q21_sessionization": "zd21_sessionization",
     "q22_asof_join": "zd22_asof_join",
-    "k02_keyed_insert_compact": "zd32_keyed_insert_compact",
     "s06_ivfadc": "zd46_ivfadc",
-    "zc03_snapshot_restore": "k17_snapshot_restore",
-    "zc08_minor_compaction": "k18_minor_compaction",
-}
-
-
-# round-8 rotation: bench output key -> current registry name
-_R8_RENAMES = {
-    "d02_minhash_lsh_neardup": "zf01_minhash_lsh_neardup",
     "s08_ivfadc_residual": "zf15_ivfadc_residual",
-    "k12_sql_merge_upsert": "zf09_sql_merge_upsert",
-    "k13_sql_delete_update": "zf10_sql_delete_update",
+    "s09_ivfadc_rerank": "zg16_ivfadc_rerank",
+    "t16_dsir_importance": "zg60_dsir_importance",
+    "t17_cms_heavy_hitters": "zg61_cms_heavy_hitters",
     "z65_stream_neardup_index": "st10_stream_neardup_index",
-    "z67_winnowing_fingerprints": "d17_winnowing_fingerprints",
-}
-
-
-# round-14 rotation: bench output key -> current registry name.
-# Promotions t34/t35 (the r13 production figures keep their zh02/zh04
-# output keys) and one demotion: s13_sq8_ann rotated to zh05 — the
-# bench key zg35_sq8_ann resolved to s13 via _R12_RENAMES, and rename
-# maps don't chain, so the demotion needs the direct entry here.
-_R14_RENAMES = {
+    "z67_winnowing_fingerprints": "zg54_winnowing_fingerprints",
+    "z75_pmi_collocations": "zg95_pmi_collocations",
+    "zc03_snapshot_restore": "zg03_snapshot_restore",
+    "zc08_minor_compaction": "zg04_minor_compaction",
     "zg35_sq8_ann": "zh05_sq8_ann",
+    "zg37_tfidf_cosine": "d20_tfidf_cosine",
+    "zg46_replica_index_cdc": "k30_replica_index_cdc",
     "zh02_hybrid_rrf": "t34_hybrid_rrf",
     "zh04_doc_repetition": "t35_doc_repetition",
 }
 
 
-# round-13 rotation: bench output key -> current registry name.
-# The only bench subject affected: z75 (pmi collocations) resolved via
-# _R9_RENAMES to t25, which the r13 rotation demoted to zg95 — rename
-# maps don't chain, so the direct entry lives here.
-_R13_RENAMES = {
-    "z75_pmi_collocations": "zg95_pmi_collocations",
-}
-
-
-# round-11 rotation: bench output key -> current registry name.
-# a01_regional_revenue is the PERMANENT core-relational sentinel (it
-# sorts first, so it can never rotate out of the driver's 50-name
-# window); the historical bench key q03 keeps BENCH_r{N} comparable.
-_R11_RENAMES = {
-    "q03_regional_revenue": "a01_regional_revenue",
-}
-
-
-# round-12 rotation: bench output key -> current registry name.
-# Promotions (zg35/zg37/zg46 gained non-z window names) and demotions
-# (t16/t17 rotated to z-tier) — same code, stable bench keys.
-_R12_RENAMES = {
-    "zg35_sq8_ann": "s13_sq8_ann",
-    "zg37_tfidf_cosine": "d20_tfidf_cosine",
-    "zg46_replica_index_cdc": "k30_replica_index_cdc",
-    "t16_dsir_importance": "zg60_dsir_importance",
-    "t17_cms_heavy_hitters": "zg61_cms_heavy_hitters",
-    # was z67 -> d17 in _R8_RENAMES; rename maps don't chain, so the
-    # r12 demotion of d17 needs the direct entry here
-    "z67_winnowing_fingerprints": "zg54_winnowing_fingerprints",
-}
-
-
-# round-10 rotation: bench output key -> current registry name
-_R10_RENAMES = {
-    "d12_semantic_dedup": "zg24_semantic_dedup",
-    "d13_containment_neardup": "zg25_containment_neardup",
-    "d14_bloom_decontam": "zg26_bloom_decontam",
-}
-
-
-# round-9 rotation: bench output key -> current registry name
-_R9_RENAMES = {
-    "d10_duplicate_spans": "zg18_duplicate_spans",
-    "s09_ivfadc_rerank": "zg16_ivfadc_rerank",
-    "z75_pmi_collocations": "t25_pmi_collocations",
-    "zc03_snapshot_restore": "zg03_snapshot_restore",
-    "zc08_minor_compaction": "zg04_minor_compaction",
-}
-
-
 def _lookup(registry, name):
-    """Resolve a (possibly renamed) bench key in the query registry.
+    """Resolve a bench output key in the query registry.
 
-    Raises KeyError on a key that resolves through NO rename map so a
+    Raises KeyError on a key that resolves to no registry entry so a
     future rotation without a mapping fails loudly instead of surfacing
     as an AttributeError on None downstream."""
-    qd = (
-        registry.get(name)
-        or registry.get(_R14_RENAMES.get(name, ""))
-        or registry.get(_R13_RENAMES.get(name, ""))
-        or registry.get(_R12_RENAMES.get(name, ""))
-        or registry.get(_R11_RENAMES.get(name, ""))
-        or registry.get(_R10_RENAMES.get(name, ""))
-        or registry.get(_R9_RENAMES.get(name, ""))
-        or registry.get(_R8_RENAMES.get(name, ""))
-        or registry.get(_R7_RENAMES.get(name, ""))
-    )
+    qd = registry.get(_REGISTRY_NAMES.get(name, name))
     if qd is None:
-        raise KeyError(f"bench key {name!r} not in registry or rename maps")
+        raise KeyError(f"bench key {name!r} not in registry or rename table")
     return qd
+
+
+# round-4+ scale paths (bench key, output key), timed in
+# _production_paths after the dedup shapes
+_SCALE_PATHS = (
+    ("s06_ivfadc", "s06_ivfadc"),
+    ("s08_ivfadc_residual", "s08_ivfadc_residual"),
+    # round-11: the multi-probe IVF variant (nprobe>1) — the recall
+    # knob a production ANN deployment actually turns; its cost law
+    # (probes multiply the QUERY side only, nprobe/|cells| of the
+    # corpus scanned per batch) needs round-over-round visibility
+    ("zb11_ann_multiprobe", "s04_ann_multiprobe"),
+    # round-11 late additions: the SQ8 decode-and-score scan (the
+    # 1-byte-code bandwidth tier — its cost law is a pure corpus
+    # scan, so drift here means the broadcast/zip_with shape broke)
+    # and the TF-IDF posting-list self-join (df-capped; drift here
+    # means a hot term slipped past the cap)
+    ("zg35_sq8_ann", "s05_sq8_ann"),
+    ("zg37_tfidf_cosine", "t30_tfidf_cosine"),
+    # replica covered index maintained through CDC replay — the
+    # figure tracks the index-maintenance overhead apply_changes
+    # pays on top of the bare ship (k24_cdc_ship is the no-index
+    # baseline)
+    ("zg46_replica_index_cdc", "k26_replica_index_cdc"),
+    ("d10_duplicate_spans", "d10_duplicate_spans"),
+    # round-13: hybrid RRF fusion (bounded union+aggregate over the
+    # two retriever top-20s — drift here means a retriever stage,
+    # not the fusion, regressed) and the within-doc Gopher
+    # repetition rules (pure per-doc keyed aggregates — the
+    # cheapest corpus-scan quality pass; drift means the line/bigram
+    # explode shape broke)
+    ("zh02_hybrid_rrf", "zh02_hybrid_rrf"),
+    ("zh04_doc_repetition", "zh04_doc_repetition"),
+)
+
+# registry gates timed as production paths (output key = bench key)
+_REGISTRY_PATHS = (
+    "d12_semantic_dedup",
+    "t16_dsir_importance",
+    "s09_ivfadc_rerank",
+    "z65_stream_neardup_index",
+    "z67_winnowing_fingerprints",
+    "d13_containment_neardup",
+    "t17_cms_heavy_hitters",
+    "d14_bloom_decontam",
+    "z75_pmi_collocations",
+    "k12_sql_merge_upsert",
+    "k13_sql_delete_update",
+    "zc03_snapshot_restore",
+    "zc08_minor_compaction",
+)
+
+# JVM warm-up gates, run on the smoke SF before the measured passes
+_WARM_UP = ("d02_minhash_lsh_neardup", "zb08_ann_topk")
+
 
 # rows each headline query SCANS at sf=1 (dominant input table), for the
 # rows/s throughput report; scaled linearly by the measured SF
@@ -298,36 +284,7 @@ def _production_paths(spark, sf_dir: str) -> dict[str, float]:
     # round-4 scale paths: cell-pruned PQ search and the rolling-window
     # substring-dedup scan (the one operator whose explode is inherently
     # one row per token — regression visibility for its shuffle volume)
-    for name, key in (
-        ("s06_ivfadc", "s06_ivfadc"),
-        ("s08_ivfadc_residual", "s08_ivfadc_residual"),
-        # round-11: the multi-probe IVF variant (nprobe>1) — the recall
-        # knob a production ANN deployment actually turns; its cost law
-        # (probes multiply the QUERY side only, nprobe/|cells| of the
-        # corpus scanned per batch) needs round-over-round visibility
-        ("zb11_ann_multiprobe", "s04_ann_multiprobe"),
-        # round-11 late additions: the SQ8 decode-and-score scan (the
-        # 1-byte-code bandwidth tier — its cost law is a pure corpus
-        # scan, so drift here means the broadcast/zip_with shape broke)
-        # and the TF-IDF posting-list self-join (df-capped; drift here
-        # means a hot term slipped past the cap)
-        ("zg35_sq8_ann", "s05_sq8_ann"),
-        ("zg37_tfidf_cosine", "t30_tfidf_cosine"),
-        # replica covered index maintained through CDC replay — the
-        # figure tracks the index-maintenance overhead apply_changes
-        # pays on top of the bare ship (k24_cdc_ship is the no-index
-        # baseline)
-        ("zg46_replica_index_cdc", "k26_replica_index_cdc"),
-        ("d10_duplicate_spans", "d10_duplicate_spans"),
-        # round-13: hybrid RRF fusion (bounded union+aggregate over the
-        # two retriever top-20s — drift here means a retriever stage,
-        # not the fusion, regressed) and the within-doc Gopher
-        # repetition rules (pure per-doc keyed aggregates — the
-        # cheapest corpus-scan quality pass; drift means the line/bigram
-        # explode shape broke)
-        ("zh02_hybrid_rrf", "zh02_hybrid_rrf"),
-        ("zh04_doc_repetition", "zh04_doc_repetition"),
-    ):
+    for name, key in _SCALE_PATHS:
         t0 = time.perf_counter()
         n = _lookup(registry, name).fn(spark, sf_dir).count()
         out[key] = round(time.perf_counter() - t0, 3)
@@ -363,21 +320,7 @@ def _production_paths(spark, sf_dir: str) -> dict[str, float]:
     # DELETE+UPDATE rewrites) for write-path regression visibility
     # ...and the round-6 storage admin paths (snapshot+restore rollback,
     # minor compaction of an ingest tail)
-    for name in (
-        "d12_semantic_dedup",
-        "t16_dsir_importance",
-        "s09_ivfadc_rerank",
-        "z65_stream_neardup_index",
-        "z67_winnowing_fingerprints",
-        "d13_containment_neardup",
-        "t17_cms_heavy_hitters",
-        "d14_bloom_decontam",
-        "z75_pmi_collocations",
-        "k12_sql_merge_upsert",
-        "k13_sql_delete_update",
-        "zc03_snapshot_restore",
-        "zc08_minor_compaction",
-    ):
+    for name in _REGISTRY_PATHS:
         t0 = time.perf_counter()
         n = _lookup(registry, name).fn(spark, sf_dir).count()
         out[name] = round(time.perf_counter() - t0, 3)
@@ -571,7 +514,7 @@ def main() -> None:
     warm.join(warm.select("r_regionkey"), "r_regionkey").filter(
         "r_name IS NOT NULL"
     ).groupBy("r_name").count().collect()
-    for q in ("d02_minhash_lsh_neardup", "zb08_ann_topk"):
+    for q in _WARM_UP:
         _lookup(registry, q).fn(spark, "/root/testdata/sf0.001").count()
 
     runs: list[dict[str, float]] = []

@@ -336,7 +336,7 @@ class KeyedTableReader(DataSourceReader):
         """Per-file Bloom probe for point predicates — the planning
         twin of the store's :meth:`KeyedTableStore.get` fast path
         (HBase skips HFiles via their bloom block on Get).  Same rules
-        as the store's ``_bloom_point_candidates``: only the values
+        as the store's ``_candidate_files``: only the values
         inside the file's key span are probed (an out-of-span value
         can't turn the file into a false positive), probe values Spark
         would coerce to the key type are never probed (they count as

@@ -169,6 +169,27 @@ class KeyedTableStore:
     conflict loudly.  In-flight builds are protected from a concurrent
     writer's garbage sweep by per-generation liveness markers.
 
+    Keyed DML pipeline: every keyed DML entry point is assembled from
+    three shared stages.
+
+    1. Candidates (:meth:`_candidate_files`): footer span pruning, then
+       per-key exact-span pruning, then the row-key Bloom probe — the
+       files an operation may touch.  Every entry point below and
+       :meth:`get` plan through it.
+    2. Selective commit (:meth:`_selective_commit`): candidates →
+       locate (:meth:`_locate_affected_files`) → changed-key capture →
+       rewrite of the affected files only (:meth:`_selective_rewrite`).
+       :meth:`delete_where`, :meth:`delete_keys`, :meth:`delete_cells`
+       and :meth:`update_where` are this stage with their own selector
+       and transform.
+    3. Commit tail (:meth:`_commit`): one attempt under the CAS retry,
+       then covered-index maintenance outside it.  Stage 2 ends in it;
+       :meth:`upsert`, :meth:`check_and_put` / :meth:`increment` /
+       :meth:`append_cell` (through ``_conditional_put``),
+       :meth:`check_and_delete`, :meth:`mutate` and
+       :meth:`apply_changes` pass their own attempt bodies (the check
+       read, the batched merge, the fused feed replay).
+
     Filesystem boundary: the directory protocol (atomic same-directory
     ``rename``, ``O_CREAT|O_EXCL`` lock files, hardlink carry,
     ``os.listdir``) assumes a LOCAL or POSIX-renaming filesystem (the
@@ -1153,21 +1174,12 @@ class KeyedTableStore:
                 r["__cs"] for r in krows if r["__cs"] is not None
             ]
 
-        def attempt() -> int:
+        def attempt() -> tuple:
             path = self.table_path(spec)
             stats: dict = {}
-            candidates = self._span_candidates(
-                path, s["lo"], s["hi"], stats=stats
+            candidates = self._candidate_files(
+                spec, path, (s["lo"], s["hi"]), probe_keys, stats
             )
-            if probe_keys is not None and candidates and os.path.isdir(
-                os.path.join(path, _bloom.BLOOM_DIR)
-            ):
-                try:
-                    candidates = self._bloom_prune_by_keys(
-                        spec, path, candidates, probe_keys, stats
-                    )
-                except Exception:
-                    pass  # cache only — locate over the span candidates
             affected: dict = {}
             n_del_only = 0
             if candidates:
@@ -1207,7 +1219,8 @@ class KeyedTableStore:
             # whether or not it existed — the sequential replay's count)
             n_deleted = n_del_only + s["n_both"]
             if not affected and not n_alive:
-                return n_deleted  # nothing to rewrite or append
+                # nothing to rewrite or append
+                return n_deleted, not feed_maintenance, None
             self._upsert_rewrite(
                 spec, qualified_name, puts_alive, None, affected, path,
                 schema, True,  # index maintenance handled below
@@ -1218,9 +1231,12 @@ class KeyedTableStore:
                 drop_keys=del_keys if s["n_del"] else None,
                 new_run_known_empty=not n_alive,
             )
-            return n_deleted
+            # a large feed (or async) takes the generic maintenance
+            # route of the commit tail — full rebuild, or the loud
+            # stale marker; a small synchronous one its own feed pass
+            return n_deleted, not feed_maintenance, None
 
-        n = self._retry_write_conflict(attempt)
+        n = self._commit(qualified_name, attempt, async_index)
         if feed_maintenance:
             self._maintain_indexes_incremental(
                 indexes,
@@ -1230,10 +1246,6 @@ class KeyedTableStore:
                 has_new_rows=bool(n_alive),
                 probe_keys=src_probe_keys if small else None,
             )
-        elif indexes:
-            # large feed (or async): the generic route — full rebuild,
-            # or the loud stale marker
-            self._maintain_indexes(qualified_name, async_index)
         return n
 
     @contextmanager
@@ -1673,7 +1685,11 @@ class KeyedTableStore:
             # layouts, foreign directories) on the one distributed scan
             # instead of O(files) serial driver-side footer opens
             try:
-                cands = self._bloom_point_candidates(spec, path, keys)
+                span = (min(keys), max(keys))
+            except TypeError:
+                span = (None, None)  # incomparable keys: no span bound
+            try:
+                cands = self._candidate_files(spec, path, span, keys)
             except Exception:
                 cands = None  # probe failure: fall back to the full scan
             if cands is not None:
@@ -1707,43 +1723,48 @@ class KeyedTableStore:
         except OSError:
             return False
 
-    def _bloom_point_candidates(
-        self, spec: TableSpec, path: str, keys: list
-    ) -> list[str]:
-        """Files of generation ``path`` that may hold any of ``keys``:
-        span pruning first (sorted layout), then the Bloom probe
-        (:meth:`_bloom_prune_by_keys`)."""
-        stats: dict = {}
-        try:
-            lo, hi = min(keys), max(keys)
-        except TypeError:
-            lo = hi = None
-        files = self._span_candidates(path, lo, hi, stats=stats)
-        return self._bloom_prune_by_keys(spec, path, files, keys, stats)
-
-    def _bloom_prune_by_keys(
+    def _candidate_files(
         self,
         spec: TableSpec,
         path: str,
-        files: list[str],
-        keys: list,
+        span: tuple | None,
+        keys=None,
         stats: dict | None = None,
     ) -> list[str]:
-        """Drop files whose Bloom sidecar proves NONE of ``keys`` is
-        present — each file probed with ONLY the keys inside its exact
-        span (fewer probes, and a key outside the span can't turn the
-        file into a false positive; an empty in-span set proves no
-        match outright).  Missing/malformed sidecars, incomparable key
-        types, and probe values Spark would COERCE to the key type
-        (``bloom.probe_type``) keep the file — over-inclusion is the
-        sound direction.  The shared probe behind point ``get()``,
-        point DELETE/UPDATE, and the small-batch MERGE locate."""
-        stats = stats or {}
+        """Stage 1 of every keyed DML (and of :meth:`get`): the files of
+        generation ``path`` that may hold a row the operation touches.
+        ``span`` is the provable ``(lo, hi)`` row-key interval (``None``
+        = unconstrained: the whole generation, nothing pruned); ``keys``
+        the exact probe points when the caller knows them (a degenerate
+        ``lo == hi`` span supplies its one point itself).
+
+        Three passes: :meth:`_span_candidates` drops files whose footer
+        range misses ``[lo, hi]``; then each file keeps only the keys
+        inside its exact span (an empty in-span set drops the file
+        outright, and an out-of-span key can't turn it into a false
+        positive); then, when the generation has ``_bloom`` sidecars,
+        the per-file row-key Bloom filter drops files that provably
+        hold none of those keys — a point mutation locates over ~1 file
+        however many appended runs span the key space.  Point sets over
+        ``_BLOOM_MERGE_PROBE_MAX`` keys skip the last two passes.  Sound
+        throughout: incomparable key types, missing or malformed
+        sidecars, and probe values Spark would COERCE to the key type
+        (``bloom.probe_type``) keep the file.  ``stats`` (optional)
+        collects the footer stats of every probed file for the caller's
+        rewrite."""
+        if span is None:
+            return self._data_files(path)
+        stats = {} if stats is None else stats
+        lo, hi = span
+        files = self._span_candidates(path, lo, hi, stats=stats)
+        if keys is None and lo is not None and lo == hi:
+            keys = [lo]
+        if not files or not keys or len(keys) > self._BLOOM_MERGE_PROBE_MAX:
+            return files
+        probe = os.path.isdir(os.path.join(path, _bloom.BLOOM_DIR))
         out = []
         for fname in files:
-            f_lo, f_hi, _rows, exact = stats.get(
-                fname, (None, None, None, False)
-            )
+            f_lo, f_hi, _rows, exact = stats[fname]
             in_span = keys
             if exact and f_lo is not None and f_hi is not None:
                 try:
@@ -1752,7 +1773,7 @@ class KeyedTableStore:
                     in_span = keys
                 if not in_span:
                     continue
-            if _bloom.file_survives_point_sets(
+            if not probe or _bloom.file_survives_point_sets(
                 path, fname, [in_span], spec.key_type
             ):
                 out.append(fname)
@@ -4002,7 +4023,6 @@ class KeyedTableStore:
         path: str,
         lo,
         hi,
-        files: list[str] | None = None,
         stats: dict | None = None,
     ) -> list[str]:
         """Data files whose row_key range MAY intersect ``[lo, hi]``
@@ -4011,20 +4031,19 @@ class KeyedTableStore:
         paying an exact driver-side key-column read just to decide
         candidacy (the locate scan reads candidates anyway, so
         over-inclusion costs one scanned file, while the exact read
-        here would cost the same file read twice).  The shared pruning
-        pass in front of every selective-DML locate (MERGE batch span,
-        DELETE/UPDATE :meth:`_rowkey_interval`).  A bound/stat TYPE
-        mismatch (e.g. a string condition bound against a numeric-keyed
-        table, or vice versa) never prunes — incomparable types make
-        the file a candidate, so pruning stays sound for every
-        ``key_type``.  ``stats`` (optional dict) collects each probed
-        file's ``(lo, hi, rows, exact)`` so callers can reuse the
-        footer reads instead of re-opening the same footers.  Stats
-        come from the generation's span manifest when it covers the
-        file (ONE small JSON read instead of O(files) footer opens —
-        the 100 TB fix); uncovered files read their footer live."""
-        if files is None:
-            files = self._data_files(path)
+        here would cost the same file read twice).  The first pass of
+        :meth:`_candidate_files`, in front of every keyed-DML locate.
+        A bound/stat TYPE mismatch (e.g. a string condition bound
+        against a numeric-keyed table, or vice versa) never prunes —
+        incomparable types make the file a candidate, so pruning stays
+        sound for every ``key_type``.  ``stats`` (optional dict)
+        collects each probed file's ``(lo, hi, rows, exact)`` so
+        callers can reuse the footer reads instead of re-opening the
+        same footers.  Stats come from the generation's span manifest
+        when it covers the file (ONE small JSON read instead of
+        O(files) footer opens — the 100 TB fix); uncovered files read
+        their footer live."""
+        files = self._data_files(path)
         cached = self._load_span_stats(path)
         span_refs = self._span_refs(path)
         out = []
@@ -4471,47 +4490,6 @@ class KeyedTableStore:
         )
         return list(params)
 
-    def _bloom_prune_point(
-        self,
-        spec: TableSpec,
-        path: str,
-        files: list[str],
-        points: set | None,
-        span: tuple | None = None,
-        stats: dict | None = None,
-    ) -> list[str]:
-        """When a DML condition pins the row key to a provable, bounded
-        POINT SET (``row_key = 'x'``, ``row_key IN (...)``, ORs of
-        those — :meth:`_rowkey_points`), Bloom sidecars prune
-        span-covering files that provably lack every point: a point
-        DELETE/UPDATE locates over ~1 file regardless of how many
-        appended runs span the key space, and a multi-point ``IN``
-        DELETE probes its exact keys instead of the [min, max] span
-        that covers everything between them.  Sound for the same
-        reasons as every other probe: any matching row's key is IN the
-        set, mistyped/coercible values are never probed, and absent
-        sidecars keep the file.  ``points`` is the caller's hoisted
-        :meth:`_rowkey_points` result (parsed once per DML, not per CAS
-        retry); when the condition isn't point-shaped but its provable
-        interval DEGENERATES to one value (``row_key >= 'x' AND
-        row_key <= 'x'``, ``BETWEEN 'x' AND 'x'``), that single point
-        still probes.  ``stats`` threads the caller's span-candidate
-        footer stats through so the probe's exact-span restriction
-        (and its stat-only empty-in-span drop) actually has spans to
-        restrict by."""
-        if points is None and span is not None:
-            lo, hi = span
-            if lo is not None and lo == hi:
-                points = {lo}
-        if not points or len(points) > self._BLOOM_MERGE_PROBE_MAX:
-            return files
-        try:
-            return self._bloom_prune_by_keys(
-                spec, path, files, list(points), stats
-            )
-        except Exception:
-            return files  # the sidecar is a cache — never fail a locate
-
     def _parse_condition(self, condition: str):
         """Spark-parsed expression tree of a DML condition (the same
         parser execution uses, so quoting/precedence match exactly), or
@@ -4902,7 +4880,7 @@ class KeyedTableStore:
             except Exception:
                 bloom_keys = None
 
-        def attempt() -> DataFrame | None:
+        def attempt() -> tuple:
             path = self.table_path(spec)
             # candidate pruning BEFORE the locate scan: only files whose
             # footer key range intersects the batch's [min, max] can
@@ -4913,25 +4891,15 @@ class KeyedTableStore:
             # read).  The footer stats collected here feed the span and
             # row-count consumers downstream, so each attempt opens
             # every footer ONCE.
-            all_files = self._data_files(path)
-            stats: dict = {}
-            candidates = self._span_candidates(
-                path, b["lo"], b["hi"], files=all_files, stats=stats
+            stats: dict = {}  # one record per data file of the generation
+            candidates = self._candidate_files(
+                spec, path, (b["lo"], b["hi"]), bloom_keys, stats
             )
-            if bloom_keys is not None and os.path.isdir(
-                os.path.join(path, _bloom.BLOOM_DIR)
-            ):
-                try:
-                    candidates = self._bloom_prune_by_keys(
-                        spec, path, candidates, bloom_keys, stats
-                    )
-                except Exception:
-                    pass  # cache only — locate over the span candidates
             affected: dict | list | None = None
             if (
                 candidates
-                and len(candidates) == len(all_files)
-                and len(all_files) <= self._n_regions(spec)
+                and len(candidates) == len(stats)
+                and len(stats) <= self._n_regions(spec)
             ):
                 # every file intersects the batch span and the table is
                 # no larger than its region fan-out (a toy or freshly-
@@ -4943,7 +4911,7 @@ class KeyedTableStore:
                 # A small batch still locates, keeping region-confined
                 # MERGE O(affected); at scale files exceed the region
                 # fan-out and this never triggers.
-                if b["n"] >= 64 * len(all_files):
+                if b["n"] >= 64 * len(stats):
                     affected = candidates
             if affected is None:
                 affected = self._locate_affected_files(
@@ -4951,20 +4919,13 @@ class KeyedTableStore:
                     lambda d: d.join(F.broadcast(keys), ROW_KEY, "left_semi"),
                     files=candidates,
                 )
-            return self._upsert_rewrite(
+            return None, True, self._upsert_rewrite(
                 spec, qualified_name, incoming, keys, affected, path,
                 schema, async_index, batch_span=(b["lo"], b["hi"]),
                 footer_stats=stats, n_incoming=b["n"],
             )
 
-        # index maintenance runs AFTER the retry wrapper: the main-table
-        # swap is committed at that point, and replaying the whole
-        # attempt because the INDEX hit a conflict would re-apply the
-        # merge on top of its own committed result
-        changed_keys = self._retry_write_conflict(attempt)
-        self._maintain_indexes(
-            qualified_name, async_index, changed_keys=changed_keys
-        )
+        self._commit(qualified_name, attempt, async_index)
 
     def _upsert_rewrite(
         self, spec, qualified_name, incoming, keys, affected, path,
@@ -5193,10 +5154,10 @@ class KeyedTableStore:
         def attempt():
             path = self.table_path(spec)
             stats: dict = {}
-            files = self._point_candidate_files(spec, path, key, stats)
+            files = self._candidate_files(spec, path, (key, key), None, stats)
             cur_row, present = self._point_row(spec, path, files, key)
             if not predicate(cur_row, present):
-                return False, None
+                return False, False, None
             if present:
                 affected = self._locate_affected_files(
                     spec,
@@ -5214,14 +5175,9 @@ class KeyedTableStore:
                 batch_span=(key, key),
                 footer_stats=stats, n_incoming=1,
             )
-            return True, changed
+            return True, True, changed
 
-        applied, changed_keys = self._retry_write_conflict(attempt)
-        if applied:
-            self._maintain_indexes(
-                qualified_name, async_index, changed_keys=changed_keys
-            )
-        return applied
+        return self._commit(qualified_name, attempt, async_index)
 
     def check_and_delete(
         self,
@@ -5248,10 +5204,7 @@ class KeyedTableStore:
 
         def attempt():
             path = self.table_path(spec)
-            stats: dict = {}
-            files = self._point_candidate_files(
-                spec, path, check_key, stats
-            )
+            files = self._candidate_files(spec, path, (check_key, check_key))
             cur_row, present = self._point_row(
                 spec, path, files, check_key
             )
@@ -5279,12 +5232,7 @@ class KeyedTableStore:
             )
             return True, True, changed
 
-        applied, mutated, changed_keys = self._retry_write_conflict(attempt)
-        if mutated:
-            self._maintain_indexes(
-                qualified_name, async_index, changed_keys=changed_keys
-            )
-        return applied
+        return self._commit(qualified_name, attempt, async_index)
 
     def increment(
         self,
@@ -5451,15 +5399,9 @@ class KeyedTableStore:
         def attempt():
             path = self.table_path(spec)
             stats: dict = {}
-            files = self._span_candidates(
-                path, min(keys), max(keys), stats=stats
+            files = self._candidate_files(
+                spec, path, (min(keys), max(keys)), keys, stats
             )
-            try:
-                files = self._bloom_prune_by_keys(
-                    spec, path, files, keys, stats
-                )
-            except Exception:
-                pass  # the sidecar is a cache
             current: dict = {}
             if files:
                 crefs = self._span_refs(path)
@@ -5579,12 +5521,7 @@ class KeyedTableStore:
             )
             return results, True, changed
 
-        results, mutated, changed_keys = self._retry_write_conflict(attempt)
-        if mutated:
-            self._maintain_indexes(
-                qualified_name, async_index, changed_keys=changed_keys
-            )
-        return results
+        return self._commit(qualified_name, attempt, async_index)
 
     def _require_column(self, spec: TableSpec, col: str) -> None:
         names = [f.name for f in spec.schema().fields]
@@ -5627,18 +5564,6 @@ class KeyedTableStore:
             [tuple(full.get(c) for c in names)], schema
         )
         return incoming, incoming.select(ROW_KEY)
-
-    def _point_candidate_files(
-        self, spec: TableSpec, path: str, key, stats: dict
-    ) -> list[str]:
-        """Span + Bloom candidate files for one key against one
-        resolved generation — the shared planning in front of both
-        conditional mutations' check reads and locates."""
-        files = self._span_candidates(path, key, key, stats=stats)
-        try:
-            return self._bloom_prune_by_keys(spec, path, files, [key], stats)
-        except Exception:
-            return files  # the sidecar is a cache
 
     def _point_row(
         self, spec: TableSpec, path: str, files: list[str], key
@@ -5844,6 +5769,90 @@ class KeyedTableStore:
             carried=carry_refs,
         )
 
+    def _commit(self, qualified_name: str, attempt, async_index: bool):
+        """Stage 3, the commit tail of every keyed DML entry point: run
+        ``attempt`` — one complete locate + rewrite + CAS flip that
+        resolves the table's current generation itself — under
+        :meth:`_retry_write_conflict`, then maintain the covered
+        indexes when it reports a mutation.  ``attempt`` returns
+        ``(result, mutated, changed_keys)``; ``changed_keys`` is the
+        pre-swap capture for incremental maintenance (``None`` = full
+        rebuild).  Index maintenance runs OUTSIDE the retry: the
+        main-table swap is committed at that point, and replaying the
+        attempt because the INDEX hit a conflict would re-apply the
+        mutation on top of its own committed result (a non-idempotent
+        ``c + 1`` UPDATE would double-apply; a DELETE would report 0
+        rows).  Returns ``result``."""
+        result, mutated, changed_keys = self._retry_write_conflict(attempt)
+        if mutated:
+            self._maintain_indexes(
+                qualified_name, async_index, changed_keys=changed_keys
+            )
+        return result
+
+    def _selective_commit(
+        self, spec: TableSpec, span, keys, selector, transform,
+        async_index: bool,
+    ) -> int:
+        """Stage 2, the selective commit behind :meth:`delete_where`,
+        :meth:`delete_keys`, :meth:`delete_cells` and
+        :meth:`update_where`: per attempt, resolve ONE generation, take
+        its :meth:`_candidate_files` for ``span``/``keys``, locate the
+        files holding ``selector`` rows, and rewrite only those through
+        ``transform`` while every other file carries over — candidate
+        pruning, locate, rewrite and CAS base all name the same
+        generation, so a concurrent commit fails the flip loudly and
+        the whole attempt re-runs.  A statement matching nothing is
+        free (no rewrite, no swap).  Committed through :meth:`_commit`;
+        returns the locate scan's matched-row count."""
+
+        def attempt() -> tuple:
+            path = self.table_path(spec)
+            files = self._candidate_files(spec, path, span, keys)
+            affected = self._locate_affected_files(
+                spec, selector, files=files
+            )
+            if not affected:
+                return 0, False, None
+            n = sum(affected.values())
+            changed_keys = self._capture_changed_keys(
+                spec, affected, selector, n, async_index, path=path
+            )
+            self._selective_rewrite(spec, affected, transform, path=path)
+            return n, True, changed_keys
+
+        return self._commit(spec.qualified_name, attempt, async_index)
+
+    def _pin_key_batch(self, batch: DataFrame, key: str, *aggs):
+        """The batch-pin step of :meth:`delete_keys` and
+        :meth:`delete_cells`: pin the batch once (eager
+        ``localCheckpoint`` — the MERGE-source discipline), run ONE
+        statistics job over it (key span, row count, NULL-key count,
+        plus the caller's extra ``aggs``) and, for a batch of at most
+        ``_BLOOM_MERGE_PROBE_MAX`` rows, one bounded collect of its
+        distinct keys as exact probe points.  Returns ``(pinned, stats
+        row, span, points)``; ``span`` is ``None`` when the batch is
+        empty or holds a NULL key (parquet stats cannot see NULL keys,
+        so such a batch locates over the whole generation)."""
+        pinned = batch.localCheckpoint(eager=True)
+        k = F.col(f"`{key}`")
+        b = pinned.agg(
+            F.min(k).alias("lo"),
+            F.max(k).alias("hi"),
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(k.isNull(), 1)).alias("n_null"),
+            *aggs,
+        ).first()
+        span = (
+            (b["lo"], b["hi"])
+            if not b["n_null"] and b["lo"] is not None
+            else None
+        )
+        points = None
+        if span is not None and b["n"] <= self._BLOOM_MERGE_PROBE_MAX:
+            points = [r[0] for r in pinned.select(k).distinct().collect()]
+        return pinned, b, span, points
+
     def delete_where(
         self, qualified_name: str, condition: str, async_index: bool = False
     ) -> int:
@@ -5854,64 +5863,28 @@ class KeyedTableStore:
         generation as a hardlink (the batch analogue of HBase Delete
         mutations; tombstones + compaction collapse into the one
         rewrite, and the rewrite I/O is O(affected files), not
-        O(table)).  A DELETE matching nothing is free: no rewrite, no
-        generation swap.  Returns the number of rows deleted (the
-        locating scan's exact per-file match counts).  Registered
-        covered indexes are rebuilt (or marked stale under
-        ``async_index=True``) — see :meth:`upsert`."""
+        O(table)).  A key-constrained condition locates only over the
+        files its provable row-key interval and point set admit
+        (:meth:`_rowkey_interval`, :meth:`_rowkey_points`); an
+        unconstrained one over the whole generation.  A DELETE
+        matching nothing is free: no rewrite, no generation swap.
+        Returns the number of rows deleted (the locating scan's exact
+        per-file match counts).  Registered covered indexes are rebuilt
+        (or marked stale under ``async_index=True``) — see
+        :meth:`upsert`."""
         spec = self.registry.get(qualified_name)
         # SQL DELETE law: only rows where the predicate is TRUE go; a
         # NULL predicate must KEEP the row (NOT(NULL) is NULL and would
         # silently drop it)
         hit = F.coalesce(F.expr(condition), F.lit(False))
-        span = self._rowkey_interval(condition)
-        points = self._rowkey_points(condition)
-
-        def attempt() -> tuple:
-            # ONE generation resolution per attempt: the candidate
-            # pruning, locate scan, rewrite, and CAS base all name the
-            # same generation (a concurrent commit then fails the flip
-            # loudly and this whole closure re-runs)
-            path = self.table_path(spec)
-            # key-constrained DELETE reads only the footers whose range
-            # intersects the condition's provable row_key interval (the
-            # A4 fast path for mutations); an unconstrained condition
-            # locates over the whole generation
-            if span is not None:
-                span_stats: dict = {}
-                files = self._span_candidates(
-                    path, span[0], span[1], stats=span_stats
-                )
-                files = self._bloom_prune_point(
-                    spec, path, files, points, span, span_stats
-                )
-            else:
-                files = self._data_files(path)
-            affected = self._locate_affected_files(
-                spec, lambda df: df.filter(hit), files=files
-            )
-            if not affected:
-                return 0, None
-            n = sum(affected.values())
-            changed_keys = self._capture_changed_keys(
-                spec, affected, lambda df: df.filter(hit), n, async_index,
-                path=path,
-            )
-            self._selective_rewrite(
-                spec, affected, lambda df: df.filter(~hit), path=path
-            )
-            return n, changed_keys
-
-        # index maintenance OUTSIDE the retry: replaying the attempt
-        # after an index-side conflict would re-run the delete against
-        # its own committed result (and report 0 rows for a delete that
-        # happened)
-        n, changed_keys = self._retry_write_conflict(attempt)
-        if n:
-            self._maintain_indexes(
-                qualified_name, async_index, changed_keys=changed_keys
-            )
-        return n
+        return self._selective_commit(
+            spec,
+            self._rowkey_interval(condition),
+            self._rowkey_points(condition),
+            lambda df: df.filter(hit),
+            lambda df: df.filter(~hit),
+            async_index,
+        )
 
     def delete_keys(
         self, qualified_name: str, keys: DataFrame, async_index: bool = False
@@ -5922,19 +5895,18 @@ class KeyedTableStore:
         ``row_key`` column (or exactly one column, taken as the key).
 
         Same selective-rewrite cost law as :meth:`delete_where`: the
-        batch is pinned once (eager ``localCheckpoint`` — the MERGE
-        source discipline) and ONE batch-statistics job yields its
-        span, so the locate prunes candidate files by footer key range
-        and Bloom sidecars (exact-point probes when the batch is small
-        enough to hoist, the :meth:`upsert` gating) before one
-        broadcast-semi locate scan; only files holding matched keys
-        rewrite (broadcast anti join), everything else hardlinks.  A
-        batch matching nothing is free.  NULL keys in the batch delete
-        NULL-keyed rows (null-safe joins; span pruning is skipped for
-        such batches — parquet stats cannot see NULL keys).  The batch
-        rides BROADCAST joins, so it must be batch-sized, not
-        corpus-sized — the same contract as the MERGE source.  Returns
-        the number of rows deleted."""
+        batch is pinned once and ONE batch-statistics job yields its
+        span (:meth:`_pin_key_batch`), so the locate prunes candidate
+        files by footer key range and Bloom sidecars (exact-point
+        probes when the batch is small enough to hoist, the
+        :meth:`upsert` gating) before one broadcast-semi locate scan;
+        only files holding matched keys rewrite (broadcast anti join),
+        everything else hardlinks.  A batch matching nothing is free.
+        NULL keys in the batch delete NULL-keyed rows (null-safe joins;
+        span pruning is skipped for such batches — parquet stats cannot
+        see NULL keys).  The batch rides BROADCAST joins, so it must be
+        batch-sized, not corpus-sized — the same contract as the MERGE
+        source.  Returns the number of rows deleted."""
         spec = self.registry.get(qualified_name)
         if ROW_KEY not in keys.columns:
             if len(keys.columns) != 1:
@@ -5944,23 +5916,21 @@ class KeyedTableStore:
                 )
             keys = keys.select(F.col(f"`{keys.columns[0]}`").alias(ROW_KEY))
         key_t = spec.schema()[ROW_KEY].dataType
-        kdf = keys.select(
-            # try_cast: an uncastable key must reach the loud refusal
-            # below as a detectable NULL, not explode as an ANSI cast
-            # error mid-job (and under non-ANSI sessions a plain cast
-            # would silently NULL — the exact trap the check refuses)
-            F.col(f"`{ROW_KEY}`").try_cast(key_t).alias("__dk"),
-            F.col(f"`{ROW_KEY}`").isNull().alias("__was_null"),
-        ).localCheckpoint(eager=True)
-        b = kdf.agg(
-            F.min("__dk").alias("lo"),
-            F.max("__dk").alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col("__dk").isNull(), 1)).alias("n_null"),
+        kdf, b, span, points = self._pin_key_batch(
+            keys.select(
+                # try_cast: an uncastable key must reach the loud
+                # refusal below as a detectable NULL, not explode as an
+                # ANSI cast error mid-job (and under non-ANSI sessions a
+                # plain cast would silently NULL — the exact trap the
+                # check refuses)
+                F.col(f"`{ROW_KEY}`").try_cast(key_t).alias("__dk"),
+                F.col(f"`{ROW_KEY}`").isNull().alias("__was_null"),
+            ),
+            "__dk",
             F.count(
                 F.when(F.col("__dk").isNull() & ~F.col("__was_null"), 1)
             ).alias("n_uncastable"),
-        ).first()
+        )
         if b["n_uncastable"]:
             # a key the cast NULLED would silently retarget the delete at
             # NULL-keyed rows — the stringly-typed trap again; refuse
@@ -5968,64 +5938,16 @@ class KeyedTableStore:
                 f"{qualified_name}: {b['n_uncastable']} delete key(s) are "
                 f"not castable to the key type {spec.key_type!r}"
             )
-        kdf = kdf.select("__dk")
         if not b["n"]:
             return 0
-        span = (
-            (b["lo"], b["hi"])
-            if not b["n_null"] and b["lo"] is not None
-            else None
+        kdf = F.broadcast(kdf.select("__dk"))
+        match = F.col(ROW_KEY).eqNullSafe(F.col("__dk"))
+        return self._selective_commit(
+            spec, span, points,
+            lambda df: df.join(kdf, match, "left_semi"),
+            lambda df: df.join(kdf, match, "left_anti"),
+            async_index,
         )
-        points = None
-        if span is not None and b["n"] <= self._BLOOM_MERGE_PROBE_MAX:
-            points = {
-                r[0] for r in kdf.distinct().collect() if r[0] is not None
-            }
-            if len(points) > self._BLOOM_MERGE_PROBE_MAX:
-                points = None
-
-        def semi(df: DataFrame) -> DataFrame:
-            return df.join(
-                F.broadcast(kdf),
-                F.col(ROW_KEY).eqNullSafe(F.col("__dk")),
-                "left_semi",
-            )
-
-        def anti(df: DataFrame) -> DataFrame:
-            return df.join(
-                F.broadcast(kdf),
-                F.col(ROW_KEY).eqNullSafe(F.col("__dk")),
-                "left_anti",
-            )
-
-        def attempt() -> tuple:
-            path = self.table_path(spec)
-            if span is not None:
-                span_stats: dict = {}
-                files = self._span_candidates(
-                    path, span[0], span[1], stats=span_stats
-                )
-                files = self._bloom_prune_point(
-                    spec, path, files, points, span, span_stats
-                )
-            else:
-                files = self._data_files(path)
-            affected = self._locate_affected_files(spec, semi, files=files)
-            if not affected:
-                return 0, None
-            n = sum(affected.values())
-            changed_keys = self._capture_changed_keys(
-                spec, affected, semi, n, async_index, path=path
-            )
-            self._selective_rewrite(spec, affected, anti, path=path)
-            return n, changed_keys
-
-        n, changed_keys = self._retry_write_conflict(attempt)
-        if n:
-            self._maintain_indexes(
-                qualified_name, async_index, changed_keys=changed_keys
-            )
-        return n
 
     def delete_cells(
         self, qualified_name: str, rows: DataFrame, async_index: bool = False
@@ -6071,38 +5993,14 @@ class KeyedTableStore:
                 f"{qualified_name}: delete_cells needs the table's exact "
                 f"schema; expected {want}, got {got}"
             )
-        aligned = rows.select(
-            *[F.col(f"`{n}`") for n in names]
-        ).localCheckpoint(eager=True)
-        b = aligned.agg(
-            F.min(F.col(f"`{ROW_KEY}`")).alias("lo"),
-            F.max(F.col(f"`{ROW_KEY}`")).alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-            F.count(
-                F.when(F.col(f"`{ROW_KEY}`").isNull(), 1)
-            ).alias("n_null"),
-        ).first()
+        aligned, b, span, points = self._pin_key_batch(
+            rows.select(*[F.col(f"`{n}`") for n in names]), ROW_KEY
+        )
         if not b["n"]:
             return 0
-        span = (
-            (b["lo"], b["hi"])
-            if not b["n_null"] and b["lo"] is not None
-            else None
-        )
-        points = None
-        if span is not None and b["n"] <= self._BLOOM_MERGE_PROBE_MAX:
-            points = {
-                r[0]
-                for r in aligned.select(F.col(f"`{ROW_KEY}`"))
-                .distinct()
-                .collect()
-                if r[0] is not None
-            }
-            if len(points) > self._BLOOM_MERGE_PROBE_MAX:
-                points = None
-        probe = aligned.select(
+        probe = F.broadcast(aligned.select(
             *[F.col(f"`{n}`").alias(f"__c{i}") for i, n in enumerate(names)]
-        )
+        ))
         cond = _reduce(
             lambda a, c: a & c,
             [
@@ -6110,41 +6008,12 @@ class KeyedTableStore:
                 for i, n in enumerate(names)
             ],
         )
-
-        def semi(df: DataFrame) -> DataFrame:
-            return df.join(F.broadcast(probe), cond, "left_semi")
-
-        def drop_cells(df: DataFrame) -> DataFrame:
-            return df.exceptAll(aligned)
-
-        def attempt() -> tuple:
-            path = self.table_path(spec)
-            if span is not None:
-                span_stats: dict = {}
-                files = self._span_candidates(
-                    path, span[0], span[1], stats=span_stats
-                )
-                files = self._bloom_prune_point(
-                    spec, path, files, points, span, span_stats
-                )
-            else:
-                files = self._data_files(path)
-            affected = self._locate_affected_files(spec, semi, files=files)
-            if not affected:
-                return 0, None
-            n = sum(affected.values())
-            changed_keys = self._capture_changed_keys(
-                spec, affected, semi, n, async_index, path=path
-            )
-            self._selective_rewrite(spec, affected, drop_cells, path=path)
-            return n, changed_keys
-
-        n, changed_keys = self._retry_write_conflict(attempt)
-        if n:
-            self._maintain_indexes(
-                qualified_name, async_index, changed_keys=changed_keys
-            )
-        return n
+        return self._selective_commit(
+            spec, span, points,
+            lambda df: df.join(probe, cond, "left_semi"),
+            lambda df: df.exceptAll(aligned),
+            async_index,
+        )
 
     def update_where(
         self,
@@ -6173,8 +6042,6 @@ class KeyedTableStore:
             if col not in cols:
                 raise ValueError(f"unknown column {col!r}")
         cond = F.coalesce(F.expr(condition), F.lit(False))
-        span = self._rowkey_interval(condition)
-        points = self._rowkey_points(condition)
 
         def apply_assignments(df: DataFrame) -> DataFrame:
             return df.select(
@@ -6188,44 +6055,14 @@ class KeyedTableStore:
                 ]
             )
 
-        def attempt() -> tuple:
-            # same one-generation-per-attempt + footer key-range pruning
-            # discipline as delete_where
-            path = self.table_path(spec)
-            if span is not None:
-                span_stats: dict = {}
-                files = self._span_candidates(
-                    path, span[0], span[1], stats=span_stats
-                )
-                files = self._bloom_prune_point(
-                    spec, path, files, points, span, span_stats
-                )
-            else:
-                files = self._data_files(path)
-            affected = self._locate_affected_files(
-                spec, lambda df: df.filter(cond), files=files
-            )
-            if not affected:
-                return 0, None
-            n = sum(affected.values())
-            changed_keys = self._capture_changed_keys(
-                spec, affected, lambda df: df.filter(cond), n, async_index,
-                path=path,
-            )
-            self._selective_rewrite(
-                spec, affected, apply_assignments, path=path
-            )
-            return n, changed_keys
-
-        # index maintenance OUTSIDE the retry (see delete_where): an
-        # index-side conflict must never replay a committed UPDATE —
-        # non-idempotent assignments (`c:val` + 1) would double-apply
-        n, changed_keys = self._retry_write_conflict(attempt)
-        if n:
-            self._maintain_indexes(
-                qualified_name, async_index, changed_keys=changed_keys
-            )
-        return n
+        return self._selective_commit(
+            spec,
+            self._rowkey_interval(condition),
+            self._rowkey_points(condition),
+            lambda df: df.filter(cond),
+            apply_assignments,
+            async_index,
+        )
 
     def _capture_changed_keys(
         self, spec: TableSpec, affected: dict, selector, n: int,

@@ -422,11 +422,42 @@ def test_unpack_rejects_absurd_hash_count(store):
     assert bloom.unpack(blob) is None
     # ... and a corrupted on-disk sidecar degrades to a full candidate
     _make_table(store, "t12", n=50)
-    path = store.table_path(store.registry.get("bl.t12"))
-    for bf in _sidecars(store, "bl.t12"):
-        with open(os.path.join(path, bloom.BLOOM_DIR, bf), "wb") as fh:
-            fh.write(blob)
+
+    def corrupt():
+        path = store.table_path(store.registry.get("bl.t12"))
+        for bf in _sidecars(store, "bl.t12"):
+            with open(os.path.join(path, bloom.BLOOM_DIR, bf), "wb") as fh:
+                fh.write(blob)
+
+    corrupt()
     assert store.get("bl.t12", ["k0011"]).collect()[0]["cf:v"] == 77
+    # every DML candidate probe reads the corrupted sidecars as absent:
+    # each statement still changes exactly its own row
+    want = {f"k{i:04d}": i * 7 for i in range(50)}
+
+    def table():
+        return {r["row_key"]: r["cf:v"] for r in store.read("bl.t12").collect()}
+
+    assert store.delete_where("bl.t12", "row_key = 'k0020'") == 1
+    del want["k0020"]
+    assert table() == want
+    corrupt()
+    store.upsert("bl.t12", store.spark.createDataFrame(
+        [("k0030", 1000)], "row_key string, `cf:v` int"
+    ))
+    want["k0030"] = 1000
+    assert table() == want
+    corrupt()
+    res = store.mutate("bl.t12", [
+        {"op": "increment", "key": "k0040", "col": "cf:v", "delta": 5},
+    ])
+    assert res == [{"applied": True, "value": 285}]
+    want["k0040"] = 285
+    assert table() == want
+    corrupt()
+    assert store.check_and_put("bl.t12", "k0045", "cf:v", 315, {"cf:v": 4545})
+    want["k0045"] = 4545
+    assert table() == want
 
 
 def test_uppercase_property_key_enables_blooms(store):
@@ -640,15 +671,7 @@ def test_point_prune_soundness_property(store):
             cond = f"({cond}) AND `cf:v` >= 0"
         span = store._rowkey_interval(cond)
         pts = store._rowkey_points(cond)
-        span_stats = {}
-        files = (
-            store._span_candidates(path, span[0], span[1], stats=span_stats)
-            if span is not None
-            else store._data_files(path)
-        )
-        cands = set(
-            store._bloom_prune_point(spec, path, files, pts, span, span_stats)
-        )
+        cands = set(store._candidate_files(spec, path, span, pts))
         must = {
             f
             for f, ks in keys_by_file.items()

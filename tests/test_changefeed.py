@@ -782,3 +782,38 @@ def test_dml_job_counts_stay_fused(store, spark):
     src = store.read("cdc.jobpin")
     dst = replica.read("cdc.jobpin")
     assert dst.exceptAll(src).unionAll(src.exceptAll(dst)).isEmpty()
+
+    # the remaining keyed DML entry points, each on one key (measured
+    # 4 / 4 / 4 / 11 / 5 / 6 / 7 jobs in both storage modes)
+    def one(label, fn, bound, want):
+        got = []
+        n = jobs(label, lambda: got.append(fn()))
+        assert got == [want], (label, got)
+        assert n <= bound, f"{label} grew to {n} jobs"
+
+    one("jp_delete_point",
+        lambda: store.delete_where("cdc.jobpin", "row_key = 'k020'"), 7, 1)
+    one("jp_delete_range", lambda: store.delete_where(
+        "cdc.jobpin", "row_key >= 'k030' AND row_key <= 'k034'"), 7, 5)
+    one("jp_update", lambda: store.update_where(
+        "cdc.jobpin", {"cf:v": "`cf:v` + 1"}, "row_key = 'k040'"), 7, 1)
+    one("jp_delete_cells", lambda: store.delete_cells(
+        "cdc.jobpin",
+        spark.createDataFrame([("k050", 50)], "row_key string, `cf:v` long"),
+    ), 14, 1)
+    one("jp_check_delete", lambda: store.check_and_delete(
+        "cdc.jobpin", "k060", "cf:v", 60), 8, True)
+    one("jp_check_put", lambda: store.check_and_put(
+        "cdc.jobpin", "k070", "cf:v", 70, {"cf:v": 7070}), 9, True)
+    one("jp_mutate", lambda: [r["applied"] for r in store.mutate(
+        "cdc.jobpin", [
+            {"op": "put", "key": "k080", "row": {"cf:v": 8080}},
+            {"op": "delete", "key": "k081"},
+            {"op": "increment", "key": "k082", "col": "cf:v", "delta": 2},
+        ])], 10, [True, True, True])
+    got = {r["row_key"]: r["cf:v"] for r in store.read("cdc.jobpin").collect()}
+    for k in ("k020", "k030", "k034", "k050", "k060", "k081"):
+        assert k not in got, k
+    assert (got["k040"], got["k070"], got["k080"], got["k082"]) == (
+        41, 7070, 8080, 84
+    )
