@@ -129,10 +129,11 @@ class CorruptSpanManifestError(RuntimeError):
     rather than fall back to the physical directory listing: that
     fallback would silently drop every reference-carried member and
     admit strays.  Distinct from the ``None`` return (no authority
-    information recorded — a legacy/flat directory — where the
-    physical listing IS the truth).  Remediation: restore the
-    manifest from the previous generation / a snapshot, or rebuild it
-    from footer stats via ``compact()`` on a known-good base."""
+    information recorded — a directory with no span document that
+    carries a listing — where the physical listing IS the truth).
+    Remediation: restore the manifest from the previous generation / a
+    snapshot, or rebuild it from footer stats via ``compact()`` on a
+    known-good base."""
 
 
 class ConcurrentWriteConflictError(RuntimeError):
@@ -252,9 +253,15 @@ class KeyedTableStore:
     # so no sweep can ever touch another table's files (the round-6
     # ``.{base}__*`` sibling prefix also matched a table named
     # ``{base}__x``).
+    #
+    # Every table starts at a generation: :meth:`create_table` (and so
+    # :meth:`ctas` and :meth:`clone_snapshot`) writes an empty
+    # generation and its manifest before registering the name.  A root
+    # without a manifest is not a table — it is refused with
+    # :class:`TableNotFoundError` and never modified; parquet written by
+    # hand comes in through ``ctas(spec, spark.read.parquet(dir))``.
 
     _GEN_MANIFEST = "_GENERATION"
-    _FLAT = "."  # manifest token: "previous generation" = flat root files
     _RESOLVE_AT_ENTRY = object()  # _swap_table_dir expected_base sentinel
 
     def table_root(self, spec: TableSpec) -> str:
@@ -264,14 +271,9 @@ class KeyedTableStore:
 
     def table_path(self, spec: TableSpec) -> str:
         """The CURRENT data directory: the generation named by the
-        manifest, or the root itself for a legacy flat-layout table
-        (one hand-built by writing parquet straight into the root —
-        supported read-path; its first rewrite migrates it)."""
+        manifest."""
         root = self.table_root(spec)
-        man = self._read_gen_manifest(root)
-        if man is None or man["current"] == self._FLAT:
-            return root
-        return os.path.join(root, man["current"])
+        return os.path.join(root, self._gen_manifest(root)["current"])
 
     def _read_gen_manifest(self, root: str) -> dict | None:
         try:
@@ -279,6 +281,19 @@ class KeyedTableStore:
                 return json.load(f)
         except FileNotFoundError:
             return None
+
+    def _gen_manifest(self, root: str) -> dict:
+        """The manifest of a registered table's root — raising when
+        there is none, so a directory that is not a generational table
+        is never read as one (nor swept)."""
+        man = self._read_gen_manifest(root)
+        if man is None:
+            raise TableNotFoundError(
+                f"{root}: no {self._GEN_MANIFEST} manifest, so this is not "
+                "a keyed table; import parquet written by hand with "
+                "ctas(spec, spark.read.parquet(dir))"
+            )
+        return man
 
     def _write_gen_manifest(
         self, root: str, current: str, previous: str | None
@@ -303,9 +318,8 @@ class KeyedTableStore:
         holds an flock) is never swept — that is what makes concurrent
         writers safe against each other's garbage collection; a marker
         whose owner died is garbage and goes with its directory.
-        Root-level flat data files are removed only once the manifest
-        exists AND the flat layout is not within its reader-grace
-        window (``keep`` contains the ``_FLAT`` token while it is).
+        Temp manifests (``._GENERATION.<hex>``) a crashed flip left are
+        removed; no other root-level file is touched.
 
         Deletion DECISIONS run under the per-table writer lock with the
         manifest RE-READ there: a generation a concurrent writer
@@ -336,8 +350,6 @@ class KeyedTableStore:
                 m = self._LEASE_MARKER_RE.fullmatch(e)
                 if m and self._flock_live(os.path.join(root, e)):
                     leased.add(m.group(1))
-            if "flat" in leased:
-                keep_now.add(self._FLAT)
             if self.manifest_authority:
                 # reference-aware GC: a kept/leased generation's
                 # manifest may carry members by REFERENCE into older
@@ -346,7 +358,7 @@ class KeyedTableStore:
                 # reclamation, the expire-snapshots model; refs are
                 # flattened at carry time so ONE hop covers the chain)
                 for g in list(keep_now | leased):
-                    if not g or g == self._FLAT or g == "flat":
+                    if not g:
                         continue
                     gp = os.path.join(root, g)
                     if os.path.isdir(gp):
@@ -428,16 +440,9 @@ class KeyedTableStore:
                             os.remove(full)
                         except OSError:
                             pass
-                elif (
-                    man is not None
-                    and self._FLAT not in keep_now
-                    and not entry.startswith(
-                        (".building-", ".append-", ".trash-", ".reading-")
-                    )
-                ):
-                    # flat-layout leftovers ≥ one full swap old (never a
-                    # protocol file — e.g. a marker mid-creation under
-                    # its tmp name)
+                elif entry.startswith(f".{self._GEN_MANIFEST}."):
+                    # a crashed flip's temp manifest (flips take this
+                    # same lock, so none is mid-write here)
                     try:
                         os.remove(full)
                     except OSError:
@@ -463,7 +468,7 @@ class KeyedTableStore:
     # (:meth:`_lease_marker_name`) and the sweep's parser — a drift
     # between them would silently disable lease protection
     _LEASE_MARKER_RE = re.compile(
-        r"\.reading-(gen-[0-9a-f]{12}|flat)\.[0-9a-f]{8}"
+        r"\.reading-(gen-[0-9a-f]{12})\.[0-9a-f]{8}"
     )
 
     @staticmethod
@@ -732,18 +737,11 @@ class KeyedTableStore:
         if which != "previous":
             raise ValueError(f"which must be 'current' or 'previous', got {which!r}")
         root = self.table_root(spec)
-        man = self._read_gen_manifest(root)
-        prev = man.get("previous") if man else None
+        prev = self._gen_manifest(root).get("previous")
         if prev is None:
             raise TableNotFoundError(
                 f"{qualified_name} has no previous generation "
                 "(no table rewrite since creation)"
-            )
-        if prev == self._FLAT:
-            # flat-layout previous: only the root-LEVEL files (the gen
-            # dirs alongside them are other generations, not data here)
-            return self.spark.read.schema(spec.schema()).parquet(
-                os.path.join(root, "*.parquet")
             )
         if self.manifest_authority:
             files = self._gen_file_paths(os.path.join(root, prev))
@@ -805,19 +803,16 @@ class KeyedTableStore:
         """
         spec = self.registry.get(qualified_name)
         root = self.table_root(spec)
-        man = self._read_gen_manifest(root)
-        cur = man.get("current") if man else None
-        cur_dir = (
-            root if cur in (None, self._FLAT) else os.path.join(root, cur)
-        )
+        man = self._gen_manifest(root)
+        cur_dir = os.path.join(root, man["current"])
         if versus == "previous":
-            prev = man.get("previous") if man else None
+            prev = man.get("previous")
             if prev is None:
                 raise TableNotFoundError(
                     f"{qualified_name} has no previous generation "
                     "(no table rewrite since creation)"
                 )
-            base_dir = root if prev == self._FLAT else os.path.join(root, prev)
+            base_dir = os.path.join(root, prev)
         else:
             base_dir = self._snapshot_dir(versus)
             if not os.path.isdir(base_dir):
@@ -1300,12 +1295,8 @@ class KeyedTableStore:
                             f"{qualified_name}: table dropped while "
                             "acquiring a scan lease"
                         )
-                    man = self._read_gen_manifest(root)
-                    cur = None if man is None else man["current"]
-                    if cur in (None, self._FLAT):
-                        token, path = "flat", root
-                    else:
-                        token, path = cur, os.path.join(root, cur)
+                    cur = self._gen_manifest(root)["current"]
+                    path = os.path.join(root, cur)
                     if not os.path.isdir(path):
                         # a manifest naming a missing directory cannot
                         # come from ordinary churn (sweep decisions take
@@ -1327,7 +1318,7 @@ class KeyedTableStore:
                         for f in self._data_files(path)
                     ]
                     stack.enter_context(self._marker_guard(
-                        os.path.join(root, self._lease_marker_name(token))
+                        os.path.join(root, self._lease_marker_name(cur))
                     ))
                 yield path, files
                 return
@@ -1345,26 +1336,14 @@ class KeyedTableStore:
         metadata reads, zero Spark jobs."""
         spec = self.registry.get(qualified_name)
         root = self.table_root(spec)
-        man = self._read_gen_manifest(root)
-        roles: dict[str, str] = {}
-        if man is None:
-            roles[self._FLAT] = "current"  # legacy flat layout
-        else:
-            roles[man["current"]] = "current"
-            if man.get("previous") is not None:
-                roles[man["previous"]] = "previous"
+        man = self._gen_manifest(root)
+        roles = {man["current"]: "current"}
+        if man.get("previous") is not None:
+            roles[man["previous"]] = "previous"
 
-        def entry_for(name: str, data_dir: str, flat: bool) -> dict:
+        def entry_for(name: str, data_dir: str) -> dict:
             try:
-                files = [
-                    f
-                    for f in os.listdir(data_dir)
-                    if f.endswith(".parquet")
-                    and (
-                        not flat
-                        or os.path.isfile(os.path.join(data_dir, f))
-                    )
-                ]
+                files = self._list_parquet(data_dir)
             except OSError:
                 # swept by a concurrent writer between the root listing
                 # and this walk — it no longer exists to report
@@ -1391,16 +1370,10 @@ class KeyedTableStore:
             }
 
         out = []
-        if self._FLAT in roles:
-            # root-level files are themselves a generation (legacy flat
-            # current, or the grace-retained flat previous)
-            e = entry_for(self._FLAT, root, flat=True)
-            if e is not None:
-                out.append(e)
         for entry in sorted(os.listdir(root)):
             full = os.path.join(root, entry)
             if os.path.isdir(full) and entry.startswith("gen-"):
-                e = entry_for(entry, full, flat=False)
+                e = entry_for(entry, full)
                 if e is not None:  # swept mid-walk: nothing to report
                     out.append(e)
         return out
@@ -1681,9 +1654,10 @@ class KeyedTableStore:
             # per-key span membership prunes even WITHOUT sidecars (a
             # file whose exact span contains no key can't match); the
             # Bloom probe then runs only where a sidecar exists.  The
-            # availability gate keeps manifest-less tables (legacy flat
-            # layouts, foreign directories) on the one distributed scan
-            # instead of O(files) serial driver-side footer opens
+            # availability gate keeps generations without span metadata
+            # (create_table's empty generation, a failed manifest write)
+            # on the one distributed scan instead of O(files) serial
+            # driver-side footer opens
             try:
                 span = (min(keys), max(keys))
             except TypeError:
@@ -2667,11 +2641,7 @@ class KeyedTableStore:
                 # additive (per-row projection of appended rows), so
                 # order is immaterial there.
                 main_gen = self._resolve_cur_prev(main_root)[0]
-                main_src = (
-                    main_root
-                    if main_gen in (None, self._FLAT)
-                    else os.path.join(main_root, main_gen)
-                )
+                main_src = os.path.join(main_root, main_gen)
                 # capture the generation's file LISTING too: a
                 # concurrent insert() appends files (and its own index
                 # projection) WITHOUT flipping the pointer, so a
@@ -3095,13 +3065,8 @@ class KeyedTableStore:
         def attempt() -> None:
             # CAS base + base-listing guard before the read — the same
             # concurrent-rewrite/append discipline as compact
-            root = self.table_root(spec)
-            base = self._resolve_cur_prev(root)[0]
-            src = (
-                root
-                if base in (None, self._FLAT)
-                else os.path.join(root, base)
-            )
+            src = self.table_path(spec)
+            base = os.path.basename(src)
             listing = self._data_files(src)
 
             def no_appends() -> None:
@@ -3473,16 +3438,9 @@ class KeyedTableStore:
                 shutil.rmtree(t, ignore_errors=True)
         self.refresh(spec.qualified_name)
 
-    def _resolve_cur_prev(self, root: str) -> tuple[str | None, str | None]:
-        """(current, previous) generation per the manifest — or the
-        legacy flat layout (root's own files are the current
-        generation, with the same one-swap reader grace)."""
-        man = self._read_gen_manifest(root)
-        if man is None:
-            cur = self._FLAT if any(
-                f.endswith(".parquet") for f in os.listdir(root)
-            ) else None
-            return cur, None
+    def _resolve_cur_prev(self, root: str) -> tuple[str, str | None]:
+        """(current, previous) generation per the manifest."""
+        man = self._gen_manifest(root)
         return man["current"], man.get("previous")
 
     @staticmethod
@@ -4083,8 +4041,7 @@ class KeyedTableStore:
     def _backfill_span_sidecar(self, path: str, stats: dict) -> None:
         """Best-effort persistence of live footer reads a span lookup
         paid for files the generation's manifest misses.  Only for
-        ``gen-*`` directories (flat legacy roots get their manifest via
-        :meth:`build_bloom_filters`, and foreign/snapshot dirs are not
+        ``gen-*`` directories (snapshot and foreign directories are not
         ours to annotate), under a short writer-lock timeout (sidecar
         creation is serialized against
         :meth:`_maybe_merge_span_sidecars`).  Lock contention is
@@ -4251,8 +4208,8 @@ class KeyedTableStore:
                     _bloom.sidecar_path(src, os.path.basename(full))
                 )
             ]
-            # a backfilled generation may predate span manifests
-            # entirely (legacy flat layout); without one, the `_bloom`
+            # a backfilled generation may have no span manifest (the
+            # swap writes it best-effort); without one, the `_bloom`
             # directory this build creates makes
             # _point_read_metadata_available answer True while every
             # point get still pays the O(files) serial footer walk in
@@ -4875,10 +4832,7 @@ class KeyedTableStore:
         # driver-side key list must stay bounded).
         bloom_keys = None
         if b["n"] <= self._BLOOM_MERGE_PROBE_MAX and self._bloom_enabled(spec):
-            try:
-                bloom_keys = [r[0] for r in keys.collect()]
-            except Exception:
-                bloom_keys = None
+            bloom_keys = [r[0] for r in keys.collect()]
 
         def attempt() -> tuple:
             path = self.table_path(spec)
@@ -5713,22 +5667,16 @@ class KeyedTableStore:
         makes the flip fail loudly instead of silently dropping that
         writer's files from the carry."""
         outs = [out] if isinstance(out, DataFrame) else list(out)
-        root = self.table_root(spec)
-        base = (
-            self._FLAT
-            if os.path.abspath(src_path) == os.path.abspath(root)
-            else os.path.basename(src_path.rstrip("/"))
-        )
+        base = os.path.basename(src_path.rstrip("/"))
         listing = self._data_files(src_path)
         carried = [f for f in listing if f not in rewritten]
         # manifests-as-listing: the carry becomes a manifest REFERENCE
         # to the file's ORIGINAL generation (chains flatten here, so a
         # ref never points at another ref) and link_or_copy is not
         # called at all — the hot O(files)-per-DML carry is the one
-        # that must not exist on hardlink-less backends.  A legacy
-        # FLAT source still links physically (one-time migration).
+        # that must not exist on hardlink-less backends
         carry_refs = None
-        if self.manifest_authority and base != self._FLAT:
+        if self.manifest_authority:
             src_refs = self._span_refs(src_path)
             carry_refs = {f: src_refs.get(f, base) for f in carried}
 
@@ -6125,13 +6073,8 @@ class KeyedTableStore:
             # listing check is what keeps its rows out of the void —
             # either way the flip fails loudly and this re-runs against
             # the winner's state
-            root = self.table_root(spec)
-            base = self._resolve_cur_prev(root)[0]
-            src = (
-                root
-                if base in (None, self._FLAT)
-                else os.path.join(root, base)
-            )
+            src = self.table_path(spec)
+            base = os.path.basename(src)
             listing = self._data_files(src)
             n = n_regions
             if target_region_bytes is not None:
@@ -6633,28 +6576,21 @@ class KeyedTableStore:
                 f"{saved['qualified_name']!r}, not {qualified_name!r}; "
                 "use clone_snapshot to materialize it elsewhere"
             )
-        spec = self.registry.get(qualified_name)
-        sdir = self._snapshot_dir(snapshot_name)
-
-        def build(staging: str) -> None:
-            os.makedirs(staging)
-            for fname in os.listdir(sdir):
-                if fname.endswith(".parquet"):
-                    self._link_or_copy(
-                        os.path.join(sdir, fname), os.path.join(staging, fname)
-                    )
-
-        self._swap_table_dir(spec, build, span_reuse_path=sdir)
+        self._swap_in_snapshot(
+            self.registry.get(qualified_name), snapshot_name
+        )
         self._maintain_indexes(qualified_name, async_index=False)
 
     def clone_snapshot(
         self, snapshot_name: str, new_qualified_name: str
     ) -> None:
         """Materialize a snapshot as a NEW table — HBase
-        ``clone_snapshot``: same zero-copy hardlink trick into a fresh
-        table directory, registered under the snapshot's declared
-        schema.  The clone shares data files with the snapshot until
-        either side rewrites (safe: files are immutable here)."""
+        ``clone_snapshot``: a fresh table under the snapshot's declared
+        schema, then the same staged zero-copy swap as
+        :meth:`restore_snapshot` (the empty generation ``create_table``
+        wrote becomes the clone's previous).  The clone shares data
+        files with the snapshot until either side rewrites (safe: files
+        are immutable here)."""
         saved = self._read_snapshot_spec(snapshot_name)
         ns, name = new_qualified_name.split(".", 1)
         spec = TableSpec(
@@ -6667,30 +6603,24 @@ class KeyedTableStore:
             properties=dict(saved.get("properties") or {}),
         )
         self.create_table(spec)
-        path = self.table_path(spec)
-        # drop the empty-footprint files; link in the snapshot's
-        for fname in os.listdir(path):
-            os.remove(os.path.join(path, fname))
+        self._swap_in_snapshot(spec, snapshot_name)
+
+    def _swap_in_snapshot(self, spec: TableSpec, snapshot_name: str) -> None:
+        """Hardlink the snapshot's files into a staged generation and
+        flip it live — the one build behind restore and clone.  The
+        span manifest and Bloom sidecars carry from the snapshot by
+        name (same files)."""
         sdir = self._snapshot_dir(snapshot_name)
-        for fname in os.listdir(sdir):
-            if fname.endswith(".parquet"):
-                self._link_or_copy(
-                    os.path.join(sdir, fname), os.path.join(path, fname)
-                )
-        # clone inherits the snapshot's span manifest (same files)
-        try:
-            self._write_span_manifest(
-                path, known=self._load_span_stats(sdir)
-            )
-        except Exception:
-            pass  # cache only — the clone stands without it
-        # ... and its Bloom sidecars (carry by name; build any the
-        # snapshot predates, since the clone enables the property)
-        try:
-            self._write_bloom_filters(spec, path, reuse_path=sdir)
-        except Exception:
-            pass  # cache only
-        self.refresh(new_qualified_name)
+
+        def build(staging: str) -> None:
+            os.makedirs(staging)
+            for fname in os.listdir(sdir):
+                if fname.endswith(".parquet"):
+                    self._link_or_copy(
+                        os.path.join(sdir, fname), os.path.join(staging, fname)
+                    )
+
+        self._swap_table_dir(spec, build, span_reuse_path=sdir)
 
     # -- session-catalog integration (A8) ---------------------------------
     def _view_name(self, spec: TableSpec) -> str:

@@ -552,6 +552,33 @@ def test_small_merge_locates_through_bloom(store, monkeypatch):
     assert store.read("bl.t15").count() == 110  # pure update, no new row
 
 
+def test_merge_probe_key_collect_failure_surfaces(store, monkeypatch):
+    """The MERGE probe-key collect reads a batch that is already
+    checkpointed, so a failure there is real: it propagates instead of
+    quietly widening the locate, and the table is left unchanged."""
+    _make_table(store, "t15f", n=50)
+    root = store.table_root(store.registry.get("bl.t15f"))
+    man = store._read_gen_manifest(root)
+    before = sorted(map(tuple, store.read("bl.t15f").collect()))
+    frame_cls = type(store.read("bl.t15f"))
+    orig = frame_cls.collect
+
+    def collect(self):
+        if self.columns == ["row_key"]:  # the probe-key collect
+            raise RuntimeError("injected probe-key collect failure")
+        return orig(self)
+
+    monkeypatch.setattr(frame_cls, "collect", collect)
+    batch = store.spark.createDataFrame(
+        [("k0001", 1), ("k9999", 2)], "row_key string, `cf:v` int"
+    )
+    with pytest.raises(RuntimeError, match="injected probe-key collect"):
+        store.upsert("bl.t15f", batch)
+    monkeypatch.undo()
+    assert store._read_gen_manifest(root) == man
+    assert sorted(map(tuple, store.read("bl.t15f").collect())) == before
+
+
 def test_distributed_build_path_matches_driver_path(store, monkeypatch):
     """Force the two-stage distributed builder (the >262k-row path) and
     pin that it produces working sidecars identical in behavior to the
@@ -680,40 +707,44 @@ def test_point_prune_soundness_property(store):
         assert must <= cands, (cond, sorted(must - cands))
 
 
-def test_flat_layout_table_backfills_and_prunes(store, spark):
-    """Legacy flat layout (parquet written straight into the table
-    root, no generation manifest): ALTER + backfill builds sidecars in
-    the root and point gets prune — the pre-generational on-ramp works
-    for the new attribute too."""
+def _bare_generation_table(store, spark, name, n):
+    """A table made with ``create_table`` + one insert whose current
+    generation then loses its span documents and Bloom sidecars — a
+    generation whose best-effort cache writes never landed (as
+    ``create_table``'s empty generation has no span manifest).
+    Returns the generation path."""
     spec = TableSpec(
         namespace="bl",
-        name="flat1",
+        name=name,
         key_type="string",
         families={"cf": {"v": "int"}},
     )
-    root = os.path.join(store.warehouse_dir, "bl", "flat1")
-    os.makedirs(root, exist_ok=True)
-    df = spark.range(80).select(
+    store.create_table(spec)
+    df = spark.range(n).select(
         F.format_string("k%04d", F.col("id").cast("int")).alias("row_key"),
         (F.col("id") * 3).cast("int").alias("cf:v"),
     )
-    df.repartitionByRange(4, "row_key").sortWithinPartitions(
-        "row_key"
-    ).write.mode("overwrite").parquet(root)
-    for f in os.listdir(root):
-        if not f.endswith(".parquet"):
-            os.remove(os.path.join(root, f))
-    store.registry.register(spec)
-    store.refresh("bl.flat1")
+    store.insert(f"bl.{name}", df, generate_row_key=False)
+    path = store.table_path(spec)
+    for f in os.listdir(path):
+        if f.startswith("_spans") and f.endswith(".json"):
+            os.remove(os.path.join(path, f))
+    shutil.rmtree(os.path.join(path, bloom.BLOOM_DIR), ignore_errors=True)
+    return path
 
-    store.alter_table_set_properties("bl.flat1", {"bloomfilter": "ROW"})
-    built = store.build_bloom_filters("bl.flat1")
+
+def test_backfill_on_bare_generation_prunes(store, spark):
+    """A generation with no span manifest and no sidecars: ALTER +
+    backfill builds sidecars in it and point gets prune."""
+    path = _bare_generation_table(store, spark, "bare1", 80)
+    store.alter_table_set_properties("bl.bare1", {"bloomfilter": "ROW"})
+    built = store.build_bloom_filters("bl.bare1")
     assert built > 0
-    assert os.path.isdir(os.path.join(root, bloom.BLOOM_DIR))
-    df = store.get("bl.flat1", ["k0011"])
-    assert 0 < len(df.inputFiles()) < len(store._data_files(root))
+    assert os.path.isdir(os.path.join(path, bloom.BLOOM_DIR))
+    df = store.get("bl.bare1", ["k0011"])
+    assert 0 < len(df.inputFiles()) < len(store._data_files(path))
     assert df.collect()[0]["cf:v"] == 33
-    assert store.get("bl.flat1", ["k0011z"]).collect() == []
+    assert store.get("bl.bare1", ["k0011z"]).collect() == []
 
 
 def test_degenerate_range_condition_still_point_prunes(store, monkeypatch):
@@ -826,37 +857,18 @@ def test_distributed_build_integral_key_with_nulls(store, monkeypatch):
 
 
 def test_backfill_writes_span_manifest_for_legacy_generation(store, spark):
-    """build_bloom_filters on a manifest-less generation (legacy flat
-    layout) must leave a span manifest behind: the `_bloom` directory
-    alone flips _point_read_metadata_available to True, and without
-    span stats every point get would pay the O(files) serial footer
-    walk that gate exists to prevent."""
-    spec = TableSpec(
-        namespace="bl",
-        name="flat2",
-        key_type="string",
-        families={"cf": {"v": "int"}},
-    )
-    root = os.path.join(store.warehouse_dir, "bl", "flat2")
-    os.makedirs(root, exist_ok=True)
-    df = spark.range(60).select(
-        F.format_string("k%04d", F.col("id").cast("int")).alias("row_key"),
-        (F.col("id") * 3).cast("int").alias("cf:v"),
-    )
-    df.repartitionByRange(3, "row_key").sortWithinPartitions(
-        "row_key"
-    ).write.mode("overwrite").parquet(root)
-    for f in os.listdir(root):
-        if not f.endswith(".parquet"):
-            os.remove(os.path.join(root, f))
-    store.registry.register(spec)
-    store.refresh("bl.flat2")
-    store.alter_table_set_properties("bl.flat2", {"bloomfilter": "ROW"})
+    """build_bloom_filters on a generation without a span manifest
+    must leave one behind: the `_bloom` directory alone flips
+    _point_read_metadata_available to True, and without span stats
+    every point get would pay the O(files) serial footer walk that
+    gate exists to prevent."""
+    path = _bare_generation_table(store, spark, "bare2", 60)
+    store.alter_table_set_properties("bl.bare2", {"bloomfilter": "ROW"})
 
-    assert store._load_span_stats(root) == {}
-    store.build_bloom_filters("bl.flat2")
-    stats = store._load_span_stats(root)
-    assert set(stats) == set(store._data_files(root))
+    assert store._load_span_stats(path) == {}
+    store.build_bloom_filters("bl.bare2")
+    stats = store._load_span_stats(path)
+    assert set(stats) == set(store._data_files(path))
     # with manifest + sidecars in place, the point get prunes and pays
     # NO live footer reads
     calls = []
@@ -868,7 +880,7 @@ def test_backfill_writes_span_manifest_for_legacy_generation(store, spark):
 
     KeyedTableStore._footer_key_stats = staticmethod(spy)
     try:
-        got = store.get("bl.flat2", ["k0011"]).collect()
+        got = store.get("bl.bare2", ["k0011"]).collect()
     finally:
         KeyedTableStore._footer_key_stats = staticmethod(orig)
     assert got[0]["cf:v"] == 33

@@ -1291,11 +1291,14 @@ def test_insert_overwrite_crash_leaves_old_state(spark, tmp_path):
     assert st.read("r6.t").count() == 1
 
 
-def test_flat_layout_table_migrates_on_first_rewrite(spark, tmp_path):
-    """A hand-built table (parquet written straight into the root, no
-    manifest) stays readable, and its first rewrite migrates it to the
-    generational layout — with the flat files kept one grace swap for
-    readers mid-plan, then swept."""
+def test_manifestless_root_is_refused_untouched(spark, tmp_path):
+    """A registered name whose root holds parquet written by hand but
+    no generation manifest is not a table: a read, a DML and the admin
+    listing each raise TableNotFoundError naming the missing manifest
+    and the ctas import route, and every file in the root stays
+    byte-identical.  The route the error names imports the same rows."""
+    from spark_sql_hbase_spark.sources.keyed_parquet import TableNotFoundError
+
     st = KeyedTableStore(spark, str(tmp_path / "wh"))
     spec = TableSpec(
         namespace="fl", name="t", key_type="string",
@@ -1306,16 +1309,34 @@ def test_flat_layout_table_migrates_on_first_rewrite(spark, tmp_path):
         [(f"{i:04d}", i) for i in range(8)], "row_key string, `c:v` long"
     ).write.parquet(root)
     st.registry.register(spec)
-    assert st.table_path(spec) == root  # flat resolution
-    assert st.read("fl.t").count() == 8
-    st.compact("fl.t", n_regions=1)  # first rewrite migrates
-    assert st.table_path(spec) != root
-    assert st.read("fl.t").count() == 8
-    # grace: flat files still on disk after the migrating swap
-    assert [f for f in os.listdir(root) if f.endswith(".parquet")]
-    st.compact("fl.t", n_regions=1)  # second swap sweeps them
-    assert not [f for f in os.listdir(root) if f.endswith(".parquet")]
-    assert st.read("fl.t").count() == 8
+
+    def tree() -> dict:
+        out = {}
+        for d, _dirs, files in os.walk(root):
+            for f in files:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+        return out
+
+    before = tree()
+    for call in (
+        lambda: st.read("fl.t"),
+        lambda: st.delete_where("fl.t", "row_key = '0001'"),
+        lambda: st.generations("fl.t"),
+    ):
+        with pytest.raises(TableNotFoundError, match=r"_GENERATION.*ctas"):
+            call()
+    assert tree() == before
+
+    imported = TableSpec(
+        namespace="fl", name="imported", key_type="string",
+        families={"c": {"v": "long"}},
+    )
+    st.ctas(imported, spark.read.parquet(root))
+    assert sorted(map(tuple, st.read("fl.imported").collect())) == [
+        (f"{i:04d}", i) for i in range(8)
+    ]
+    assert tree() == before
 
 
 def test_read_generation_time_travel(spark, tmp_path):
@@ -1620,6 +1641,8 @@ def test_swap_protocol_crash_at_every_step(spark, tmp_path, monkeypatch, crash_a
     man = st._read_gen_manifest(root)
     gens = {d for d in os.listdir(root) if d.startswith("gen-")}
     assert gens == {man["current"], man["previous"]} - {None}
+    # the crashed flip's temp manifest is swept with the rest
+    assert not os.path.exists(os.path.join(root, "._GENERATION.crashed"))
 
 
 def test_selective_dml_after_add_columns(spark, tmp_path):
@@ -1714,28 +1737,16 @@ def test_merge_null_row_key_raises(spark, tmp_path):
     assert st.read("nk.t").count() == 10
 
 
-def test_generations_flat_layout_and_corrupt_orphan(spark, tmp_path):
-    """generations() must report a legacy flat-layout table as its own
-    current generation, and must not die on an orphan holding a
-    truncated file (the crash artifact it exists to surface)."""
+def test_generations_reports_corrupt_orphan(spark, tmp_path):
+    """generations() must not die on an orphan holding a truncated
+    file (the crash artifact it exists to surface)."""
     st = KeyedTableStore(spark, str(tmp_path / "wh"))
     spec = TableSpec(
         namespace="gf", name="t", key_type="string",
         families={"c": {"v": "long"}},
     )
+    st.create_table(spec)
     root = st.table_root(spec)
-    spark.createDataFrame(
-        [(f"{i:04d}", i) for i in range(6)], "row_key string, `c:v` long"
-    ).write.parquet(root)
-    st.registry.register(spec)
-    gens = st.generations("gf.t")
-    assert [g["role"] for g in gens] == ["current"]
-    assert gens[0]["generation"] == "." and gens[0]["n_rows"] == 6
-    # first rewrite migrates: flat files become the grace "previous"
-    st.compact("gf.t", n_regions=1)
-    roles = {g["generation"]: g["role"] for g in st.generations("gf.t")}
-    assert roles["."] == "previous"
-    assert "current" in roles.values()
     # corrupt orphan: a truncated parquet in a crashed-build gen
     bad = os.path.join(root, "gen-00deadbeef00")
     os.makedirs(bad)
@@ -1744,6 +1755,7 @@ def test_generations_flat_layout_and_corrupt_orphan(spark, tmp_path):
     listing = {g["generation"]: g for g in st.generations("gf.t")}
     assert listing["gen-00deadbeef00"]["role"] == "orphan"
     assert listing["gen-00deadbeef00"]["n_rows"] is None
+    assert sorted(g["role"] for g in listing.values()) == ["current", "orphan"]
 
 
 def test_merge_locate_prunes_candidates_by_footer_range(spark, tmp_path, monkeypatch):
