@@ -135,6 +135,35 @@ def set_key(bitmap: bytearray, data: bytes, m: int, k: int) -> None:
         bitmap[pos >> 3] |= 1 << (pos & 7)
 
 
+def add_keys(bitmap: bytearray, values, m: int, k: int) -> None:
+    """Set every hashable value of ``values`` (raw row-key values; NULL
+    and unsupported ones skipped, as :func:`encode_key` says) into
+    ``bitmap`` in place — the bits :func:`set_key` sets, computed for
+    the whole batch at once.  Only the digest is per key; positions are
+    ``(h1 % m + i·(h2 % m)) % m`` in uint64, equal to ``(h1 + i·h2) % m``
+    and exact while ``m ≤ 2^27`` and ``k ≤ 16`` (:func:`params_for`)."""
+    import numpy as np
+
+    digests = b"".join(
+        hashlib.blake2b(d, digest_size=16).digest()
+        for d in map(encode_key, values)
+        if d is not None
+    )
+    if not digests:
+        return
+    h = np.frombuffer(digests, dtype="<u8").reshape(-1, 2)
+    mm = np.uint64(m)
+    h1 = h[:, 0] % mm
+    h2 = (h[:, 1] | np.uint64(1)) % mm
+    pos = (h1[:, None] + np.arange(k, dtype=np.uint64) * h2[:, None]) % mm
+    pos = pos.ravel()
+    np.bitwise_or.at(
+        np.frombuffer(bitmap, dtype=np.uint8),
+        pos >> np.uint64(3),
+        (np.uint8(1) << (pos & np.uint64(7)).astype(np.uint8)),
+    )
+
+
 def maybe_contains(bitmap: bytes, m: int, k: int, data: bytes) -> bool:
     for pos in positions(data, m, k):
         if not (bitmap[pos >> 3] >> (pos & 7)) & 1:

@@ -35,6 +35,7 @@ import time
 import uuid
 from contextlib import contextmanager
 from functools import lru_cache
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -109,6 +110,55 @@ _INTEGRAL_INDEX_TYPES = {
 _SPAN_MANIFEST = "_spans.json"
 
 
+class _BatchPin(NamedTuple):
+    """A keyed-DML batch materialized once (:meth:`KeyedTableStore._pin_batch`):
+    ``frame`` is the one materialization every later use reads, ``table``
+    its rows as a driver-side Arrow table (``None`` over the cap), and
+    ``keys`` the distinct non-NULL keys when the rows are on the driver.
+    ``n`` / ``n_null`` / ``lo`` / ``hi`` / ``counts`` are ``None`` / empty
+    when the caller asked for no statistics."""
+
+    frame: DataFrame
+    table: object
+    n: int | None
+    n_null: int | None
+    lo: object
+    hi: object
+    keys: list | None
+    counts: dict
+
+    @property
+    def span(self) -> tuple | None:
+        """``(lo, hi)``, or ``None`` (unprunable) for an empty batch or
+        one holding a NULL key — parquet stats cannot see NULL keys."""
+        if self.n_null or self.lo is None:
+            return None
+        return self.lo, self.hi
+
+
+def _arrow_pinnable(schema) -> bool:
+    """Whether every column is a flat type that round-trips exactly
+    through Arrow — the only schema condition on a driver-resident pin."""
+    from pyspark.sql import types as T
+
+    flat = (
+        T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+        T.FloatType, T.DoubleType, T.DecimalType, T.StringType,
+        T.BinaryType, T.DateType, T.TimestampType, T.TimestampNTZType,
+    )
+    return all(type(f.dataType) in flat for f in schema.fields)
+
+
+def _py_span(keys) -> tuple:
+    """``(min, max)`` of driver-side keys, in Spark's ordering (UTF-8
+    preserves code-point order; bytes compare unsigned), or ``(None,
+    None)`` when there are none or they are floats (Spark orders NaN
+    last, Python nowhere)."""
+    if not keys or any(isinstance(k, float) for k in keys):
+        return None, None
+    return min(keys), max(keys)
+
+
 class _SpanUnencodable(Exception):
     """Key-stat value with no JSON span encoding — the file's manifest
     entry is omitted and readers fall back to a live footer read."""
@@ -171,8 +221,18 @@ class KeyedTableStore:
     writer's garbage sweep by per-generation liveness markers.
 
     Keyed DML pipeline: every keyed DML entry point is assembled from
-    three shared stages.
+    shared stages.
 
+    0. Batch pin (:meth:`_pin_batch`): a DataFrame batch — the
+       :meth:`upsert` source, the :meth:`delete_keys` /
+       :meth:`delete_cells` batch, the :meth:`apply_changes` feed, the
+       changed keys an index needs — is evaluated once by one bounded
+       ``limit(_BLOOM_MERGE_PROBE_MAX + 1).toArrow()``.  Under the cap
+       it stays on the driver and re-enters Spark as an Arrow-built
+       local relation: its statistics, span and exact probe keys (for
+       stage 1 and the index src-key probe) cost no further job.  Over
+       the cap it is pinned by ``localCheckpoint`` plus one statistics
+       aggregate.  :meth:`mutate` builds its frames from Arrow directly.
     1. Candidates (:meth:`_candidate_files`): footer span pruning, then
        per-key exact-span pruning, then the row-key Bloom probe — the
        files an operation may touch.  Every entry point below and
@@ -255,8 +315,8 @@ class KeyedTableStore:
     # ``{base}__x``).
     #
     # Every table starts at a generation: :meth:`create_table` (and so
-    # :meth:`ctas` and :meth:`clone_snapshot`) writes an empty
-    # generation and its manifest before registering the name.  A root
+    # :meth:`ctas`) writes an empty generation, :meth:`clone_snapshot`
+    # the snapshot's, and its manifest before registering the name.  A root
     # without a manifest is not a table — it is refused with
     # :class:`TableNotFoundError` and never modified; parquet written by
     # hand comes in through ``ctas(spec, spark.read.parquet(dir))``.
@@ -592,18 +652,26 @@ class KeyedTableStore:
     def create_table(self, spec: TableSpec, ignore_if_exists: bool = False) -> None:
         """Create an empty keyed table (reference:
         ``HBaseClientImpl.createTable``, ``client/HBaseClientImpl.scala:303-365``)."""
+        if ignore_if_exists and self.registry.exists(spec.qualified_name):
+            return
+        # materialize an empty parquet footprint (generation 0) so reads
+        # of a fresh table return an empty, correctly-typed DataFrame
+        self._create_table(
+            spec,
+            lambda gen: self.spark.createDataFrame([], spec.schema())
+            .write.mode("overwrite").parquet(gen),
+        )
+
+    def _create_table(self, spec: TableSpec, build_first) -> None:
+        """Register a new table whose first generation
+        ``build_first(gen_path)`` writes."""
         if self.registry.exists(spec.qualified_name):
-            if ignore_if_exists:
-                return
             raise TableAlreadyExistsError(spec.qualified_name)
         self.create_namespace(spec.namespace)
         root = self.table_root(spec)
         os.makedirs(root, exist_ok=True)
-        # materialize an empty parquet footprint (generation 0) so reads
-        # of a fresh table return an empty, correctly-typed DataFrame
         gen = f"gen-{uuid.uuid4().hex[:12]}"
-        empty = self.spark.createDataFrame([], spec.schema())
-        empty.write.mode("overwrite").parquet(os.path.join(root, gen))
+        build_first(os.path.join(root, gen))
         self._write_gen_manifest(root, gen, None)
         self.registry.register(spec)
         self._register_view(spec)
@@ -929,10 +997,10 @@ class KeyedTableStore:
         feed by construction contains no ``update`` rows; one arriving
         is a granularity mix-up and refuses loudly.
 
-        The feed is pinned once (eager ``localCheckpoint``) before any
-        write: replaying a table's OWN changefeed — or any lazily-read
-        state of the target — must not re-evaluate against the
-        generations the replay itself creates.  One diff's inserted /
+        The feed is pinned once (:meth:`_pin_batch`) before any write:
+        replaying a table's OWN changefeed — or any lazily-read state
+        of the target — must not re-evaluate against the generations
+        the replay itself creates.  One diff's inserted /
         updated / deleted row sets are mutually disjoint (exceptAll
         construction), so the commits compose order-independently.
         Cost follows the selective paths: O(changed files) per commit,
@@ -949,101 +1017,61 @@ class KeyedTableStore:
             )
         schema = spec.schema()
         cols = [f"`{f.name}`" for f in schema.fields]
-        feed = changes.localCheckpoint(eager=True)
-        # ONE feed-statistics job replaces the five separate probe jobs
-        # this method used to pay (tag distinct, two isEmpty takes, a
-        # count, and delete_keys' span agg): a per-key rollup of the
-        # change tags feeds a one-row global aggregate carrying every
-        # driver-side decision — tag validation, per-tag emptiness, the
-        # put/delete key-set overlap, NULL-key laws, the key span for
-        # candidate pruning, and the feed row count for the incremental
-        # index threshold.
+        # the feed is pinned once (:meth:`_pin_batch`), and that one
+        # pass carries every driver-side decision below: tag
+        # validation, per-tag emptiness, the NULL-key laws and the feed
+        # row count are per-row flag counts, the key span comes with
+        # the pin, and the put/delete key-set overlap is read off the
+        # driver-resident rows — or, for a feed over the cap, one
+        # aggregate over a per-key rollup of the change tags
         ch = F.col("change")
         rk = F.col(f"`{ROW_KEY}`")
-        tagged = feed.groupBy(rk.alias("__ck")).agg(
-            F.max(ch.isin("insert", "update")).alias("__put"),
-            F.max(ch == "delete").alias("__del"),
-            F.max(
-                ch.isNull() | ~ch.isin("insert", "update", "delete")
-            ).alias("__unk"),
-            F.sum(F.when(ch == "insert", 1).otherwise(0)).alias("__n_ins"),
-            F.sum(F.when(ch == "update", 1).otherwise(0)).alias("__n_upd"),
-            F.sum(F.when(ch == "delete", 1).otherwise(0)).alias("__n_del"),
+        put_row = ch.isin("insert", "update")
+        pin = self._pin_batch(
+            changes.select(
+                "*",
+                (ch == "insert").alias("__ins"),
+                (ch == "update").alias("__upd"),
+                (ch == "delete").alias("__del"),
+                (ch.isNull() | ~ch.isin("insert", "update", "delete"))
+                .alias("__unk"),
+                (rk.isNull() & put_row).alias("__put_null"),
+                (rk.isNull() & (ch == "delete")).alias("__del_null"),
+            ),
+            ROW_KEY,
+            flags=("__ins", "__upd", "__del", "__unk", "__put_null", "__del_null"),
         )
-        # One BOUNDED collect of the per-key rollup serves the stats AND
-        # (for small feeds) the Bloom probe keys in the same job: at
-        # most _BLOOM_MERGE_PROBE_MAX + 1 rows come back, and if the
-        # limit was not hit the driver holds every per-key row, so all
-        # sixteen statistics are computed exactly in Python (replicating
-        # the aggregate's null laws: count(when(c,1)) counts TRUE only,
-        # min/max skip NULLs; Python's str/int/bytes ordering equals
-        # Spark's UTF8-binary/numeric ordering).  A feed larger than the
-        # probe cap (which would skip probe pruning anyway) falls back
-        # to the one-row global aggregate exactly as before — its only
-        # extra cost is the bounded collect over the already-pinned
-        # feed.  Gate-scale effect: 2 feed jobs -> 1.
-        krows = tagged.select(
-            "__ck", "__put", "__del", "__unk",
-            "__n_ins", "__n_upd", "__n_del",
-            F.col("__ck").cast("string").alias("__cs"),
-        ).limit(self._BLOOM_MERGE_PROBE_MAX + 1).collect()
-        if len(krows) <= self._BLOOM_MERGE_PROBE_MAX:
-            ck = [r["__ck"] for r in krows]
-            put = [bool(r["__put"]) for r in krows]
-            dl = [bool(r["__del"]) for r in krows]
-            put_ck = [k for k, p in zip(ck, put) if p and k is not None]
-            nonnull = [k for k in ck if k is not None]
-            n_ins = sum(r["__n_ins"] for r in krows)
-            n_upd = sum(r["__n_upd"] for r in krows)
-            n_delr = sum(r["__n_del"] for r in krows)
-            s = {
-                "n_keys": len(krows),
-                "n_put": sum(put),
-                "n_del": sum(dl),
-                "n_both": sum(1 for p, d in zip(put, dl) if p and d),
-                "n_unk": sum(1 for r in krows if r["__unk"]),
-                "n_rows": n_ins + n_upd + n_delr,
-                "n_ins_rows": n_ins,
-                "n_upd_rows": n_upd,
-                "n_del_rows": n_delr,
-                "lo": min(nonnull, default=None),
-                "hi": max(nonnull, default=None),
-                "put_lo": min(put_ck, default=None),
-                "put_hi": max(put_ck, default=None),
-                "n_del_null": sum(
-                    1 for k, d in zip(ck, dl) if k is None and d
-                ),
-                "n_put_null": sum(
-                    1 for k, p in zip(ck, put) if k is None and p
-                ),
-            }
+        feed = pin.frame
+        s = {f[2:]: n for f, n in pin.counts.items()}
+        tagged = feed.groupBy(rk.alias("__ck")).agg(
+            F.max(put_row).alias("__put"), F.max(ch == "delete").alias("__del")
+        )
+        if pin.table is not None:
+            put, dele = set(), set()
+            for k, t in zip(
+                pin.table.column(ROW_KEY).to_pylist(),
+                pin.table.column("change").to_pylist(),
+            ):
+                if t in ("insert", "update"):
+                    put.add(k)
+                elif t == "delete":
+                    dele.add(k)
+            alive = [k for k in put - dele if k is not None]
+            s.update(n_put=len(put), n_both=len(put & dele))
+            s["put_lo"], s["put_hi"] = _py_span(alive)
         else:
-            krows = None  # over the probe cap: no probe pruning either
-            s = tagged.agg(
-                F.count(F.lit(1)).alias("n_keys"),
+            s.update(tagged.agg(
                 F.count(F.when(F.col("__put"), 1)).alias("n_put"),
-                F.count(F.when(F.col("__del"), 1)).alias("n_del"),
                 F.count(F.when(F.col("__put") & F.col("__del"), 1)).alias(
                     "n_both"
                 ),
-                F.count(F.when(F.col("__unk"), 1)).alias("n_unk"),
-                F.sum(F.col("__n_ins") + F.col("__n_upd") + F.col("__n_del"))
-                .alias("n_rows"),
-                F.sum("__n_ins").alias("n_ins_rows"),
-                F.sum("__n_upd").alias("n_upd_rows"),
-                F.sum("__n_del").alias("n_del_rows"),
-                F.min("__ck").alias("lo"),
-                F.max("__ck").alias("hi"),
                 F.min(F.when(F.col("__put"), F.col("__ck"))).alias("put_lo"),
                 F.max(F.when(F.col("__put"), F.col("__ck"))).alias("put_hi"),
-                F.count(
-                    F.when(F.col("__ck").isNull() & F.col("__del"), 1)
-                ).alias("n_del_null"),
-                F.count(
-                    F.when(F.col("__ck").isNull() & F.col("__put"), 1)
-                ).alias("n_put_null"),
-            ).first()
-        if s["n_unk"]:
+            ).first().asDict())
+            if s["n_both"]:
+                # the put span must bound the surviving puts exactly
+                s["put_lo"] = s["put_hi"] = None
+        if s["unk"]:
             # a row with a mistyped/NULL change tag would otherwise be
             # dropped SILENTLY — a replica that quietly misses changes
             # is the worst failure mode a replication sink can have
@@ -1064,20 +1092,20 @@ class KeyedTableStore:
         # unknown-tag check above): a refused feed must apply NOTHING —
         # appending its inserts first and raising after would leave the
         # replica partially mutated by a feed we claim to refuse loudly
-        if cells and s["n_upd_rows"]:
+        if cells and s["upd"]:
             raise ValueError(
                 f"{qualified_name}: a cell-granularity feed cannot "
                 "contain 'update' rows — this feed was read with "
                 "cells=False; replay it with apply_changes(cells=False)"
             )
         if cells:
-            if s["n_ins_rows"]:
+            if s["ins"]:
                 # new version CELLS: pure append (nothing replaced)
                 self.insert(
                     qualified_name, ins, generate_row_key=False,
                     async_index=async_index,
                 )
-            if not s["n_del_rows"]:
+            if not s["del"]:
                 return 0
             return self.delete_cells(
                 qualified_name, dels.select(*cols), async_index=async_index
@@ -1097,7 +1125,7 @@ class KeyedTableStore:
         # feed's keys ARE the replicated keys) — and, as ONE atomic
         # swap, a replica can no longer be observed between the put
         # and delete halves of a replay.
-        if s["n_put_null"]:
+        if s["put_null"]:
             # HBase parity (the upsert law): a Put without a row key is
             # invalid — and a NULL put key would silently fall through
             # both sides of the rewrite's key-span split
@@ -1110,7 +1138,7 @@ class KeyedTableStore:
             F.col("change").isin("insert", "update")
         ).select(*cols)
         del_keys = dels.select(rk)
-        if s["n_del_null"]:
+        if s["del_null"]:
             # NULL delete keys carry delete_where's NULL-key law
             # (null-safe match) which the span/locate fast path below
             # cannot see — replay sequentially through the generic
@@ -1120,7 +1148,7 @@ class KeyedTableStore:
             return self.delete_keys(
                 qualified_name, del_keys, async_index=async_index
             )
-        if not s["n_keys"]:
+        if not pin.n:
             return 0  # empty feed: a true no-op, no stale window
         indexes = self.registered_indexes(qualified_name)
         feed_maintenance = bool(indexes) and not async_index
@@ -1134,12 +1162,11 @@ class KeyedTableStore:
             # rewriting most of the table falls back to the generic
             # full-rebuild route.
             try:
-                table_rows = self._footer_row_count(
-                    self.table_path(self.registry.get(qualified_name))
-                )
-            except Exception:
-                table_rows = 0
-            feed_maintenance = 0 < s["n_rows"] * 4 < table_rows
+                table_rows = self._footer_row_count(self.table_path(spec))
+            except OSError:
+                table_rows = 0  # footer unreadable: the full rebuild
+            n_rows = s["ins"] + s["upd"] + s["del"]
+            feed_maintenance = 0 < n_rows * 4 < table_rows
         # One diff's put/delete key sets are disjoint by exceptAll
         # construction (n_both == 0) and the puts ride the checkpointed
         # feed through a plain filter — no pin needed.  An ARBITRARY
@@ -1152,28 +1179,12 @@ class KeyedTableStore:
             ).localCheckpoint(eager=True)
         else:
             puts_alive = puts
-        # small-feed Bloom probe values — served by the SAME bounded
-        # collect that computed the feed statistics above (native-typed
-        # keys for the main-table row-key pruning, string-rendered for
-        # every index's src-key pruning — the index write path's cast),
-        # so neither a second collect nor the per-index
-        # _collect_probe_keys job ever runs on this path
-        probe_keys = src_probe_keys = None
-        small = krows is not None
-        need_main = small and self._bloom_enabled(spec)
-        need_src = small and feed_maintenance
-        if need_main:
-            probe_keys = [r["__ck"] for r in krows]
-        if need_src:
-            src_probe_keys = [
-                r["__cs"] for r in krows if r["__cs"] is not None
-            ]
 
         def attempt() -> tuple:
             path = self.table_path(spec)
             stats: dict = {}
             candidates = self._candidate_files(
-                spec, path, (s["lo"], s["hi"]), probe_keys, stats
+                spec, path, (pin.lo, pin.hi), pin.keys, stats
             )
             affected: dict = {}
             n_del_only = 0
@@ -1223,7 +1234,7 @@ class KeyedTableStore:
                     (s["put_lo"], s["put_hi"]) if n_alive else None
                 ),
                 footer_stats=stats, n_incoming=n_alive,
-                drop_keys=del_keys if s["n_del"] else None,
+                drop_keys=del_keys if s["del"] else None,
                 new_run_known_empty=not n_alive,
             )
             # a large feed (or async) takes the generic maintenance
@@ -1237,9 +1248,9 @@ class KeyedTableStore:
                 indexes,
                 None,
                 feed.select(rk),
+                pin.keys,
                 changed_rows=puts_alive,
                 has_new_rows=bool(n_alive),
-                probe_keys=src_probe_keys if small else None,
             )
         return n
 
@@ -2576,7 +2587,7 @@ class KeyedTableStore:
         self,
         qualified_name: str,
         async_index: bool,
-        changed_keys: DataFrame | None = None,
+        changed_keys: tuple | None = None,
     ) -> None:
         """Post-DML covered-index maintenance (reference analogue: the
         insert path refreshing dependent metadata after write,
@@ -2584,8 +2595,9 @@ class KeyedTableStore:
         index maintenance).
 
         When the caller passes the source keys the DML touched
-        (``changed_keys`` — callers apply the pre-swap smallness
-        threshold, ``n·4 < table_rows``, before capturing them),
+        (``changed_keys``: the pinned keys frame and, for a
+        driver-resident pin, its key list — callers apply the pre-swap
+        smallness threshold, ``n·4 < table_rows``, before capturing),
         maintenance is INCREMENTAL: per index, selectively delete the
         entries whose ``i:src_key`` is a changed key (the
         selective-rewrite machinery on the INDEX table), then append
@@ -2618,7 +2630,7 @@ class KeyedTableStore:
             return
         if changed_keys is not None:
             self._maintain_indexes_incremental(
-                indexes, self.read(qualified_name), changed_keys
+                indexes, self.read(qualified_name), *changed_keys
             )
             return
         main_spec = self.registry.get(qualified_name)
@@ -2683,9 +2695,9 @@ class KeyedTableStore:
         indexes: dict,
         main: DataFrame | None,
         changed_keys: DataFrame,
+        probe_keys: list | None,
         changed_rows: DataFrame | None = None,
         has_new_rows: bool | None = None,
-        probe_keys: list | None | str = "__compute__",
     ) -> None:
         """Delta index maintenance: drop entries for the changed source
         keys, append projections of those keys' current rows.  Exactly
@@ -2693,6 +2705,8 @@ class KeyedTableStore:
         keep their (already correct) entries, and the (value, src_key)
         composite index key makes delete-then-append collision-free.
 
+        ``probe_keys`` are the changed keys as the batch pin holds them
+        on the driver (``None`` = unknown: no src-key Bloom pruning).
         A caller that already HOLDS the changed keys' post-DML rows
         (:meth:`apply_changes` — a key-granularity feed's insert/update
         rows ARE the keys' full new state) passes them as
@@ -2710,13 +2724,16 @@ class KeyedTableStore:
             ).localCheckpoint(eager=True)
         if has_new_rows is None:
             has_new_rows = bool(changed_rows.take(1))
-        # src-key Bloom probe values, collected ONCE for all indexes
-        # (bounded: at most _BLOOM_MERGE_PROBE_MAX keys, else None and
-        # the locate scans unpruned).  A caller that already holds the
-        # bounded key list (apply_changes' one feed-stats collect)
-        # passes it and skips the job.
-        if probe_keys == "__compute__":
-            probe_keys = self._collect_probe_keys(changed_keys)
+        # src-key Bloom probe values: each key rendered as the index
+        # write path's string cast renders it into ``i:src_key`` — exact
+        # for str and int keys (``str()``); any other key type probes
+        # nothing and the locate scans unpruned
+        if probe_keys is not None:
+            probe_keys = (
+                [str(k) for k in probe_keys]
+                if all(type(k) in (str, int) for k in probe_keys)
+                else None
+            )
         for iq, meta in indexes.items():
             ispec = self.registry.get(iq)
             self._mark_index_stale(iq, True)
@@ -4108,28 +4125,6 @@ class KeyedTableStore:
         are strictly a cache (absent ⇒ candidate)."""
         return "src_key" in spec.families.get("i", {})
 
-    def _collect_probe_keys(self, changed_keys: DataFrame) -> list | None:
-        """The changed source keys as STRING probe values for src-key
-        Bloom pruning, or ``None`` when pruning must be skipped (more
-        than ``_BLOOM_MERGE_PROBE_MAX`` keys — a batch that large makes
-        the locate scan worth paying anyway).  The Spark ``cast``
-        renders each key exactly as the index write path rendered it
-        into the string-typed ``i:src_key`` column (same cast), so
-        build and probe encodings agree for every main-table key type.
-        NULL source keys are dropped: the locate's equality semi-join
-        can never match them."""
-        try:
-            rows = (
-                changed_keys.select(F.col(ROW_KEY).cast("string"))
-                .limit(self._BLOOM_MERGE_PROBE_MAX + 1)
-                .collect()
-            )
-        except Exception:
-            return None
-        if len(rows) > self._BLOOM_MERGE_PROBE_MAX:
-            return None
-        return [r[0] for r in rows if r[0] is not None]
-
     def _writer(self, df: DataFrame, spec: TableSpec):
         """DataFrameWriter carrying the table's declared PARQUET-NATIVE
         options.  ``PARQUET_BLOOM_COLUMNS => 'cf:a,cf:b'`` enables
@@ -4358,10 +4353,7 @@ class KeyedTableStore:
                 except Exception:
                     continue  # unreadable: no sidecar, file stays candidate
                 bits = bytearray((m + 7) >> 3)
-                for v in col.to_pylist():
-                    data = _bloom.encode_key(v)
-                    if data is not None:
-                        _bloom.set_key(bits, data, m, k)
+                _bloom.add_keys(bits, col.to_pylist(), m, k)
                 _bloom.write_sidecar(gen_path, fname, m, k, bits, subdir)
                 built.append(fname)
             return built
@@ -4413,10 +4405,7 @@ class KeyedTableStore:
                     arr = acc.get(base)
                     if arr is None:
                         arr = acc[base] = bytearray((m + 7) >> 3)
-                    for v in grp["_k"]:
-                        data = B.encode_key(v)
-                        if data is not None:
-                            B.set_key(arr, data, m, k)
+                    B.add_keys(arr, grp["_k"], m, k)
             if acc:
                 yield pd.DataFrame(
                     {
@@ -4761,7 +4750,7 @@ class KeyedTableStore:
         few regions rewrites those regions, not the table (HBase Put
         semantics ARE region-local); new keys matching no file append
         as fresh sorted runs in the same atomic swap.  The SOURCE IS
-        EVALUATED EXACTLY ONCE (eager batch-sized ``localCheckpoint``;
+        EVALUATED EXACTLY ONCE (the batch pin, :meth:`_pin_batch`;
         pinned by ``test_upsert_evaluates_source_once``) and the merge
         window rides the subset's ONE range exchange (pinned by
         ``test_upsert_single_shuffle``).  The MERGE law "multiple
@@ -4787,52 +4776,27 @@ class KeyedTableStore:
                 f"upsert source columns {sorted(df.columns)} != table "
                 f"columns {sorted(cols)}"
             )
-        incoming = df.select(*[F.col(f"`{c}`") for c in cols])
-        # pin the BATCH-sized source once (eager localCheckpoint): the
+        # pin the BATCH-sized source once (:meth:`_pin_batch`): the
         # locate semi-join, the range exchange's bounds sampler, the
         # dup-check, and the written rows all read the same
-        # materialized batch, so a nondeterministic source cannot
-        # diverge.  This is NOT the r5 full-table-localCheckpoint weak
-        # — the TABLE side streams lazily from parquet; only the
-        # bounded incoming batch is pinned (the same discipline as
-        # insert's index-maintenance batch pin).
-        incoming = incoming.localCheckpoint(eager=True)
-        # ONE batch-statistics job over the checkpointed batch replaces
-        # three separate jobs (empty take(1), NULL-key take(1), span
-        # agg): row count, NULL-key count, span, and the dense-skip
-        # size all ride the same scan.  The span is generation-
-        # independent; everything from path resolution down re-runs per
-        # CAS-retry attempt so the loser of a concurrent-writer race
-        # rebuilds against the winner's committed generation.
-        b = incoming.agg(
-            F.min(ROW_KEY).alias("lo"),
-            F.max(ROW_KEY).alias("hi"),
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(F.col(ROW_KEY).isNull(), 1)).alias("n_null"),
-        ).first()
-        if not b["n"]:
+        # materialization, so a nondeterministic source cannot diverge;
+        # the TABLE side streams lazily from parquet.  The pin's span
+        # and keys are generation-independent; everything from path
+        # resolution down re-runs per CAS-retry attempt.
+        b = self._pin_batch(df.select(*[F.col(f"`{c}`") for c in cols]), ROW_KEY)
+        if not b.n:
             return  # empty MERGE source: nothing to do, no swap
         # HBase parity: a Put without a row key is invalid — and a NULL
         # key would silently fall through BOTH sides of the key-span
         # split below (NULL `between` filters), vanishing without error
-        if b["n_null"]:
+        if b.n_null:
             raise ValueError(
                 "MERGE source contains NULL row_key values; every row "
                 "needs a key"
             )
+        incoming = b.frame
         keys = incoming.select(ROW_KEY)
         schema = spec.schema()
-        # small-batch Bloom probe values: with ROW bloom sidecars, a
-        # bounded batch collects its keys ONCE (batch-sized, from the
-        # already-checkpointed source) so each attempt can drop span
-        # candidates whose filter proves no batch key present — the
-        # Put-skips-HFiles-via-bloom path applied to the MERGE locate.
-        # Mistyped sources never mis-prune (bloom.probe_type), and a
-        # large batch skips the collect entirely (probing cost and the
-        # driver-side key list must stay bounded).
-        bloom_keys = None
-        if b["n"] <= self._BLOOM_MERGE_PROBE_MAX and self._bloom_enabled(spec):
-            bloom_keys = [r[0] for r in keys.collect()]
 
         def attempt() -> tuple:
             path = self.table_path(spec)
@@ -4847,7 +4811,7 @@ class KeyedTableStore:
             # every footer ONCE.
             stats: dict = {}  # one record per data file of the generation
             candidates = self._candidate_files(
-                spec, path, (b["lo"], b["hi"]), bloom_keys, stats
+                spec, path, (b.lo, b.hi), b.keys, stats
             )
             affected: dict | list | None = None
             if (
@@ -4865,7 +4829,7 @@ class KeyedTableStore:
                 # A small batch still locates, keeping region-confined
                 # MERGE O(affected); at scale files exceed the region
                 # fan-out and this never triggers.
-                if b["n"] >= 64 * len(stats):
+                if b.n >= 64 * len(stats):
                     affected = candidates
             if affected is None:
                 affected = self._locate_affected_files(
@@ -4874,24 +4838,26 @@ class KeyedTableStore:
                     files=candidates,
                 )
             return None, True, self._upsert_rewrite(
-                spec, qualified_name, incoming, keys, affected, path,
-                schema, async_index, batch_span=(b["lo"], b["hi"]),
-                footer_stats=stats, n_incoming=b["n"],
+                spec, qualified_name, incoming, (keys, b.keys), affected,
+                path, schema, async_index, batch_span=(b.lo, b.hi),
+                footer_stats=stats, n_incoming=b.n,
             )
 
         self._commit(qualified_name, attempt, async_index)
 
     def _upsert_rewrite(
-        self, spec, qualified_name, incoming, keys, affected, path,
+        self, spec, qualified_name, incoming, changed, affected, path,
         schema, async_index, batch_span=None, footer_stats=None,
         n_incoming=None, drop_keys=None, new_run_known_empty=False,
-    ) -> DataFrame | None:
+    ) -> tuple | None:
         """The merge-window rewrite behind :meth:`upsert`, one attempt
         against one resolved generation (``path``/``affected``).
-        Returns the ``changed_keys`` frame for the caller's index
-        maintenance (``None`` = full rebuild / no index), which runs
-        OUTSIDE the CAS retry so an index-side conflict can never
-        replay the already-committed main-table swap."""
+        Returns ``changed`` — the batch's ``(keys frame, driver-side
+        keys or None)`` — for the caller's index maintenance when the
+        incremental route applies (``None`` = full rebuild / no index),
+        which runs OUTSIDE the CAS retry so an index-side conflict can
+        never replay the already-committed main-table swap.
+        ``batch_span`` is the incoming batch's ``(min, max)`` key."""
         from pyspark.sql import Observation, Window
 
         def conform(df: DataFrame) -> DataFrame:
@@ -4962,31 +4928,32 @@ class KeyedTableStore:
             else:
                 out_merged = out_merged.sortWithinPartitions(ROW_KEY)
             new_run = incoming.filter(~in_span)
-            # when the batch span sits inside the affected files' span,
-            # ~between(lo, hi) is provably empty — decide driver-side
-            # instead of paying a take(1) job (sound: for str/bytes
-            # Python ordering equals Spark's UTF8String/Binary byte
-            # ordering because UTF-8 preserves code-point order; other
-            # or mixed types fall through to the take(1))
-            if (
+            # the batch's min and max are batch keys, so ~between(lo,
+            # hi) is empty exactly when both sit inside the affected
+            # span — decided driver-side instead of by a take(1) job
+            # (sound: for str/bytes Python ordering equals Spark's
+            # UTF8String/Binary byte ordering because UTF-8 preserves
+            # code-point order; other or mixed types keep the take(1))
+            new_run_known = (
                 batch_span is not None
                 and type(batch_span[0]) is type(lo)
+                and type(batch_span[1]) is type(hi)
                 and isinstance(lo, (str, bytes, int))
-                and lo <= batch_span[0]
-                and batch_span[1] <= hi
-            ):
+            )
+            if new_run_known and lo <= batch_span[0] and batch_span[1] <= hi:
                 new_run = None
         else:
             # every incoming key is new: the "merge" is a pure append of
-            # one fresh sorted run (still through the atomic swap)
+            # one fresh sorted run (still through the atomic swap); a
+            # known batch span means a non-empty batch
             out_merged = None
             new_run = incoming
+            new_run_known = batch_span is not None
         if new_run_known_empty:
             # caller proved the incoming batch is empty (a fused replay
-            # whose puts were all cancelled by deletes) — skip the
-            # take(1) probe job
+            # whose puts were all cancelled by deletes)
             new_run = None
-        if new_run is not None and bool(new_run.take(1)):
+        if new_run is not None and (new_run_known or bool(new_run.take(1))):
             w2 = Window.partitionBy(ROW_KEY)
             obs2 = Observation()
             observations.append(obs2)
@@ -5016,7 +4983,7 @@ class KeyedTableStore:
                 else self._footer_row_count(path)
             )
             if n_in * 4 < total:
-                changed_keys = keys
+                changed_keys = changed
         outs = [o for o in (out_merged, out_new) if o is not None]
         if not outs:
             # nothing to rewrite and nothing to append (e.g. a fused
@@ -5124,8 +5091,8 @@ class KeyedTableStore:
                 # checkAndPut appends a fresh run without the job
                 affected = {}
             changed = self._upsert_rewrite(
-                spec, qualified_name, incoming, keys, affected, path,
-                schema, async_index,
+                spec, qualified_name, incoming, (keys, [key]), affected,
+                path, schema, async_index,
                 batch_span=(key, key),
                 footer_stats=stats, n_incoming=1,
             )
@@ -5297,7 +5264,7 @@ class KeyedTableStore:
         winner's state; the whole batch becomes visible atomically.
 
         Cost: one span+Bloom-pruned candidate scan for the batch's
-        current rows, one locate over those candidates, one merge
+        current rows and the files holding them (the locate), one merge
         rewrite of the affected files (+ one fresh sorted run for
         outside-span/new keys), one flip.  Reference analogue: the
         ``Table.batch``/``checkAndMutate`` client surface the
@@ -5351,18 +5318,24 @@ class KeyedTableStore:
         )
 
         def attempt():
+            import urllib.parse
+
             path = self.table_path(spec)
             stats: dict = {}
             files = self._candidate_files(
                 spec, path, (min(keys), max(keys)), keys, stats
             )
+            # each present key's current row and the data file holding
+            # it: the one read serves the checks AND the locate
             current: dict = {}
+            home: dict = {}
             if files:
                 crefs = self._span_refs(path)
                 for r in (
                     self.spark.read.schema(schema)
                     .parquet(*[self._file_abs(path, f, crefs) for f in files])
                     .filter(F.col(ROW_KEY).isin(keys))
+                    .select("*", F.input_file_name().alias("__f"))
                     .collect()
                 ):
                     k = r[col_idx[ROW_KEY]]
@@ -5372,7 +5345,10 @@ class KeyedTableStore:
                             "mutate() needs unique keys (versioned "
                             "tables: compact_versions first)"
                         )
-                    current[k] = tuple(r)
+                    current[k] = tuple(r)[:-1]
+                    home[k] = os.path.basename(
+                        urllib.parse.urlparse(r["__f"]).path
+                    )
 
             results: list = [None] * len(ops)
             incoming_rows: list = []
@@ -5433,31 +5409,16 @@ class KeyedTableStore:
 
             if not incoming_rows and not delete_keys:
                 return results, False, None
-            incoming = (
-                self.spark.createDataFrame(incoming_rows, schema)
-                if incoming_rows
-                else self.spark.createDataFrame([], schema)
+            incoming = self._local_frame(incoming_rows, schema)
+            changed_keys = incoming_keys + delete_keys
+            keys_df = self._local_frame(
+                [(k,) for k in changed_keys], key_struct
             )
-            keys_df = self.spark.createDataFrame(
-                [(k,) for k in incoming_keys + delete_keys], key_struct
-            )
-            if touched_existing:
-                tk = self.spark.createDataFrame(
-                    [(k,) for k in touched_existing], key_struct
-                )
-                affected = self._locate_affected_files(
-                    spec,
-                    lambda d: d.join(
-                        F.broadcast(tk), ROW_KEY, "left_semi"
-                    ),
-                    files=files,
-                )
-            else:
-                affected = {}
+            affected: dict = {}
+            for k in touched_existing:
+                affected[home[k]] = affected.get(home[k], 0) + 1
             drop_df = (
-                self.spark.createDataFrame(
-                    [(k,) for k in delete_keys], key_struct
-                )
+                self._local_frame([(k,) for k in delete_keys], key_struct)
                 if delete_keys
                 else None
             )
@@ -5467,11 +5428,11 @@ class KeyedTableStore:
                 else None
             )
             changed = self._upsert_rewrite(
-                spec, qualified_name, incoming, keys_df, affected, path,
-                schema, async_index,
+                spec, qualified_name, incoming, (keys_df, changed_keys),
+                affected, path, schema, async_index,
                 batch_span=span, footer_stats=stats,
-                n_incoming=len(incoming_keys) + len(delete_keys),
-                drop_keys=drop_df,
+                n_incoming=len(changed_keys),
+                drop_keys=drop_df, new_run_known_empty=not incoming_keys,
             )
             return results, True, changed
 
@@ -5514,9 +5475,7 @@ class KeyedTableStore:
                 f"(put key {row[ROW_KEY]!r} != checked key {check_key!r})"
             )
         full = {**row, ROW_KEY: check_key}
-        incoming = self.spark.createDataFrame(
-            [tuple(full.get(c) for c in names)], schema
-        )
+        incoming = self._local_frame([tuple(full.get(c) for c in names)], schema)
         return incoming, incoming.select(ROW_KEY)
 
     def _point_row(
@@ -5771,35 +5730,67 @@ class KeyedTableStore:
 
         return self._commit(spec.qualified_name, attempt, async_index)
 
-    def _pin_key_batch(self, batch: DataFrame, key: str, *aggs):
-        """The batch-pin step of :meth:`delete_keys` and
-        :meth:`delete_cells`: pin the batch once (eager
-        ``localCheckpoint`` — the MERGE-source discipline), run ONE
-        statistics job over it (key span, row count, NULL-key count,
-        plus the caller's extra ``aggs``) and, for a batch of at most
-        ``_BLOOM_MERGE_PROBE_MAX`` rows, one bounded collect of its
-        distinct keys as exact probe points.  Returns ``(pinned, stats
-        row, span, points)``; ``span`` is ``None`` when the batch is
-        empty or holds a NULL key (parquet stats cannot see NULL keys,
-        so such a batch locates over the whole generation)."""
-        pinned = batch.localCheckpoint(eager=True)
+    def _pin_batch(
+        self, batch: DataFrame, key: str, flags=(), stats: bool = True
+    ) -> _BatchPin:
+        """Stage 0, the batch pin: evaluate ``batch`` exactly once.  One
+        bounded ``limit(_BLOOM_MERGE_PROBE_MAX + 1).toArrow()`` job
+        decides the route.  A batch under the cap stays on the driver
+        and re-enters Spark as an Arrow-built local relation, so every
+        later use — locate, merge, index maintenance — runs no job to
+        read it, and its statistics (row count, NULL keys, key span,
+        distinct keys, and the True-row count of each boolean ``flags``
+        column) are computed from the Arrow table.  A larger batch (or
+        one whose schema does not round-trip through Arrow) is pinned
+        by an eager ``localCheckpoint`` plus one statistics ``agg``
+        (skipped when ``stats`` is false) and carries no keys."""
+        cap = self._BLOOM_MERGE_PROBE_MAX
+        if _arrow_pinnable(batch.schema):
+            table = batch.limit(cap + 1).toArrow()
+            if table.num_rows <= cap:
+                col = table.column(key)
+                keys = [k for k in col.unique().to_pylist() if k is not None]
+                return _BatchPin(
+                    self.spark.createDataFrame(table, batch.schema),
+                    table, table.num_rows, col.null_count, *_py_span(keys),
+                    keys,
+                    {f: table.column(f).to_pylist().count(True) for f in flags},
+                )
+        frame = batch.localCheckpoint(eager=True)
+        if not stats:
+            return _BatchPin(frame, None, None, None, None, None, None, {})
         k = F.col(f"`{key}`")
-        b = pinned.agg(
+        b = frame.agg(
             F.min(k).alias("lo"),
             F.max(k).alias("hi"),
             F.count(F.lit(1)).alias("n"),
             F.count(F.when(k.isNull(), 1)).alias("n_null"),
-            *aggs,
+            *[F.count(F.when(F.col(f), 1)).alias(f) for f in flags],
         ).first()
-        span = (
-            (b["lo"], b["hi"])
-            if not b["n_null"] and b["lo"] is not None
-            else None
+        return _BatchPin(
+            frame, None, b["n"], b["n_null"], b["lo"], b["hi"], None,
+            {f: b[f] for f in flags},
         )
-        points = None
-        if span is not None and b["n"] <= self._BLOOM_MERGE_PROBE_MAX:
-            points = [r[0] for r in pinned.select(k).distinct().collect()]
-        return pinned, b, span, points
+
+    def _local_frame(self, rows: list, schema) -> DataFrame:
+        """Driver-held Python ``rows`` as an Arrow-built local relation
+        (no Python-worker job reads it), converted per column exactly as
+        ``createDataFrame`` converts them (``DataType.toInternal``)."""
+        if not _arrow_pinnable(schema):
+            return self.spark.createDataFrame(rows, schema)
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        return self.spark.createDataFrame(
+            pa.table({
+                f.name: pa.array(
+                    [f.dataType.toInternal(r[i]) for r in rows],
+                    type=to_arrow_type(f.dataType),
+                )
+                for i, f in enumerate(schema.fields)
+            }),
+            schema,
+        )
 
     def delete_where(
         self, qualified_name: str, condition: str, async_index: bool = False
@@ -5843,8 +5834,8 @@ class KeyedTableStore:
         ``row_key`` column (or exactly one column, taken as the key).
 
         Same selective-rewrite cost law as :meth:`delete_where`: the
-        batch is pinned once and ONE batch-statistics job yields its
-        span (:meth:`_pin_key_batch`), so the locate prunes candidate
+        batch is pinned once and its statistics yield its span
+        (:meth:`_pin_batch`), so the locate prunes candidate
         files by footer key range and Bloom sidecars (exact-point
         probes when the batch is small enough to hoist, the
         :meth:`upsert` gating) before one broadcast-semi locate scan;
@@ -5863,35 +5854,33 @@ class KeyedTableStore:
                     f"single-column frame), got {keys.columns}"
                 )
             keys = keys.select(F.col(f"`{keys.columns[0]}`").alias(ROW_KEY))
-        key_t = spec.schema()[ROW_KEY].dataType
-        kdf, b, span, points = self._pin_key_batch(
+        key = F.col(f"`{ROW_KEY}`")
+        # try_cast: an uncastable key must reach the loud refusal below
+        # as a detectable NULL, not explode as an ANSI cast error
+        # mid-job (and under non-ANSI sessions a plain cast would
+        # silently NULL — the exact trap the check refuses)
+        dk = key.try_cast(spec.schema()[ROW_KEY].dataType)
+        b = self._pin_batch(
             keys.select(
-                # try_cast: an uncastable key must reach the loud
-                # refusal below as a detectable NULL, not explode as an
-                # ANSI cast error mid-job (and under non-ANSI sessions a
-                # plain cast would silently NULL — the exact trap the
-                # check refuses)
-                F.col(f"`{ROW_KEY}`").try_cast(key_t).alias("__dk"),
-                F.col(f"`{ROW_KEY}`").isNull().alias("__was_null"),
+                dk.alias("__dk"),
+                (dk.isNull() & key.isNotNull()).alias("__uncastable"),
             ),
             "__dk",
-            F.count(
-                F.when(F.col("__dk").isNull() & ~F.col("__was_null"), 1)
-            ).alias("n_uncastable"),
+            flags=("__uncastable",),
         )
-        if b["n_uncastable"]:
+        if b.counts["__uncastable"]:
             # a key the cast NULLED would silently retarget the delete at
             # NULL-keyed rows — the stringly-typed trap again; refuse
             raise ValueError(
-                f"{qualified_name}: {b['n_uncastable']} delete key(s) are "
-                f"not castable to the key type {spec.key_type!r}"
+                f"{qualified_name}: {b.counts['__uncastable']} delete "
+                f"key(s) are not castable to the key type {spec.key_type!r}"
             )
-        if not b["n"]:
+        if not b.n:
             return 0
-        kdf = F.broadcast(kdf.select("__dk"))
+        kdf = F.broadcast(b.frame.select("__dk"))
         match = F.col(ROW_KEY).eqNullSafe(F.col("__dk"))
         return self._selective_commit(
-            spec, span, points,
+            spec, b.span, b.keys,
             lambda df: df.join(kdf, match, "left_semi"),
             lambda df: df.join(kdf, match, "left_anti"),
             async_index,
@@ -5941,11 +5930,12 @@ class KeyedTableStore:
                 f"{qualified_name}: delete_cells needs the table's exact "
                 f"schema; expected {want}, got {got}"
             )
-        aligned, b, span, points = self._pin_key_batch(
+        b = self._pin_batch(
             rows.select(*[F.col(f"`{n}`") for n in names]), ROW_KEY
         )
-        if not b["n"]:
+        if not b.n:
             return 0
+        aligned = b.frame
         probe = F.broadcast(aligned.select(
             *[F.col(f"`{n}`").alias(f"__c{i}") for i, n in enumerate(names)]
         ))
@@ -5957,7 +5947,7 @@ class KeyedTableStore:
             ],
         )
         return self._selective_commit(
-            spec, span, points,
+            spec, b.span, b.keys,
             lambda df: df.join(probe, cond, "left_semi"),
             lambda df: df.exceptAll(aligned),
             async_index,
@@ -6015,12 +6005,13 @@ class KeyedTableStore:
     def _capture_changed_keys(
         self, spec: TableSpec, affected: dict, selector, n: int,
         async_index: bool, path: str | None = None,
-    ) -> DataFrame | None:
+    ) -> tuple | None:
         """Pin the source keys a DELETE/UPDATE touches BEFORE the swap
         (afterwards the deleted rows are gone) — but only when an index
         actually needs them, the change is small enough that the
         incremental path will be chosen, and the maintenance is
-        synchronous.  Keys-only and batch-bounded by that threshold."""
+        synchronous.  Keys-only and batch-bounded by that threshold;
+        returns the pin's ``(frame, keys)``."""
         if async_index or not self.registered_indexes(spec.qualified_name):
             return None
         if path is None:
@@ -6031,7 +6022,10 @@ class KeyedTableStore:
         sub = self.spark.read.schema(spec.schema()).parquet(
             *[self._file_abs(path, f, refs) for f in affected]
         )
-        return selector(sub).select(ROW_KEY).localCheckpoint(eager=True)
+        pin = self._pin_batch(
+            selector(sub).select(ROW_KEY), ROW_KEY, stats=False
+        )
+        return pin.frame, pin.keys
 
     # -- compaction (A10 bulk-rewrite analogue) ---------------------------
     def compact(
@@ -6576,8 +6570,11 @@ class KeyedTableStore:
                 f"{saved['qualified_name']!r}, not {qualified_name!r}; "
                 "use clone_snapshot to materialize it elsewhere"
             )
-        self._swap_in_snapshot(
-            self.registry.get(qualified_name), snapshot_name
+        sdir = self._snapshot_dir(snapshot_name)
+        self._swap_table_dir(
+            self.registry.get(qualified_name),
+            lambda staging: self._link_snapshot(sdir, staging),
+            span_reuse_path=sdir,
         )
         self._maintain_indexes(qualified_name, async_index=False)
 
@@ -6586,11 +6583,11 @@ class KeyedTableStore:
     ) -> None:
         """Materialize a snapshot as a NEW table — HBase
         ``clone_snapshot``: a fresh table under the snapshot's declared
-        schema, then the same staged zero-copy swap as
-        :meth:`restore_snapshot` (the empty generation ``create_table``
-        wrote becomes the clone's previous).  The clone shares data
-        files with the snapshot until either side rewrites (safe: files
-        are immutable here)."""
+        schema whose FIRST generation hardlinks the snapshot's files
+        (the :meth:`restore_snapshot` build, no Spark job), with span
+        manifest and Bloom sidecars carried by name.  The clone shares
+        data files with the snapshot until either side rewrites (safe:
+        files are immutable here)."""
         saved = self._read_snapshot_spec(snapshot_name)
         ns, name = new_qualified_name.split(".", 1)
         spec = TableSpec(
@@ -6602,25 +6599,24 @@ class KeyedTableStore:
             split_keys=list(saved.get("split_keys") or []),
             properties=dict(saved.get("properties") or {}),
         )
-        self.create_table(spec)
-        self._swap_in_snapshot(spec, snapshot_name)
-
-    def _swap_in_snapshot(self, spec: TableSpec, snapshot_name: str) -> None:
-        """Hardlink the snapshot's files into a staged generation and
-        flip it live — the one build behind restore and clone.  The
-        span manifest and Bloom sidecars carry from the snapshot by
-        name (same files)."""
         sdir = self._snapshot_dir(snapshot_name)
 
-        def build(staging: str) -> None:
-            os.makedirs(staging)
-            for fname in os.listdir(sdir):
-                if fname.endswith(".parquet"):
-                    self._link_or_copy(
-                        os.path.join(sdir, fname), os.path.join(staging, fname)
-                    )
+        def build(gen: str) -> None:
+            self._link_snapshot(sdir, gen)
+            self._write_span_manifest(gen, known=self._load_span_stats(sdir))
+            self._write_bloom_filters(spec, gen, reuse_path=sdir)
 
-        self._swap_table_dir(spec, build, span_reuse_path=sdir)
+        self._create_table(spec, build)
+
+    def _link_snapshot(self, sdir: str, gen: str) -> None:
+        """Hardlink a snapshot's data files into the new generation
+        directory ``gen`` — the build behind restore and clone."""
+        os.makedirs(gen)
+        for fname in os.listdir(sdir):
+            if fname.endswith(".parquet"):
+                self._link_or_copy(
+                    os.path.join(sdir, fname), os.path.join(gen, fname)
+                )
 
     # -- session-catalog integration (A8) ---------------------------------
     def _view_name(self, spec: TableSpec) -> str:

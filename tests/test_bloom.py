@@ -114,6 +114,31 @@ def test_bloom_never_false_negative(keys):
     assert (m2, k2, bm2) == (m, k, bytes(bits))
 
 
+def test_vectorized_add_keys_matches_scalar_set_key():
+    """``add_keys`` sets exactly the bits the scalar ``set_key`` loop
+    sets — str, int (numpy too) and bytes keys with NULLs, up to the
+    sizing ceiling m = 2^27, k = 16 where the uint64 form must stay
+    exact."""
+    import numpy as np
+
+    batches = [
+        [f"k{i:05d}" for i in range(300)] + [None, "", "é漢"],
+        [-(2**63), 2**63 - 1, 0, -1, None] + list(range(0, 9000, 31)),
+        [bytes([i % 256, (i * 7) % 256]) * (i % 5) for i in range(200)]
+        + [None, b""],
+        [np.int64(5), np.int64(-7), None],
+    ]
+    for values in batches:
+        for m, k in (bloom.params_for(len(values)), (1 << 27, 16), (64, 1)):
+            want = bytearray((m + 7) >> 3)
+            for v in values:
+                if bloom.encode_key(v) is not None:
+                    bloom.set_key(want, bloom.encode_key(v), m, k)
+            got = bytearray((m + 7) >> 3)
+            bloom.add_keys(got, values, m, k)
+            assert got == want, (m, k)
+
+
 def test_bloom_fpp_roughly_holds():
     """~1% false positives at the sized load (generous 5% ceiling —
     this guards against a broken hash, not the exact constant)."""
@@ -553,22 +578,19 @@ def test_small_merge_locates_through_bloom(store, monkeypatch):
 
 
 def test_merge_probe_key_collect_failure_surfaces(store, monkeypatch):
-    """The MERGE probe-key collect reads a batch that is already
-    checkpointed, so a failure there is real: it propagates instead of
+    """The MERGE probe keys come from the batch pin's one bounded Arrow
+    collect, so a failure there is real: it propagates instead of
     quietly widening the locate, and the table is left unchanged."""
     _make_table(store, "t15f", n=50)
     root = store.table_root(store.registry.get("bl.t15f"))
     man = store._read_gen_manifest(root)
     before = sorted(map(tuple, store.read("bl.t15f").collect()))
     frame_cls = type(store.read("bl.t15f"))
-    orig = frame_cls.collect
 
-    def collect(self):
-        if self.columns == ["row_key"]:  # the probe-key collect
-            raise RuntimeError("injected probe-key collect failure")
-        return orig(self)
+    def to_arrow(self):  # the pin's probe-key collect
+        raise RuntimeError("injected probe-key collect failure")
 
-    monkeypatch.setattr(frame_cls, "collect", collect)
+    monkeypatch.setattr(frame_cls, "toArrow", to_arrow)
     batch = store.spark.createDataFrame(
         [("k0001", 1), ("k9999", 2)], "row_key string, `cf:v` int"
     )
@@ -577,6 +599,92 @@ def test_merge_probe_key_collect_failure_surfaces(store, monkeypatch):
     monkeypatch.undo()
     assert store._read_gen_manifest(root) == man
     assert sorted(map(tuple, store.read("bl.t15f").collect())) == before
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+@pytest.mark.parametrize("key_type", ["string", "long", "binary"])
+def test_sidecars_match_scalar_build(store, monkeypatch, key_type, path):
+    """Sidecars from the vectorized builder, on both build paths, are
+    byte-identical to a scalar ``set_key`` build over each file's keys —
+    str, int and bytes keys, with NULL keys in the files."""
+    import pyarrow.parquet as pq
+
+    if path == "distributed":
+        monkeypatch.setattr(KeyedTableStore, "_BLOOM_DRIVER_BUILD_MAX", 0)
+    name = f"vec_{key_type}_{path}"
+    spec = TableSpec(
+        namespace="bl", name=name, key_type=key_type,
+        families={"cf": {"v": "int"}}, properties={"bloomfilter": "ROW"},
+    )
+    store.create_table(spec)
+    key = {
+        "string": F.format_string("k%04d", F.col("id")),
+        "long": F.col("id") * 7919 - 500_000,
+        "binary": F.format_string("b%03d", F.col("id")).cast("binary"),
+    }[key_type]
+    df = store.spark.range(120).select(
+        F.when(F.col("id") % 17 == 0, F.lit(None))
+        .otherwise(key).alias("row_key"),
+        F.col("id").cast("int").alias("cf:v"),
+    )
+    store.insert(f"bl.{name}", df, generate_row_key=False)
+    gen = store.table_path(spec)
+    refs = store._span_refs(gen)
+    checked = 0
+    for f in store._data_files(gen):
+        if not os.path.exists(bloom.sidecar_path(gen, f)):
+            continue
+        with open(bloom.sidecar_path(gen, f), "rb") as fh:
+            got = fh.read()
+        m, k, _bits = bloom.unpack(got)
+        want = bytearray((m + 7) >> 3)
+        keys = pq.read_table(
+            store._file_abs(gen, f, refs), columns=["row_key"]
+        ).column(0).to_pylist()
+        for v in keys:
+            if v is not None:
+                bloom.set_key(want, bloom.encode_key(v), m, k)
+        assert got == bloom.pack(m, k, bytes(want)), f
+        checked += 1
+    assert checked == len(_expected_sidecars(store, gen)) > 0
+    assert store.read(f"bl.{name}").filter("row_key IS NULL").count() == 8
+
+
+@pytest.mark.parametrize("props", [{}, {"bloomfilter": "ROW"}])
+def test_upsert_exact_span_prunes_plain_and_bloom_tables(
+    store, monkeypatch, props
+):
+    """A 2-key MERGE batch whose [min, max] span covers the whole table
+    locates over the ONE file holding its existing key whether or not
+    the table has Bloom sidecars: the batch's keys feed the exact-span
+    pass either way."""
+    name = "xspan_bloom" if props else "xspan_plain"
+    _make_table(store, name, n=200, props=props)
+    path = store.table_path(store.registry.get(f"bl.{name}"))
+    assert len(store._data_files(path)) > 1
+    located = []
+    orig = KeyedTableStore._locate_affected_files
+
+    def spy(self, spec, selector, files=None):
+        located.append(list(files))
+        return orig(self, spec, selector, files=files)
+
+    monkeypatch.setattr(KeyedTableStore, "_locate_affected_files", spy)
+    store.upsert(
+        f"bl.{name}",
+        store.spark.createDataFrame(
+            [("k0005", 1), ("x900", 2)], "row_key string, `cf:v` int"
+        ),
+    )
+    monkeypatch.undo()
+    stats = store._load_span_stats(path)
+    holder = [
+        f for f, (lo, hi, rows, _e) in stats.items()
+        if rows and lo <= "k0005" <= hi
+    ]
+    assert located == [holder] and len(holder) == 1
+    got = {r["row_key"]: r["cf:v"] for r in store.read(f"bl.{name}").collect()}
+    assert (got["k0005"], got["x900"], len(got)) == (1, 2, 201)
 
 
 def test_distributed_build_path_matches_driver_path(store, monkeypatch):

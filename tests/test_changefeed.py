@@ -736,14 +736,13 @@ def test_apply_changes_empty_feed_is_true_noop_on_indexed_table(store, spark):
 
 
 def test_dml_job_counts_stay_fused(store, spark):
-    """Job-count pins for the fused commit machinery (r15): the
-    changefeed replay is ONE locate+rewrite+swap commit riding one
-    bounded feed-stats collect, not an upsert cycle followed by a
-    delete_keys cycle with five probe jobs.  Bounds are loose (current
-    measured counts ~21 for a put+delete replay, ~6 for upsert, ~12
-    for delete_keys at gate scale) so AQE variance cannot flake them,
-    but tight enough that a regression to the pre-fusion sequential
-    replay (41+ jobs) fails loudly."""
+    """Job-count pins for the fused commit machinery: the changefeed
+    replay is ONE locate+rewrite+swap commit, and every batch entry
+    point pins its batch once as a driver-resident Arrow local relation
+    (one bounded collect, no statistics, probe-key or new-run probe
+    jobs).  Bounds are the measured counts, identical in both storage
+    modes; a regression to the checkpoint-and-probe batch handling or
+    to the pre-fusion sequential replay (41+ jobs) fails loudly."""
     sc = spark.sparkContext
     tag = "man" if store.manifest_authority else "pos"
 
@@ -764,27 +763,28 @@ def test_dml_job_counts_stay_fused(store, spark):
             [("k005", 500), ("x900", 900)], "row_key string, `cf:v` long"
         ),
     ))
-    assert n <= 19, f"upsert commit grew to {n} jobs"
+    assert n <= 10, f"upsert commit grew to {n} jobs"
     n = jobs("jp_delete", lambda: store.delete_keys(
         "cdc.jobpin", spark.createDataFrame([("k010",)], "row_key string")
     ))
-    assert n <= 14, f"delete_keys commit grew to {n} jobs"
+    assert n <= 7, f"delete_keys commit grew to {n} jobs"
     feed = store.read_changes("cdc.jobpin", versus="jp_s1")
     replica = KeyedTableStore(
         store.spark, store.warehouse_dir + "_jp_replica",
         manifest_authority=store.manifest_authority,
     )
     store.export_snapshot("jp_s1", replica.warehouse_dir)
-    replica.clone_snapshot("jp_s1", "cdc.jobpin")
+    n = jobs("jp_clone", lambda: replica.clone_snapshot("jp_s1", "cdc.jobpin"))
+    assert n == 0, f"clone_snapshot ran {n} jobs"
     n = jobs("jp_apply", lambda: replica.apply_changes("cdc.jobpin", feed))
-    assert n <= 28, f"apply_changes replay grew to {n} jobs"
+    assert n <= 20, f"apply_changes replay grew to {n} jobs"
     # and the replay converged (the pin must never trade correctness)
     src = store.read("cdc.jobpin")
     dst = replica.read("cdc.jobpin")
     assert dst.exceptAll(src).unionAll(src.exceptAll(dst)).isEmpty()
 
     # the remaining keyed DML entry points, each on one key (measured
-    # 4 / 4 / 4 / 11 / 5 / 6 / 7 jobs in both storage modes)
+    # 4 / 4 / 4 / 7 / 5 / 6 / 4 jobs in both storage modes)
     def one(label, fn, bound, want):
         got = []
         n = jobs(label, lambda: got.append(fn()))
@@ -800,7 +800,7 @@ def test_dml_job_counts_stay_fused(store, spark):
     one("jp_delete_cells", lambda: store.delete_cells(
         "cdc.jobpin",
         spark.createDataFrame([("k050", 50)], "row_key string, `cf:v` long"),
-    ), 14, 1)
+    ), 7, 1)
     one("jp_check_delete", lambda: store.check_and_delete(
         "cdc.jobpin", "k060", "cf:v", 60), 8, True)
     one("jp_check_put", lambda: store.check_and_put(
@@ -810,10 +810,94 @@ def test_dml_job_counts_stay_fused(store, spark):
             {"op": "put", "key": "k080", "row": {"cf:v": 8080}},
             {"op": "delete", "key": "k081"},
             {"op": "increment", "key": "k082", "col": "cf:v", "delta": 2},
-        ])], 10, [True, True, True])
+        ])], 4, [True, True, True])
     got = {r["row_key"]: r["cf:v"] for r in store.read("cdc.jobpin").collect()}
     for k in ("k020", "k030", "k034", "k050", "k060", "k081"):
         assert k not in got, k
     assert (got["k040"], got["k070"], got["k080"], got["k082"]) == (
         41, 7070, 8080, 84
     )
+
+
+def test_batch_pin_routes_agree(store, spark, monkeypatch):
+    """The batch pin has two routes — a driver-resident Arrow local
+    relation under ``_BLOOM_MERGE_PROBE_MAX`` rows, ``localCheckpoint``
+    plus a statistics aggregate over it — and they must be
+    indistinguishable: upsert, delete_keys, delete_cells, mutate and
+    apply_changes return the same values and leave the same table,
+    covered-index and replica contents on either route, on a schema
+    with timestamp, date, decimal, binary and long columns and NULL
+    cells."""
+    import datetime as dt
+    from decimal import Decimal
+
+    ddl = (
+        "row_key string, `cf:ts` timestamp, `cf:d` date, "
+        "`cf:dec` decimal(12,3), `cf:b` binary, `cf:l` long"
+    )
+
+    def row(i, bump=0):
+        if i % 4 == 3:  # every payload cell NULL
+            return (f"p{i:03d}", None, None, None, None, None)
+        return (
+            f"p{i:03d}",
+            dt.datetime(2024, 1, 1, 12, 0, i % 60, 1000 * i),
+            dt.date(2024, 1 + i % 12, 1 + i % 28),
+            Decimal(f"{i}.{i % 1000:03d}"),
+            bytes([i % 256, 0, 255]),
+            i * 1000 + bump,
+        )
+
+    def run(tag):
+        qn = f"cdc.pin_{tag}"
+        store.create_table(TableSpec(
+            namespace="cdc", name=f"pin_{tag}", key_type="string",
+            families={"cf": {
+                "ts": "timestamp", "d": "date", "dec": "decimal(12,3)",
+                "b": "binary", "l": "long",
+            }},
+        ))
+        store.insert(
+            qn, spark.createDataFrame([row(i) for i in range(48)], ddl),
+            generate_row_key=False,
+        )
+        store.create_covered_index(qn, f"{qn}_by_l", "cf:l", key_width=12)
+        store.snapshot(qn, f"pin_{tag}_s0")
+        store.clone_snapshot(f"pin_{tag}_s0", f"{qn}_rep")
+        got = [
+            store.upsert(qn, spark.createDataFrame(
+                [row(i, bump=7) for i in (2, 3, 5, 60, 61)], ddl
+            )),
+            store.delete_keys(qn, spark.createDataFrame(
+                [("p007",), ("p011",), ("p999",)], "row_key string"
+            )),
+            store.delete_cells(qn, spark.createDataFrame(
+                [row(9), row(15), row(13, bump=1)], ddl
+            )),
+            store.mutate(qn, [
+                {"op": "put", "key": "p020", "row": {"cf:l": 5}},
+                {"op": "delete", "key": "p021"},
+                {"op": "increment", "key": "p022", "col": "cf:l",
+                 "delta": 3},
+                {"op": "append", "key": "p024", "col": "cf:b",
+                 "value": b"\x01"},
+                {"op": "check_put", "key": "p025", "col": "cf:l",
+                 "expected": 25000, "row": {"cf:l": 1}},
+                {"op": "put", "key": "p070", "row": {"cf:d": None}},
+            ]),
+            store.apply_changes(
+                f"{qn}_rep", store.read_changes(qn, versus=f"pin_{tag}_s0")
+            ),
+        ]
+        return got + [
+            sorted(map(tuple, store.read(q).collect()), key=repr)
+            for q in (qn, f"{qn}_by_l", f"{qn}_rep")
+        ]
+
+    small = run("small")
+    monkeypatch.setattr(KeyedTableStore, "_BLOOM_MERGE_PROBE_MAX", 1)
+    over = run("over")
+    assert small == over
+    assert small[5] == small[7]  # the replica converged
+    assert small[:2] == [None, 2] and small[2] == 2
+    assert [r["applied"] for r in small[3]] == [True] * 6

@@ -702,14 +702,20 @@ def test_dml_paths_have_no_table_localcheckpoint(spark):
         assert "localCheckpoint" not in src.replace(
             "``localCheckpoint(eager=True)``", ""
         ), meth
-    # upsert: exactly one checkpoint, applied to `incoming` (the batch),
-    # never to `cur` (the table) or the merged rewrite plan
-    src = inspect.getsource(KeyedTableStore.upsert)
-    calls = [
-        line for line in src.splitlines()
-        if "localCheckpoint(" in line and not line.strip().startswith("#")
+    # upsert: its only checkpoint is the batch pin's, applied to the
+    # batch (`incoming`), never to `cur` (the table) or the merged
+    # rewrite plan
+    def calls(fn):
+        return [
+            line.strip() for line in inspect.getsource(fn).splitlines()
+            if "localCheckpoint(" in line and not line.strip().startswith("#")
+        ]
+
+    assert calls(KeyedTableStore.upsert) == []
+    assert "self._pin_batch(" in inspect.getsource(KeyedTableStore.upsert)
+    assert calls(KeyedTableStore._pin_batch) == [
+        "frame = batch.localCheckpoint(eager=True)"
     ]
-    assert calls == ["        incoming = incoming.localCheckpoint(eager=True)"], calls
 
 
 def test_delete_where_bounded_actions_and_count(spark, tmp_path):
