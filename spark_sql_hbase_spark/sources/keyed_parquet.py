@@ -851,7 +851,7 @@ class KeyedTableStore:
         feed for versioned-retention tables, where versions are cells,
         not in-place updates) every added row is an ``insert`` and
         every removed row a ``delete``; there is no ``update``, no
-        classification join runs, and replaying the feed with
+        per-key classification runs, and replaying the feed with
         ``apply_changes(..., cells=True)`` reconstructs the exact cell
         state (a key-granularity replay would wipe a key's older
         version cells — the HBase Put/retention semantics pinned by
@@ -863,11 +863,14 @@ class KeyedTableStore:
         basenames, and data files are immutable once written, so a
         file listed on both sides is byte-identical by construction
         and is never read.  Only the symmetric difference of the two
-        listings is scanned; ``exceptAll`` then drops
+        listings is scanned, in ONE exchange on ``row_key``: the
+        current rows (tagged +1) and the base rows (tagged -1) are
+        hash-partitioned by key, a per-row net count drops
         rewritten-but-unchanged rows (selective rewrites rewrite whole
-        files), and the classification joins run over the changed
-        subset only.  Cost: O(changed files) I/O plus shuffles over
-        changed rows — independent of table size.
+        files) with exact multiset multiplicities, and a per-key
+        window over the same partitions classifies what is left.
+        Cost: O(changed files) I/O plus one shuffle of the changed
+        files' rows — independent of table size.
         """
         spec = self.registry.get(qualified_name)
         root = self.table_root(spec)
@@ -907,57 +910,46 @@ class KeyedTableStore:
 
         cur_df = _rd(cur_dir, cur_files - base_files)
         base_df = _rd(base_dir, base_files - cur_files)
-        added = cur_df.exceptAll(base_df)
-        removed = base_df.exceptAll(cur_df)
-        cols = [f"`{f.name}`" for f in schema.fields]
+        # ONE row_key exchange carries the whole diff: the current rows
+        # tagged +1 and the base rows tagged -1 are hash-partitioned on
+        # the key once; the multiset aggregate (the arithmetic exceptAll
+        # is rewritten to, so NULLs and floats group alike) and the
+        # per-key classification window both ride that partitioning
+        from pyspark.sql import Window
+
+        cols = [F.col(f"`{f.name}`") for f in schema.fields]
+        rk = F.col(f"`{ROW_KEY}`")
+        net = F.col("__net")
+        diff = (
+            cur_df.withColumn("__tag", F.lit(1))
+            .unionByName(base_df.withColumn("__tag", F.lit(-1)))
+            .repartition(rk)
+            .groupBy(*cols)
+            .agg(F.sum("__tag").alias("__net"))
+            .filter(net != 0)
+        )
         if cells:
             # cell granularity: every added row IS an insert and every
-            # removed row IS a delete — the multisets are disjoint by
-            # exceptAll construction, no classification join runs at
-            # all (strictly cheaper than the key-granularity path)
-            sel = ["change"] + cols
-            return (
-                added.withColumn("change", F.lit("insert"))
-                .select(*sel)
-                .unionByName(
-                    removed.withColumn("change", F.lit("delete")).select(*sel)
-                )
-            )
-        # classify by key identity, null-safe WITH an explicit hit
-        # marker: delete_where's NULL-key law keeps NULL-keyed rows
-        # representable, and an eqNullSafe match on a NULL key still
-        # joins a NULL __rk — only the marker distinguishes "matched
-        # a NULL key" from "no match"
-        removed_keys = (
-            removed.select(F.col(ROW_KEY).alias("__rk"))
-            .distinct()
-            .withColumn("__hit", F.lit(True))
+            # removed row IS a delete — no classification at all
+            change = F.when(net > 0, "insert").otherwise("delete")
+        else:
+            # classify by key identity; the window groups NULL keys
+            # together, which is the null-safe key match delete_where's
+            # NULL-key law needs
+            key = Window.partitionBy(rk)
+            change = F.when(
+                net > 0,
+                F.when(F.max(net < 0).over(key), "update").otherwise("insert"),
+            ).when(~F.max(net > 0).over(key), "delete")
+        # a removed row of a key that also gained rows is subsumed by
+        # the key's update (change NULL); every kept row is replicated
+        # |net| times so multiset multiplicities stay exact
+        return (
+            diff.withColumn("change", change)
+            .filter(F.col("change").isNotNull())
+            .withColumn("__rep", F.explode(F.sequence(F.lit(1), F.abs(net))))
+            .select("change", *cols)
         )
-        added_keys = added.select(F.col(ROW_KEY).alias("__rk")).distinct()
-        labeled_new = (
-            added.join(
-                removed_keys,
-                F.col(ROW_KEY).eqNullSafe(F.col("__rk")),
-                "left",
-            )
-            .withColumn(
-                "change",
-                F.when(F.col("__hit"), F.lit("update")).otherwise(
-                    F.lit("insert")
-                ),
-            )
-            .drop("__rk", "__hit")
-        )
-        deleted = (
-            removed.join(
-                added_keys,
-                F.col(ROW_KEY).eqNullSafe(F.col("__rk")),
-                "left_anti",
-            )
-            .withColumn("change", F.lit("delete"))
-        )
-        sel = ["change"] + cols
-        return labeled_new.select(*sel).unionByName(deleted.select(*sel))
 
     def apply_changes(
         self,
@@ -1000,9 +992,10 @@ class KeyedTableStore:
         The feed is pinned once (:meth:`_pin_batch`) before any write:
         replaying a table's OWN changefeed — or any lazily-read state
         of the target — must not re-evaluate against the generations
-        the replay itself creates.  One diff's inserted /
-        updated / deleted row sets are mutually disjoint (exceptAll
-        construction), so the commits compose order-independently.
+        the replay itself creates.  One diff's put and delete key
+        sets are disjoint (:meth:`read_changes` emits a ``delete`` only
+        for a key that gained no row), so the commits compose
+        order-independently.
         Cost follows the selective paths: O(changed files) per commit,
         never a table rewrite.  Returns the number of rows deleted
         (appended/upserted rows are not separately counted)."""
@@ -1167,12 +1160,13 @@ class KeyedTableStore:
                 table_rows = 0  # footer unreadable: the full rebuild
             n_rows = s["ins"] + s["upd"] + s["del"]
             feed_maintenance = 0 < n_rows * 4 < table_rows
-        # One diff's put/delete key sets are disjoint by exceptAll
-        # construction (n_both == 0) and the puts ride the checkpointed
-        # feed through a plain filter — no pin needed.  An ARBITRARY
-        # feed (e.g. two concatenated diffs) can overlap; those keys
-        # end DELETED, so the overlap is anti-joined out and pinned
-        # once for the rewrite and every index projection (ADVICE r12).
+        # One diff's put/delete key sets are disjoint (read_changes
+        # drops a removed row whose key gained rows; n_both == 0) and
+        # the puts ride the pinned feed through a plain filter.  An
+        # ARBITRARY feed (e.g. two concatenated diffs) can overlap;
+        # those keys end DELETED, so the overlap is anti-joined out and
+        # pinned once for the rewrite and every index projection
+        # (ADVICE r12).
         if s["n_both"]:
             puts_alive = puts.join(
                 F.broadcast(del_keys), ROW_KEY, "left_anti"
@@ -1654,9 +1648,10 @@ class KeyedTableStore:
         files that pass span pruning AND whose per-file row-key Bloom
         filter may contain one of the keys — the HBase ``Get``-skips-
         HFiles-via-bloom-block fast path.  A file without a sidecar
-        stays a candidate; any probe failure degrades to the plain
-        full-table ``isin`` scan (the filter is a cache, never a
-        correctness dependency)."""
+        stays a candidate, a malformed sidecar reads as absent, and an
+        unreadable data-file footer degrades to the plain full-table
+        ``isin`` scan (the filter is a cache, never a correctness
+        dependency)."""
         keys = list(keys)
         cond = F.col(ROW_KEY).isin(keys)
         spec = self.registry.get(qualified_name)
@@ -1675,8 +1670,11 @@ class KeyedTableStore:
                 span = (None, None)  # incomparable keys: no span bound
             try:
                 cands = self._candidate_files(spec, path, span, keys)
-            except Exception:
-                cands = None  # probe failure: fall back to the full scan
+            except (OSError, ValueError, RuntimeError):
+                # a damaged or foreign data file's footer (unreadable,
+                # ArrowInvalid, no row_key column): the full scan plans
+                # without footers; any other error is a bug and surfaces
+                cands = None
             if cands is not None:
                 if not cands:
                     return self.spark.createDataFrame([], spec.schema())
@@ -5076,20 +5074,12 @@ class KeyedTableStore:
             path = self.table_path(spec)
             stats: dict = {}
             files = self._candidate_files(spec, path, (key, key), None, stats)
-            cur_row, present = self._point_row(spec, path, files, key)
-            if not predicate(cur_row, present):
+            cur_row, home = self._point_row(spec, path, files, key)
+            if not predicate(cur_row, home is not None):
                 return False, False, None
-            if present:
-                affected = self._locate_affected_files(
-                    spec,
-                    lambda d: d.join(F.broadcast(keys), ROW_KEY, "left_semi"),
-                    files=files,
-                )
-            else:
-                # the check read just scanned these files and found no
-                # row: the locate is provably empty — the insert-style
-                # checkAndPut appends a fresh run without the job
-                affected = {}
+            # the check read located the key's one row (or proved it
+            # absent: the insert-style checkAndPut appends a fresh run)
+            affected = {} if home is None else {home: 1}
             changed = self._upsert_rewrite(
                 spec, qualified_name, incoming, (keys, [key]), affected,
                 path, schema, async_index,
@@ -5126,22 +5116,16 @@ class KeyedTableStore:
         def attempt():
             path = self.table_path(spec)
             files = self._candidate_files(spec, path, (check_key, check_key))
-            cur_row, present = self._point_row(
-                spec, path, files, check_key
-            )
-            current = cur_row[idx] if present else None
+            cur_row, home = self._point_row(spec, path, files, check_key)
+            current = cur_row[idx] if home is not None else None
             if current != expected:
                 return False, False, None
-            if not present:
+            if home is None:
                 return True, False, None  # nothing to delete; check passed
-            affected = self._locate_affected_files(
-                spec, lambda d: d.filter(cond), files=files
-            )
-            if not affected:
-                return True, False, None
-            n = sum(affected.values())
+            # the check read located the key's one row
+            affected = {home: 1}
             changed = self._capture_changed_keys(
-                spec, affected, lambda d: d.filter(cond), n, async_index,
+                spec, affected, lambda d: d.filter(cond), 1, async_index,
                 path=path,
             )
             # same NULL-predicate law as delete_where: a NULL-key row
@@ -5481,20 +5465,25 @@ class KeyedTableStore:
     def _point_row(
         self, spec: TableSpec, path: str, files: list[str], key
     ) -> tuple:
-        """``(row, row_present)`` — the key's WHOLE current row in one
-        resolved generation (``None, False`` when absent; a NULL
+        """``(row, home)`` — the key's WHOLE current row in one resolved
+        generation as a tuple of the schema columns, and the basename of
+        the data file holding it (``None, None`` when absent; a NULL
         qualifier on a present row reads as None in its slot — "no
-        cell" to a check, matching HBase).  More than one physical row
-        for the key is ambiguous for a conditional mutation (versioned
-        tables need an explicit as-of read) and raises rather than
-        guessing."""
+        cell" to a check, matching HBase).  ``home`` is the conditional
+        mutation's whole locate: the one read serves the check AND the
+        rewrite's affected file.  More than one physical row for the
+        key is ambiguous for a conditional mutation (versioned tables
+        need an explicit as-of read) and raises rather than guessing."""
+        import urllib.parse
+
         if not files:
-            return None, False
+            return None, None
         refs = self._span_refs(path)
         rows = (
             self.spark.read.schema(spec.schema())
             .parquet(*[self._file_abs(path, f, refs) for f in files])
             .filter(F.col(ROW_KEY) == F.lit(key))
+            .select("*", F.input_file_name().alias("__f"))
             .take(2)
         )
         if len(rows) > 1:
@@ -5504,7 +5493,10 @@ class KeyedTableStore:
                 "(versioned tables: compact_versions first or use the "
                 "as-of read surface)"
             )
-        return (rows[0], True) if rows else (None, False)
+        if not rows:
+            return None, None
+        home = os.path.basename(urllib.parse.urlparse(rows[0]["__f"]).path)
+        return tuple(rows[0])[:-1], home
 
     # -- DELETE / UPDATE (HBase Delete mutation / checked Put analogue) ---
     def _locate_affected_files(
@@ -5901,8 +5893,8 @@ class KeyedTableStore:
         and types — the frame a changefeed ``delete`` row set already
         has).  Matching is null-safe on EVERY column, and removal is
         MULTISET-exact (``exceptAll``): a batch listing a duplicated
-        cell once removes one physical copy, mirroring how
-        :meth:`read_changes` counts multiplicities — so replica
+        cell once removes one physical copy, mirroring the per-row net
+        count :meth:`read_changes` emits as multiplicity — so replica
         convergence holds even for degenerate duplicate cells.
 
         Same selective-rewrite cost law as :meth:`delete_keys`: the

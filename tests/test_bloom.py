@@ -485,6 +485,37 @@ def test_unpack_rejects_absurd_hash_count(store):
     assert table() == want
 
 
+def test_get_falls_back_only_on_damaged_footers(store, monkeypatch):
+    """get()'s candidate planning degrades to the full ``isin`` scan
+    when a data file's footer is unreadable (pyarrow raises
+    ``ArrowInvalid`` on a damaged footer), but a programming error in
+    the planning surfaces instead of silently turning every point read
+    into a full scan."""
+    import pyarrow as pa
+
+    _make_table(store, "tdmg", n=50)
+
+    def bug(*a, **k):
+        raise AttributeError("planning bug")
+
+    with monkeypatch.context() as m:
+        m.setattr(bloom, "file_survives_point_sets", bug)
+        with pytest.raises(AttributeError, match="planning bug"):
+            store.get("bl.tdmg", ["k0011"])
+
+    def damaged(full):
+        raise pa.ArrowInvalid(f"Parquet magic bytes not found: {full}")
+
+    # no span stats: every candidate file reads its (damaged) footer
+    monkeypatch.setattr(
+        KeyedTableStore, "_load_span_stats", staticmethod(lambda path: {})
+    )
+    monkeypatch.setattr(
+        KeyedTableStore, "_footer_key_stats", staticmethod(damaged)
+    )
+    assert store.get("bl.tdmg", ["k0011"]).collect()[0]["cf:v"] == 77
+
+
 def test_uppercase_property_key_enables_blooms(store):
     """HBase spells the attribute BLOOMFILTER; the property lookup is
     case-insensitive so the conventional spelling works."""

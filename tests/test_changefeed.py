@@ -4,8 +4,8 @@
 from the storage layout itself: hardlink-carried files are
 byte-identical across generations (and into snapshots) by the store's
 immutability law, so the diff reads ONLY the symmetric difference of
-the two file listings, then ``exceptAll`` drops rewritten-but-unchanged
-rows.  This suite pins:
+the two file listings, then a per-row net count over one ``row_key``
+exchange drops rewritten-but-unchanged rows.  This suite pins:
 
 - classification: update (new row) / insert / delete across one
   MERGE and one DELETE generation;
@@ -136,6 +136,118 @@ def test_changes_null_key_update_classifies_as_update(store, spark):
     )
     got = _changes(store.read_changes("cdc.nullkey", versus="previous"))
     assert got == {("update", None, 5)}
+
+
+def _reference_feed(base_rows, cur_rows, cells):
+    """The changefeed as pure multiset arithmetic over two collected
+    table states: added = current - base, removed = base - current
+    (multiplicities kept); by key, an added row is an update when its
+    key also lost rows, else an insert, and a removed row is a delete
+    only when its key gained none.  Python equality is null-safe."""
+    from collections import Counter
+
+    base, cur = Counter(base_rows), Counter(cur_rows)
+    added, removed = cur - base, base - cur
+    out: Counter = Counter()
+    gained = {r[0] for r in added}
+    lost = {r[0] for r in removed}
+    for r, n in added.items():
+        tag = "update" if not cells and r[0] in lost else "insert"
+        out[(tag,) + r] += n
+    for r, n in removed.items():
+        if cells or r[0] not in gained:
+            out[("delete",) + r] += n
+    return out
+
+
+def test_read_changes_matches_multiset_reference(store, spark):
+    """The feed is exact multiset arithmetic, at both granularities:
+    duplicate physical rows keep their multiplicities (two more copies
+    of a twice-stored row are TWO inserts, one removed copy of a
+    thrice-stored row ONE delete, a deleted thrice-stored key THREE
+    deletes), the NULL key classifies like any other key, NULL cells
+    group as equal, and a key removed and re-added with identical
+    content emits nothing."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(1608)
+
+    def val():
+        return None if rng.random() < 0.2 else rng.randrange(1000)
+
+    base = [(f"a{i:03d}", val()) for i in range(40)]
+    base += [("d001", 1)] * 2 + [("d002", 2)] * 3 + [("d003", 3)] * 3
+    base += [(None, 5), ("r001", 11), ("u001", 1), ("x001", 2)]
+    _mk(store, spark, "msref", base, split_keys=["a020", "d"])
+    store.snapshot("cdc.msref", "msref_s")
+    before = [tuple(r) for r in store.read("cdc.msref").collect()]
+    assert Counter(before) == Counter(base)
+
+    a_keys = [f"a{i:03d}" for i in range(40)]
+    rng.shuffle(a_keys)
+    frame = "row_key string, `cf:v` long"
+    store.upsert("cdc.msref", spark.createDataFrame(
+        [(k, val()) for k in a_keys[:6]] + [("u001", 100)], frame
+    ))
+    store.delete_keys("cdc.msref", spark.createDataFrame(
+        [(k,) for k in a_keys[6:10]]
+        + [("x001",), ("r001",), ("d003",), (None,)],
+        "row_key string",
+    ))
+    store.insert("cdc.msref", spark.createDataFrame(
+        [("r001", 11), ("n001", 7), ("d001", 1), ("d001", 1), (None, 6)],
+        frame,
+    ))
+    # multiset-exact: one listed cell removes one of the three copies
+    store.delete_cells("cdc.msref", spark.createDataFrame([("d002", 2)], frame))
+    after = [tuple(r) for r in store.read("cdc.msref").collect()]
+    assert Counter(after)[("d001", 1)] == 4
+    assert Counter(after)[("d002", 2)] == 2
+
+    for cells in (False, True):
+        feed = store.read_changes("cdc.msref", versus="msref_s", cells=cells)
+        got = Counter(
+            tuple(r) for r in feed.select("change", "row_key", "`cf:v`").collect()
+        )
+        want = _reference_feed(before, after, cells)
+        assert got == want, (cells, got, want)
+        assert not any(k == "r001" for _, k, _ in got)
+    # the fixture holds the cases it claims
+    key_feed = _reference_feed(before, after, False)
+    assert key_feed[("insert", "d001", 1)] == 2
+    assert key_feed[("delete", "d002", 2)] == 1
+    assert key_feed[("delete", "d003", 3)] == 3
+    assert key_feed[("update", None, 6)] == 1
+
+
+def test_read_changes_single_shuffle(store, spark):
+    """The diff and its key classification ride ONE row_key exchange:
+    with AQE off, each granularity's executed plan has exactly one
+    Exchange, so the changed rows are shuffled once."""
+    _mk(store, spark, "oneshuf", [(f"k{i:03d}", i) for i in range(30)])
+    store.snapshot("cdc.oneshuf", "oneshuf_s")
+    store.upsert("cdc.oneshuf", spark.createDataFrame(
+        [("k003", 300), ("z001", 1)], "row_key string, `cf:v` long"
+    ))
+    store.delete_keys(
+        "cdc.oneshuf", spark.createDataFrame([("k007",)], "row_key string")
+    )
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for cells in (False, True):
+            feed = store.read_changes(
+                "cdc.oneshuf", versus="oneshuf_s", cells=cells
+            )
+            plan = feed._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("Exchange") == 1, (cells, plan)
+            got = _changes(feed)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert got == {
+        ("insert", "k003", 300), ("delete", "k003", 3),
+        ("insert", "z001", 1), ("delete", "k007", 7),
+    }
 
 
 def test_changes_errors_are_loud(store, spark):
@@ -740,9 +852,11 @@ def test_dml_job_counts_stay_fused(store, spark):
     replay is ONE locate+rewrite+swap commit, and every batch entry
     point pins its batch once as a driver-resident Arrow local relation
     (one bounded collect, no statistics, probe-key or new-run probe
-    jobs).  Bounds are the measured counts, identical in both storage
-    modes; a regression to the checkpoint-and-probe batch handling or
-    to the pre-fusion sequential replay (41+ jobs) fails loudly."""
+    jobs), and the changefeed itself is one row_key exchange.  Bounds
+    are the measured counts, identical in both storage modes; a
+    regression to the checkpoint-and-probe batch handling, to the
+    stacked-exceptAll feed (9 jobs) or to the pre-fusion sequential
+    replay (41+ jobs) fails loudly."""
     sc = spark.sparkContext
     tag = "man" if store.manifest_authority else "pos"
 
@@ -776,15 +890,19 @@ def test_dml_job_counts_stay_fused(store, spark):
     store.export_snapshot("jp_s1", replica.warehouse_dir)
     n = jobs("jp_clone", lambda: replica.clone_snapshot("jp_s1", "cdc.jobpin"))
     assert n == 0, f"clone_snapshot ran {n} jobs"
+    # the feed is one row_key exchange: its map stage and its result
+    n = jobs("jp_feed", lambda: feed.collect())
+    assert n <= 2, f"collecting the changefeed grew to {n} jobs"
     n = jobs("jp_apply", lambda: replica.apply_changes("cdc.jobpin", feed))
-    assert n <= 20, f"apply_changes replay grew to {n} jobs"
+    assert n <= 13, f"apply_changes replay grew to {n} jobs"
     # and the replay converged (the pin must never trade correctness)
     src = store.read("cdc.jobpin")
     dst = replica.read("cdc.jobpin")
     assert dst.exceptAll(src).unionAll(src.exceptAll(dst)).isEmpty()
 
     # the remaining keyed DML entry points, each on one key (measured
-    # 4 / 4 / 4 / 7 / 5 / 6 / 4 jobs in both storage modes)
+    # 4 / 4 / 4 / 7 / 3 / 3 / 4 jobs in both storage modes; the
+    # conditional mutations' point read is also their locate)
     def one(label, fn, bound, want):
         got = []
         n = jobs(label, lambda: got.append(fn()))
@@ -802,9 +920,9 @@ def test_dml_job_counts_stay_fused(store, spark):
         spark.createDataFrame([("k050", 50)], "row_key string, `cf:v` long"),
     ), 7, 1)
     one("jp_check_delete", lambda: store.check_and_delete(
-        "cdc.jobpin", "k060", "cf:v", 60), 8, True)
+        "cdc.jobpin", "k060", "cf:v", 60), 3, True)
     one("jp_check_put", lambda: store.check_and_put(
-        "cdc.jobpin", "k070", "cf:v", 70, {"cf:v": 7070}), 9, True)
+        "cdc.jobpin", "k070", "cf:v", 70, {"cf:v": 7070}), 3, True)
     one("jp_mutate", lambda: [r["applied"] for r in store.mutate(
         "cdc.jobpin", [
             {"op": "put", "key": "k080", "row": {"cf:v": 8080}},
