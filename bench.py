@@ -430,72 +430,6 @@ def _production_paths(spark, sf_dir: str) -> dict[str, float]:
         shutil.rmtree(src_store.warehouse_dir, ignore_errors=True)
         shutil.rmtree(dst_wh, ignore_errors=True)
 
-    # round-10: manifests-as-listing DML — one selective MERGE on a
-    # manifest_authority store (membership from the span manifest,
-    # carry = manifest references, zero hardlinks on the carry).  The
-    # timer covers the upsert ALONE (table build outside it — unlike
-    # the k12 gate, whose figure includes its CTAS+readback), so the
-    # number tracks the mode's commit cost round over round; it is not
-    # directly comparable to k12's end-to-end figure.
-    ma_store = KeyedTableStore(
-        spark, tempfile.mkdtemp(prefix="bench_ma_"), manifest_authority=True
-    )
-    try:
-        cust = table(spark, sf_dir, "customer")
-        ma_store.ctas(
-            TableSpec(
-                namespace="bench", name="ma", key_type="string",
-                families={"c": {"bal": "double"}},
-            ),
-            cust.select(
-                F.lpad(F.col("c_custkey").cast("string"), 10, "0")
-                .alias("row_key"),
-                F.col("c_acctbal").alias("c:bal"),
-            ),
-            mode="overwrite",
-        )
-        t0 = time.perf_counter()
-        ma_store.upsert(
-            "bench.ma",
-            cust.filter("c_custkey % 16 = 0").select(
-                F.lpad(F.col("c_custkey").cast("string"), 10, "0")
-                .alias("row_key"),
-                (F.col("c_acctbal") + 1).alias("c:bal"),
-            ),
-        )
-        out["ma_merge_upsert"] = round(time.perf_counter() - t0, 3)
-        n = ma_store.read("bench.ma").count()
-        n_cust = cust.count()
-        assert n == n_cust, f"manifest-mode MERGE diverged: {n} != {n_cust}"
-        print(f"# ma_merge_upsert: {out['ma_merge_upsert']}s rows={n} "
-              f"(manifest-authority layout)", file=sys.stderr)
-        # round-11: manifest-authority READ figures (VERDICT r10 item 7)
-        # — membership resolution costs one span-manifest JSON read per
-        # generation per op, and the post-MERGE table here carries refs
-        # across two generations, so these timers keep that overhead
-        # visible round over round as file counts grow.  ma_scan = full
-        # membership-aware scan + aggregate; ma_point_get = the bloom/
-        # span-pruned multi-Get fast path.
-        t0 = time.perf_counter()
-        agg = ma_store.read("bench.ma").agg(
-            F.count("*").alias("n"), F.sum("`c:bal`").alias("s")
-        ).collect()
-        out["ma_scan"] = round(time.perf_counter() - t0, 3)
-        assert agg[0]["n"] == n_cust
-        point_keys = [
-            f"{k:010d}" for k in (16, 160, 1600)
-        ]
-        t0 = time.perf_counter()
-        got = ma_store.get("bench.ma", point_keys).count()
-        out["ma_point_get"] = round(time.perf_counter() - t0, 3)
-        assert got >= 1, "manifest-mode point get returned nothing"
-        print(f"# ma_scan: {out['ma_scan']}s  ma_point_get: "
-              f"{out['ma_point_get']}s (manifest-authority layout)",
-              file=sys.stderr)
-    finally:
-        import shutil
-
-        shutil.rmtree(ma_store.warehouse_dir, ignore_errors=True)
     return out
 
 

@@ -32,31 +32,10 @@ def _store(spark: SparkSession):
     return KeyedTableStore(spark, tempfile.mkdtemp(prefix="keyed_wh_"))
 
 
-def _store_ma(spark: SparkSession):
-    """Manifest-authority store (manifests-as-listing layout)."""
-    from spark_sql_hbase_spark.sources.keyed_parquet import KeyedTableStore
-
-    return KeyedTableStore(
-        spark, tempfile.mkdtemp(prefix="keyed_ma_"), manifest_authority=True
-    )
-
-
 def _session(spark: SparkSession):
     from spark_sql_hbase_spark.session import EngineSession
 
     return EngineSession(spark=spark, warehouse_dir=tempfile.mkdtemp(prefix="keyed_wh_"))
-
-
-def _session_ma(spark: SparkSession):
-    """Engine session over a manifests-as-listing warehouse — the
-    100 TB-layout SQL surface (router-resolved dot-qualified names)."""
-    from spark_sql_hbase_spark.session import EngineSession
-
-    return EngineSession(
-        spark=spark,
-        warehouse_dir=tempfile.mkdtemp(prefix="keyed_ma_wh_"),
-        manifest_authority=True,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1668,15 +1647,12 @@ def zh07_versioned_cell_replication(
 
 
 # ---------------------------------------------------------------------------
-# k28 — manifests-as-listing mode end to end under the driver oracle
-# (the round-10 structural mode; storage_io.py item 4 made executable):
-# a manifest_authority store CTASes `part` into declared regions, runs
-# one selective MERGE and one selective DELETE confined to region 0 —
-# so regions 1-3 carry as manifest REFERENCES, asserted in-gate as NOT
-# physically present in the new generation — and a STRAY parquet file
-# is dropped into the live generation directory before the final read:
-# the oracle comparison itself proves membership authority (a
-# directory-listing read would return the stray's row and hash-fail).
+# k28 — selective DML with zero-copy carry under the driver oracle (the
+# name is kept from the store's retired manifest mode): a store CTASes
+# `part` into declared regions, runs one selective MERGE and one
+# selective DELETE confined to region 0, and asserts in-gate that the
+# untouched regions 1-3 are carried zero-copy — the current
+# generation's copies share an inode with the files the CTAS wrote.
 # ---------------------------------------------------------------------------
 @register(
     "k28_manifest_mode_dml",
@@ -1687,14 +1663,14 @@ def zh07_versioned_cell_replication(
     FROM part
     WHERE NOT (p_partkey % 33 = 0 AND p_partkey < 50)
     """,
-    description="manifests-as-listing mode: selective MERGE + DELETE with "
-    "reference carry (no hardlinks), stray file ignored by membership — "
-    "content proven by the oracle",
+    description="selective MERGE + DELETE confined to one region: the "
+    "untouched regions carry as hardlinks of the CTAS files — content "
+    "proven by the oracle",
 )
 def k28_manifest_mode_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_sql_hbase_spark.catalog import TableSpec
 
-    store = _store_ma(spark)
+    store = _store(spark)
     p = table(spark, sf_dir, "part")
     key = F.lpad(F.col("p_partkey").cast("string"), 10, "0").alias("row_key")
     spec = TableSpec(
@@ -1709,8 +1685,11 @@ def k28_manifest_mode_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         mode="overwrite",
     )
     path0 = store.table_path(spec)
-    members0 = set(store._data_files(path0))
-    # region-0-confined DMLs: regions 1-3 carry as references
+    inode0 = {
+        f: os.stat(os.path.join(path0, f)).st_ino
+        for f in store._data_files(path0)
+    }
+    # region-0-confined DMLs: regions 1-3 carry untouched
     store.upsert(
         "gate.part_ma",
         p.filter("p_partkey % 8 = 0 AND p_partkey < 50").select(
@@ -1722,26 +1701,11 @@ def k28_manifest_mode_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(row_key AS BIGINT) % 33 = 0 AND CAST(row_key AS BIGINT) < 50",
     )
     path = store.table_path(spec)
-    refs = store._span_refs(path)
-    carried = members0 & set(store._data_files(path))
-    assert carried and refs, "expected reference-carried members"
-    assert any(
-        f in refs and not os.path.exists(os.path.join(path, f))
-        for f in carried
-    ), "carry must be a manifest reference, not a physical file"
-    # stray injection: membership authority must keep it invisible —
-    # the ORACLE comparison fails if a directory-listing read leaks it
-    stray_src = os.path.join(store.warehouse_dir, "_stray_src")
-    spark.createDataFrame(
-        [("9999999999", -1.0)], "row_key string, `p:price` double"
-    ).coalesce(1).write.mode("overwrite").parquet(stray_src)
-    stray = next(
-        f for f in os.listdir(stray_src) if f.endswith(".parquet")
-    )
-    os.rename(
-        os.path.join(stray_src, stray),
-        os.path.join(path, "part-stray-00000000.parquet"),
-    )
+    carried = set(inode0) & set(store._data_files(path))
+    assert len(carried) >= 3, "expected the untouched regions carried"
+    assert all(
+        os.stat(os.path.join(path, f)).st_ino == inode0[f] for f in carried
+    ), "carry must be zero-copy (a hardlink of the CTAS file)"
     return store.read("gate.part_ma").select(
         "row_key", F.col("`p:price`").alias("price")
     )
@@ -1818,17 +1782,12 @@ def k29_batch_presplit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# zg33 — dot-qualified SQL over a manifest-authority store (round-11
-# surface, registered z-tier for sf001-lane evidence ahead of an r12
-# promotion): the reference's headline `ns.table` SQL flow
-# (HBaseSessionCatalog.scala:63-102, README.md:47) running against the
-# manifests-as-listing layout.  The router resolves `gate.ma_sql`
-# references to the membership-aware read at dispatch time
-# (sqlfront.resolve_keyed_dotted_names), so the SELECT readback proves
-# membership through the SQL surface itself: a stray parquet dropped
-# into the live generation directory makes the ORACLE comparison fail
-# if any resolution path leaks a directory listing.  Content is a pure
-# function of `part`.
+# zg33 — dot-qualified SQL over an engine session (the name is kept
+# from the store's retired manifest mode): the reference's headline
+# `ns.table` SQL flow (HBaseSessionCatalog.scala:63-102, README.md:47)
+# — CREATE, INSERT, UPDATE, DELETE and SELECT on `gate.ma_sql`, the
+# reads resolving through the table's session-catalog registration.
+# Content is a pure function of `part`.
 # ---------------------------------------------------------------------------
 @register(
     "zg33_manifest_dotted_sql",
@@ -1840,11 +1799,10 @@ def k29_batch_presplit(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE NOT (p_partkey % 25 = 0 AND p_partkey < 60)
     """,
     description="dot-qualified SQL (CREATE/INSERT/UPDATE/DELETE/SELECT "
-    "ns.name) over a manifests-as-listing store — router name resolution, "
-    "stray invisible, content proven by the oracle",
+    "ns.name) over a keyed warehouse — content proven by the oracle",
 )
 def zg33_manifest_dotted_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sess = _session_ma(spark)
+    sess = _session(spark)
     p = table(spark, sf_dir, "part")
     p.select(
         F.lpad(F.col("p_partkey").cast("string"), 10, "0").alias("row_key"),
@@ -1865,25 +1823,6 @@ def zg33_manifest_dotted_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DELETE FROM gate.ma_sql WHERE CAST(row_key AS BIGINT) % 25 = 0 "
         "AND CAST(row_key AS BIGINT) < 60"
     )
-    # stray injection: the dot-qualified SELECT below must not see it
-    spec = sess.store.registry.get("gate.ma_sql")
-    path = sess.store.table_path(spec)
-    stray_src = os.path.join(sess.store.warehouse_dir, "_stray_src")
-    spark.createDataFrame(
-        [("9999999999", -1.0)], "row_key string, `p:price` double"
-    ).coalesce(1).write.mode("overwrite").parquet(stray_src)
-    stray = next(f for f in os.listdir(stray_src) if f.endswith(".parquet"))
-    os.rename(
-        os.path.join(stray_src, stray),
-        os.path.join(path, "part-stray-00000000.parquet"),
-    )
-    # force a re-resolution AFTER the stray lands: the router serves
-    # reads from the membership-aware view, which refresh re-registers
-    # from CURRENT membership — a directory-listing regression would
-    # pick the stray up here and fail the oracle comparison (without
-    # this, the view's file list pinned at the DELETE would hide the
-    # stray no matter how membership is computed)
-    sess.store.refresh("gate.ma_sql")
     # the reference's headline flow: dot-qualified SELECT (with an
     # aggregate guard proving the same resolution serves subqueries)
     n = sess.sql(
@@ -1897,14 +1836,12 @@ def zg33_manifest_dotted_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# zg34 — covered secondary index under manifests-as-listing (round-11
-# surface, z-tier for sf001-lane evidence ahead of an r12 promotion):
-# the zf03 index-only range scan composed with manifest-authority
-# storage AND a post-index MERGE, so the gate proves index freshness
-# after DML — the Phoenix-style incremental maintenance path
-# (selective delete + append) — running entirely on manifest
-# membership.  Oracle: the value predicate over the source with the
-# MERGE applied; the index-only scan must reproduce it exactly.
+# zg34 — covered secondary index after DML (the name is kept from the
+# store's retired manifest mode): the zf03 index-only range scan
+# composed with a post-index MERGE, so the gate proves index freshness
+# after DML — the Phoenix-style incremental maintenance path (selective
+# delete + append).  Oracle: the value predicate over the source with
+# the MERGE applied; the index-only scan must reproduce it exactly.
 # ---------------------------------------------------------------------------
 @register(
     "zg34_manifest_covered_index",
@@ -1916,13 +1853,13 @@ def zg33_manifest_dotted_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WHERE c_nationkey = 5
     """,
-    description="covered index + post-index MERGE under manifest-authority "
-    "storage: index-only range scan stays exact, index table carries refs",
+    description="covered index + post-index MERGE: the index-only range "
+    "scan stays exact after incremental maintenance",
 )
 def zg34_manifest_covered_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_sql_hbase_spark.catalog import TableSpec
 
-    store = _store_ma(spark)
+    store = _store(spark)
     c = table(spark, sf_dir, "customer")
     rows = c.select(
         F.lpad(F.col("c_custkey").cast("string"), 10, "0").alias("row_key"),
@@ -1947,8 +1884,7 @@ def zg34_manifest_covered_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_width=5,
         mode="overwrite",
     )
-    # post-index MERGE: maintenance must keep the index exact, and in
-    # manifest mode its rewrite carries unchanged index members as refs
+    # post-index MERGE: maintenance must keep the index exact
     store.upsert(
         "gate.cust_mai",
         c.filter("c_custkey % 40 = 0").select(
@@ -1958,10 +1894,6 @@ def zg34_manifest_covered_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("c_acctbal") + 10.0).alias("c:acctbal"),
         ),
     )
-    # (no carried-refs assert here: at the smoke/driver SFs the index
-    # is a single file, so the incremental rewrite touches it whole —
-    # manifest-mode carry mechanics are pinned by
-    # test_manifest_authority.py::test_covered_index_under_manifest_mode)
     idx = store.read("gate.cust_mai_by_nation")
     return idx.filter(
         (F.col("row_key") >= "00005|") & (F.col("row_key") < "00005}")

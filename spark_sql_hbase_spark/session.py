@@ -104,7 +104,6 @@ class EngineSession:
         spark: SparkSession | None = None,
         registry_path: str | None = None,
         warehouse_dir: str | None = None,
-        manifest_authority: bool = False,
     ):
         self.spark = spark or build_spark()
         # imported lazily to avoid a cycle at package import time
@@ -117,16 +116,7 @@ class EngineSession:
             from spark_sql_hbase_spark.sources.keyed_parquet import KeyedTableStore
             from spark_sql_hbase_spark.sqlfront import KeyedSqlRouter
 
-            # manifest_authority: the manifests-as-listing storage layout
-            # (see KeyedTableStore) — SQL routes through the store, and
-            # the router resolves dot-qualified ``ns.name`` references
-            # to the membership-aware temp views at dispatch time
-            # (no session-catalog TABLE entry can serve a manifest
-            # listing; see sqlfront.resolve_keyed_dotted_names)
-            self.store = KeyedTableStore(
-                self.spark, warehouse_dir, self.registry,
-                manifest_authority=manifest_authority,
-            )
+            self.store = KeyedTableStore(self.spark, warehouse_dir, self.registry)
             self.store.bootstrap_views()
             self._router = KeyedSqlRouter(self.store)
 

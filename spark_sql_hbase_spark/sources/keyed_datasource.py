@@ -73,58 +73,17 @@ class RegionPartition(InputPartition):
     path: str
 
 
-def _list_region_files(
-    table_dir: str, manifest_authority: bool = False
-) -> list[str]:
-    """Region files of one table directory, sorted for deterministic
-    partition order.
+def _list_region_files(table_dir: str) -> list[str]:
+    """Region files of one table directory — its non-empty ``*.parquet``,
+    the store's membership rule — sorted for deterministic partition
+    order.
 
     Filesystem boundary (same contract as the store's directory
     protocol): ``os.listdir``/``os.path.getsize`` assume a LOCAL or
-    POSIX filesystem — the sandbox contract, also served by
-    fuse/NFS-mounted HDFS.  Pointing a DataSource at an object store
-    (S3 et al.) needs a Hadoop-FS/pyarrow.fs listing here AND a
-    manifest service in front of the store's atomic-rename swap;
-    neither is silently emulated.
-
-    ``manifest_authority=True`` (the ``.option("manifest_authority",
-    "true")`` read option, matching a store opened with the same flag):
-    membership comes from the generation's span manifest ``listing``
-    (stray directory entries ignored) and reference-carried members
-    resolve to their original generation directory — the same rules
-    :meth:`KeyedTableStore._data_files`/:meth:`_file_abs` apply.  The
-    flag is explicit rather than inferred so the POSIX default surface
-    (directory = membership) stays consistent between the store and
-    the DataSource."""
-    if manifest_authority:
-        from spark_sql_hbase_spark.sources.keyed_parquet import (
-            KeyedTableStore,
-        )
-
-        m = KeyedTableStore._load_span_membership(table_dir)
-        if m is not None:
-            listing, refs = m
-            root = os.path.dirname(table_dir.rstrip("/"))
-            out = []
-            for f in sorted(listing):
-                p = (
-                    os.path.join(root, refs[f], f)
-                    if f in refs
-                    else os.path.join(table_dir, f)
-                )
-                if not (os.path.isfile(p) and os.path.getsize(p) > 0):
-                    # the manifest is the AUTHORITY: a listed member
-                    # with no readable bytes (e.g. a prematurely
-                    # reclaimed source generation behind a carried
-                    # ref) must fail the scan loudly, exactly like the
-                    # store-side read path — silently dropping it
-                    # would shrink query results
-                    raise FileNotFoundError(
-                        f"manifest-listed member {f!r} of {table_dir} "
-                        f"resolves to missing/empty file {p}"
-                    )
-                out.append(p)
-            return out
+    POSIX filesystem, also served by fuse/NFS-mounted HDFS.  Pointing a
+    DataSource at an object store (S3 et al.) needs a Hadoop-FS/
+    pyarrow.fs listing here AND manifest-recorded membership in the
+    store; neither is silently emulated."""
     return sorted(
         os.path.join(table_dir, f)
         for f in os.listdir(table_dir)
@@ -139,43 +98,27 @@ class KeyedTableDataSource(DataSource):
     def name(cls) -> str:
         return "keyedtable"
 
-    @staticmethod
-    def _manifest_opt(options) -> bool:
-        return str(options.get("manifest_authority", "")).lower() == "true"
-
     def schema(self) -> StructType:
         # infer from the first region file's footer when not supplied
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        files = _list_region_files(
-            self.options["path"], self._manifest_opt(self.options)
-        )
+        files = _list_region_files(self.options["path"])
         if not files:
             raise FileNotFoundError(f"no region files under {self.options['path']}")
         return from_arrow_schema(pq.read_schema(files[0]))
 
     def reader(self, schema: StructType) -> "KeyedTableReader":
-        return KeyedTableReader(
-            schema,
-            self.options["path"],
-            manifest_authority=self._manifest_opt(self.options),
-        )
+        return KeyedTableReader(schema, self.options["path"])
 
     def writer(self, schema: StructType, overwrite: bool) -> "KeyedTableWriter":
         return KeyedTableWriter(self.options["path"], overwrite)
 
 
 class KeyedTableReader(DataSourceReader):
-    def __init__(
-        self,
-        schema: StructType,
-        table_dir: str,
-        manifest_authority: bool = False,
-    ):
+    def __init__(self, schema: StructType, table_dir: str):
         self.schema = schema
         self.table_dir = table_dir
-        self.manifest_authority = manifest_authority
         self.pushed: list[Filter] = []
         self.key_bounds: list[tuple[str, object]] = []  # (op, literal) on row_key
 
@@ -271,7 +214,7 @@ class KeyedTableReader(DataSourceReader):
         ``_span_candidates``."""
         import pyarrow.parquet as pq
 
-        files = _list_region_files(self.table_dir, self.manifest_authority)
+        files = _list_region_files(self.table_dir)
         if not self.key_bounds:
             return [RegionPartition(p) for p in files]
         point_sets = self._point_sets()

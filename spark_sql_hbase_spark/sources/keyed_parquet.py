@@ -172,20 +172,6 @@ class TableAlreadyExistsError(ValueError):
     pass
 
 
-class CorruptSpanManifestError(RuntimeError):
-    """The generation's MAIN span manifest exists but cannot be parsed
-    — membership is unrecoverable (append sidecars never carry the
-    base members), so manifest-authority reads/DML must fail LOUDLY
-    rather than fall back to the physical directory listing: that
-    fallback would silently drop every reference-carried member and
-    admit strays.  Distinct from the ``None`` return (no authority
-    information recorded — a directory with no span document that
-    carries a listing — where the physical listing IS the truth).
-    Remediation: restore the manifest from the previous generation / a
-    snapshot, or rebuild it from footer stats via ``compact()`` on a
-    known-good base."""
-
-
 class ConcurrentWriteConflictError(RuntimeError):
     """Another writer committed a generation while this rewrite was
     building against the previous one — the manifest CAS refused the
@@ -251,13 +237,21 @@ class KeyedTableStore:
        :meth:`apply_changes` pass their own attempt bodies (the check
        read, the batched merge, the fused feed replay).
 
+    Membership: a generation's members are exactly its directory's
+    ``*.parquet`` files (:meth:`_data_files`).  A rewrite writes the
+    files it changes into a new generation and carries every other
+    file over as a hardlink under its original name — the reference's
+    snapshot HFile links — so the file-level diffs (:meth:`read_changes`,
+    stats reuse by name) hold by construction, and a retired
+    generation's bytes go when its last link does.
+
     Filesystem boundary: the directory protocol (atomic same-directory
     ``rename``, ``O_CREAT|O_EXCL`` lock files, hardlink carry,
-    ``os.listdir``) assumes a LOCAL or POSIX-renaming filesystem (the
-    sandbox contract; HDFS offers the same rename atomicity through a
-    Hadoop-FS shim).  Object stores without atomic rename (S3 et al.)
-    need a manifest service in front — do not point the warehouse at
-    one expecting these semantics.
+    ``os.listdir``) assumes a LOCAL or POSIX-renaming filesystem (HDFS
+    offers the same rename atomicity through a Hadoop-FS shim).  Object
+    stores without atomic rename or hardlinks (S3 et al.) need
+    membership recorded in manifests instead (``storage_io.py`` item 4)
+    — do not point the warehouse at one expecting these semantics.
     """
 
     def __init__(
@@ -266,7 +260,6 @@ class KeyedTableStore:
         warehouse_dir: str,
         registry: SchemaRegistry | None = None,
         io=None,
-        manifest_authority: bool = False,
     ):
         self.spark = spark
         self.warehouse_dir = warehouse_dir
@@ -276,21 +269,6 @@ class KeyedTableStore:
         # swappable object — sources/storage_io.py documents the
         # HDFS/object-store mapping of each
         self.io = io if io is not None else _storage_io.LocalPosixIO()
-        # manifests-as-listing mode (the Iceberg/Delta membership model,
-        # and the ONE structural change the storage_io HDFS/object-store
-        # mapping needs — ``storage_io.py`` item 4): generation
-        # MEMBERSHIP is read from the span manifest's ``listing`` (stray
-        # files in a generation directory are ignored), and the DML
-        # carry records a manifest REFERENCE to the file's original
-        # generation instead of hardlinking it — ``link_or_copy``
-        # degrades to a no-op on the hot carry path, which is exactly
-        # what backends without hardlinks (HDFS, S3) require.  Physical
-        # reclamation becomes reference-aware: a generation directory
-        # survives sweeps while any live generation still references
-        # files inside it (directory-granularity GC, the
-        # expire-snapshots model).  Default off: the POSIX hardlink
-        # layout remains the sandbox contract.
-        self.manifest_authority = bool(manifest_authority)
         # generations whose span-sidecar backfill failed to WRITE (not
         # mere lock contention) — skip re-attempts for this instance so
         # reads never re-stall on a backfill that cannot succeed
@@ -410,19 +388,6 @@ class KeyedTableStore:
                 m = self._LEASE_MARKER_RE.fullmatch(e)
                 if m and self._flock_live(os.path.join(root, e)):
                     leased.add(m.group(1))
-            if self.manifest_authority:
-                # reference-aware GC: a kept/leased generation's
-                # manifest may carry members by REFERENCE into older
-                # sibling directories — those directories still own
-                # live bytes and must survive (directory-granularity
-                # reclamation, the expire-snapshots model; refs are
-                # flattened at carry time so ONE hop covers the chain)
-                for g in list(keep_now | leased):
-                    if not g:
-                        continue
-                    gp = os.path.join(root, g)
-                    if os.path.isdir(gp):
-                        keep_now |= set(self._span_refs(gp).values())
             for entry in entries:
                 full = os.path.join(root, entry)
                 if entry in (self._GEN_MANIFEST, self._WRITER_LOCK):
@@ -774,14 +739,6 @@ class KeyedTableStore:
     # -- read path (A1/A9: scan with pruning + pushdown via Catalyst) -----
     def read(self, qualified_name: str) -> DataFrame:
         spec = self.registry.get(qualified_name)
-        if self.manifest_authority:
-            # membership is what the manifest says: pass the explicit
-            # resolved scan list (a directory read would include stray
-            # files and miss reference-carried members)
-            files = self._gen_file_paths(self.table_path(spec))
-            if not files:
-                return self.spark.createDataFrame([], spec.schema())
-            return self.spark.read.schema(spec.schema()).parquet(*files)
         return self.spark.read.schema(spec.schema()).parquet(self.table_path(spec))
 
     def read_generation(
@@ -811,11 +768,6 @@ class KeyedTableStore:
                 f"{qualified_name} has no previous generation "
                 "(no table rewrite since creation)"
             )
-        if self.manifest_authority:
-            files = self._gen_file_paths(os.path.join(root, prev))
-            if not files:
-                return self.spark.createDataFrame([], spec.schema())
-            return self.spark.read.schema(spec.schema()).parquet(*files)
         return self.spark.read.schema(spec.schema()).parquet(
             os.path.join(root, prev)
         )
@@ -903,9 +855,8 @@ class KeyedTableStore:
             names = sorted(names)
             if not names:
                 return self.spark.createDataFrame([], schema)
-            refs = self._span_refs(dirp)
             return self.spark.read.schema(schema).parquet(
-                *[self._file_abs(dirp, f, refs) for f in names]
+                *[os.path.join(dirp, f) for f in names]
             )
 
         cur_df = _rd(cur_dir, cur_files - base_files)
@@ -1189,9 +1140,8 @@ class KeyedTableStore:
                 # matches in the same job
                 import urllib.parse
 
-                refs = self._span_refs(path)
                 cur = self.spark.read.schema(schema).parquet(
-                    *[self._file_abs(path, f, refs) for f in candidates]
+                    *[os.path.join(path, f) for f in candidates]
                 )
                 rows = (
                     cur.join(
@@ -1317,9 +1267,8 @@ class KeyedTableStore:
                     # generation is invisible (they are not in the list)
                     # — every action on the leased frame reads the same
                     # complete, consistent state
-                    refs = self._span_refs(path)
                     files = [
-                        self._file_abs(path, f, refs)
+                        os.path.join(path, f)
                         for f in self._data_files(path)
                     ]
                     stack.enter_context(self._marker_guard(
@@ -1348,7 +1297,7 @@ class KeyedTableStore:
 
         def entry_for(name: str, data_dir: str) -> dict:
             try:
-                files = self._list_parquet(data_dir)
+                files = self._data_files(data_dir)
             except OSError:
                 # swept by a concurrent writer between the root listing
                 # and this walk — it no longer exists to report
@@ -1574,7 +1523,6 @@ class KeyedTableStore:
         cursor bound and the cap pushed into the parquet scan — O(page)
         rows however deep the cursor is."""
         path = self.table_path(spec)
-        refs = self._span_refs(path)
         cond = F.lit(True)
         if after_key is not None:
             cond = F.col(ROW_KEY) > after_key
@@ -1582,7 +1530,7 @@ class KeyedTableStore:
             cond = cond & (F.col(ROW_KEY) < F.lit(cap))
         return (
             self.spark.read.schema(spec.schema())
-            .parquet(*[self._file_abs(path, f, refs) for f in prefix])
+            .parquet(*[os.path.join(path, f) for f in prefix])
             .filter(cond)
         )
 
@@ -1678,10 +1626,9 @@ class KeyedTableStore:
             if cands is not None:
                 if not cands:
                     return self.spark.createDataFrame([], spec.schema())
-                refs = self._span_refs(path)
                 return (
                     self.spark.read.schema(spec.schema())
-                    .parquet(*[self._file_abs(path, f, refs) for f in cands])
+                    .parquet(*[os.path.join(path, f) for f in cands])
                     .filter(cond)
                 )
         return self.read(qualified_name).filter(cond)
@@ -1936,9 +1883,7 @@ class KeyedTableStore:
                         # files did (a flip between the two would
                         # orphan it — sound, but the files would fall
                         # back to live footer reads)
-                        self._write_span_sidecar(
-                            path_now, part_stats, listing=parts
-                        )
+                        self._write_span_sidecar(path_now, part_stats)
                         self._maybe_merge_span_sidecars(path_now)
                         try:
                             self._carry_bloom_sidecars(tmp, path_now, parts)
@@ -2029,9 +1974,8 @@ class KeyedTableStore:
         cached = self._load_span_stats(path)
         region_bytes: dict[int, int] = {}
         region_files: dict[int, list[str]] = {}
-        auto_refs = self._span_refs(path)
         for fname in self._data_files(path):
-            full = self._file_abs(path, fname, auto_refs)
+            full = os.path.join(path, fname)
             rec = cached.get(fname)
             if rec is not None and rec[3]:
                 lo, rows = rec[0], rec[2]
@@ -3168,102 +3112,20 @@ class KeyedTableStore:
     def _link_or_copy(self, src: str, dst: str) -> None:
         """Zero-copy carry of an immutable file between generation
         directories (POSIX hardlink with copy fallback; see
-        ``storage_io.py`` for the manifests-as-listing mapping this
-        becomes on HDFS/object stores)."""
+        ``storage_io.py`` for what this becomes on HDFS/object
+        stores)."""
         self.io.link_or_copy(src, dst)
 
     @staticmethod
-    def _list_parquet(path: str) -> list[str]:
-        """PHYSICAL sorted data-file basenames of one directory — the
-        raw listing.  Creation-time callers (staging a manifest for
-        files just written/linked) use this directly; everything else
-        goes through :meth:`_data_files`, the membership contract."""
+    def _data_files(path: str) -> list[str]:
+        """Sorted data-file basenames of one generation: its
+        directory's ``*.parquet`` — the ONE membership rule every
+        locate/carry/CAS-guard shares (a listing-rule drift between a
+        carry and its flip guard would read as a phantom conflict or a
+        silent drop)."""
         return sorted(
             f for f in os.listdir(path) if f.endswith(".parquet")
         )
-
-    def _membership(self, path: str):
-        """Signature-cached :meth:`_load_span_membership` (manifest
-        mode): one DML touches membership several times (listing, refs
-        prefetch, carry, CAS guard), and at 10^5 files/generation the
-        manifest JSON is MBs — parse it once per distinct on-disk
-        state, not once per touch.  The signature is the (name,
-        mtime_ns, size) tuple of every span document in the directory
-        (one listdir + stats, far cheaper than the parse), so any
-        concurrent append's sidecar, merge, or manifest rewrite — all
-        of which land by rename — invalidates by construction."""
-        try:
-            sig = tuple(
-                sorted(
-                    (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                    for e in os.scandir(path)
-                    if e.name == _SPAN_MANIFEST
-                    or (e.name.startswith("_spans-") and e.name.endswith(".json"))
-                )
-            )
-        except OSError:
-            return self._load_span_membership(path)
-        cache = getattr(self, "_membership_cache", None)
-        if cache is None:
-            cache = self._membership_cache = {}
-        hit = cache.get(path)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-        m = self._load_span_membership(path)
-        if len(cache) > 64:  # a handful of live generations per store
-            cache.clear()
-        cache[path] = (sig, m)
-        return m
-
-    def _data_files(self, path: str) -> list[str]:
-        """Sorted data-file basenames of one generation — the ONE
-        listing contract every locate/carry/CAS-guard shares (a
-        listing-rule drift between a carry and its flip guard would
-        read as a phantom conflict or a silent drop).  POSIX mode:
-        the directory listing.  Manifest-authority mode: the span
-        manifest's (+ append sidecars') ``listing`` union — membership
-        is what the manifests SAY, stray files are ignored; a
-        generation with no authority-aware manifest (legacy, or a
-        staging directory before its manifest lands) falls back to the
-        physical listing."""
-        if self.manifest_authority:
-            m = self._membership(path)
-            if m is not None:
-                return sorted(m[0])
-        return self._list_parquet(path)
-
-    def _span_refs(self, path: str) -> dict:
-        """{filename: source generation dir} for members of ``path``
-        carried by REFERENCE (manifest-authority mode only; always
-        empty in POSIX mode, where every member is physical)."""
-        if not self.manifest_authority:
-            return {}
-        m = self._membership(path)
-        return dict(m[1]) if m is not None else {}
-
-    def _file_abs(self, path: str, fname: str, refs: dict | None = None) -> str:
-        """The PHYSICAL path of member ``fname`` of generation
-        ``path`` — ``path/fname`` unless the manifest carries it by
-        reference into a sibling generation directory.  Loop callers
-        prefetch ``refs`` (:meth:`_span_refs`) once."""
-        if self.manifest_authority:
-            if refs is None:
-                refs = self._span_refs(path)
-            ref = refs.get(fname)
-            if ref:
-                return os.path.join(
-                    os.path.dirname(path.rstrip("/")), ref, fname
-                )
-        return os.path.join(path, fname)
-
-    def _gen_file_paths(self, path: str) -> list[str]:
-        """Physical paths of every member of generation ``path`` —
-        the explicit scan list manifest-authority reads pass to Spark
-        (a directory read would include strays and miss references)."""
-        refs = self._span_refs(path)
-        return [
-            self._file_abs(path, f, refs) for f in self._data_files(path)
-        ]
 
     def _scrub_empty_parts(self, staging: str, known: dict | None = None) -> None:
         """Remove ZERO-ROW part files from a private staging directory.
@@ -3310,7 +3172,6 @@ class KeyedTableStore:
         expected_base=_RESOLVE_AT_ENTRY,
         under_lock_check=None,
         span_reuse_path: str | None = None,
-        carried: dict | None = None,
     ) -> None:
         """The ONE staged-commit protocol every table-replacing path
         rides (DML rewrites, TRUNCATE, compaction, snapshot restore):
@@ -3379,28 +3240,17 @@ class KeyedTableStore:
                 # source generation's entries by name (identical content),
                 # fresh files read their own footer once, HERE, so no
                 # reader ever pays the O(files) footer walk again
-                if carried is not None:
-                    # manifest-authority carry: the references ARE the
-                    # membership — this write must succeed (a lost ref
-                    # would drop the carried files from the table)
+                try:
                     self._write_span_manifest(
                         os.path.join(root, new_gen),
-                        known=self._load_span_stats(span_reuse_path)
-                        if span_reuse_path else None,
-                        carried=carried,
+                        known=(
+                            self._load_span_stats(span_reuse_path)
+                            if span_reuse_path
+                            else None
+                        ),
                     )
-                else:
-                    try:
-                        self._write_span_manifest(
-                            os.path.join(root, new_gen),
-                            known=(
-                                self._load_span_stats(span_reuse_path)
-                                if span_reuse_path
-                                else None
-                            ),
-                        )
-                    except Exception:
-                        pass  # cache only — never fail the commit over it
+                except Exception:
+                    pass  # cache only — never fail the commit over it
                 try:
                     # Bloom sidecars ride the same staging window:
                     # carried files hardlink their sidecar from the
@@ -3760,26 +3610,17 @@ class KeyedTableStore:
         return out
 
     def _write_span_manifest(
-        self, gen_path: str, known: dict | None = None,
-        carried: dict | None = None,
+        self, gen_path: str, known: dict | None = None
     ) -> None:
         """Write ``_spans.json`` covering every data file of
         ``gen_path`` — stats reused from ``known`` (e.g. the source
         generation's manifest, valid for carried files because
         name ⇒ identical content) or read from the file's footer.
-        ``carried`` ({filename: source generation dir}, manifest-
-        authority mode) adds members carried by REFERENCE instead of
-        physically present — they join the ``listing`` and the
-        ``refs`` map, with stats from ``known`` or the referenced
-        file's own footer.  The ``listing`` records EVERY member even
-        when its stats are unencodable (membership must never depend
-        on stats encodability).  Atomic (tmp + rename) so a reader
-        never sees a partial manifest.  Runs on a PRIVATE staging
-        directory before the flip, so no lock is needed."""
-        carried = carried or {}
+        Atomic (tmp + rename) so a reader never sees a partial
+        manifest.  Runs on a PRIVATE staging directory before the
+        flip, so no lock is needed."""
         stats = {}
-        physical = self._list_parquet(gen_path)
-        for fname in physical:
+        for fname in self._data_files(gen_path):
             rec = (known or {}).get(fname)
             if rec is None:
                 try:
@@ -3794,55 +3635,25 @@ class KeyedTableStore:
                     # commit path on cache construction
                     continue
             stats[fname] = rec
-        root = os.path.dirname(gen_path.rstrip("/"))
-        for fname, refdir in carried.items():
-            rec = (known or {}).get(fname)
-            if rec is None:
-                try:
-                    rec = self._footer_key_stats(
-                        os.path.join(root, refdir, fname)
-                    )
-                except Exception:
-                    continue
-            stats[fname] = rec
         tmp = os.path.join(gen_path, f".spans-tmp-{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as fh:
             json.dump(
-                {
-                    "version": 1,
-                    "files": self._encode_span_entries(stats),
-                    "listing": sorted(set(physical) | set(carried)),
-                    "refs": dict(carried),
-                },
+                {"version": 1, "files": self._encode_span_entries(stats)},
                 fh,
             )
         self.io.atomic_rename(tmp, os.path.join(gen_path, _SPAN_MANIFEST))
 
-    def _write_span_sidecar(
-        self, gen_path: str, stats: dict, listing: list | None = None
-    ) -> None:
+    def _write_span_sidecar(self, gen_path: str, stats: dict) -> None:
         """Write-once ``_spans-<id>.json`` covering one append's part
         files (stats computed from the append staging BEFORE the link-in
         lock).  The uuid name means concurrent appends never collide and
-        nothing is ever updated in place.  The sidecar's ``listing``
-        names EVERY appended file — in manifest-authority mode it IS the
-        append's membership record, so it must cover files whose stats
-        are unencodable (or whose footer read failed) too; callers with
-        a fuller file list than ``stats`` pass it explicitly."""
+        nothing is ever updated in place."""
         entries = self._encode_span_entries(stats)
-        names = sorted(set(stats) | set(listing or []))
-        if not names:
+        if not entries:
             return
         tmp = os.path.join(gen_path, f".spans-tmp-{uuid.uuid4().hex[:8]}")
         with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": 1,
-                    "files": entries,
-                    "listing": names,
-                },
-                fh,
-            )
+            json.dump({"version": 1, "files": entries}, fh)
         self.io.atomic_rename(
             tmp,
             os.path.join(gen_path, f"_spans-{uuid.uuid4().hex[:12]}.json"),
@@ -3863,10 +3674,7 @@ class KeyedTableStore:
         the sidecars are unlinked, so a reader sees each entry from the
         manifest, a sidecar, or both (same values) — and a reader whose
         stale listing opens a just-deleted sidecar tolerates the miss
-        (``_load_span_stats``), degrading to live footer reads.  The
-        merged document preserves the union ``listing`` + ``refs`` when
-        every source document carries one (the membership authority
-        must survive the fold); legacy documents merge stats-only."""
+        (``_load_span_stats``), degrading to live footer reads."""
         try:
             sidecars = [
                 f
@@ -3876,11 +3684,7 @@ class KeyedTableStore:
             if len(sidecars) < self._SPAN_SIDECAR_MERGE_AT:
                 return
             merged = self._load_span_stats(gen_path)
-            membership = self._load_span_membership(gen_path)
             doc = {"version": 1, "files": self._encode_span_entries(merged)}
-            if membership is not None:
-                doc["listing"] = sorted(membership[0])
-                doc["refs"] = dict(membership[1])
             tmp = os.path.join(
                 gen_path, f".spans-tmp-{uuid.uuid4().hex[:8]}"
             )
@@ -3896,62 +3700,6 @@ class KeyedTableStore:
                     pass
         except Exception:
             return  # cache maintenance never fails a write
-
-    @staticmethod
-    def _load_span_membership(path: str) -> tuple[set, dict] | None:
-        """(member filenames, {filename: ref generation dir}) from the
-        generation's manifest + append sidecars — the membership
-        AUTHORITY manifest mode reads.  Returns ``None`` (caller falls
-        back to the physical listing) unless EVERY span document
-        present carries a ``listing`` — a single legacy document means
-        membership is not fully recorded and the physical listing is
-        the only safe answer (authority must never LOSE files).  A
-        MAIN manifest that exists but cannot be parsed raises
-        :class:`CorruptSpanManifestError` instead: for a table that
-        carries refs, the physical fallback would silently drop
-        members, which is worse than failing."""
-        try:
-            names = sorted(
-                f
-                for f in os.listdir(path)
-                if f == _SPAN_MANIFEST
-                or (f.startswith("_spans-") and f.endswith(".json"))
-            )
-        except OSError:
-            return None
-        if not names:
-            return None
-        listing: set = set()
-        refs: dict = {}
-        read_any = False
-        for name in names:
-            try:
-                with open(os.path.join(path, name)) as fh:
-                    doc = json.load(fh)
-            except (OSError, ValueError) as e:
-                if name == _SPAN_MANIFEST:
-                    # the MAIN manifest exists but cannot be read: its
-                    # base members are unrecoverable from sidecars
-                    # (trusting whatever sidecars parse would silently
-                    # LOSE files), and the physical listing is no
-                    # better in authority mode (it drops carried refs
-                    # and admits strays) — refuse loudly
-                    raise CorruptSpanManifestError(
-                        f"{os.path.join(path, name)}: unreadable main "
-                        f"span manifest ({e}); membership is "
-                        "unrecoverable — restore it before reading"
-                    ) from e
-                # a SIDECAR deleted mid-merge: its entries are in the
-                # merged manifest (rename-before-unlink), skip it
-                continue
-            if "listing" not in doc:
-                return None
-            read_any = True
-            listing |= set(doc["listing"])
-            refs.update(doc.get("refs") or {})
-        # an authority-aware EMPTY listing is valid membership (a
-        # truncated table); only zero readable documents fall back
-        return (listing, refs) if read_any else None
 
     @staticmethod
     def _load_span_stats(path: str) -> dict:
@@ -4018,14 +3766,13 @@ class KeyedTableStore:
         their footer live."""
         files = self._data_files(path)
         cached = self._load_span_stats(path)
-        span_refs = self._span_refs(path)
         out = []
         misses: dict = {}
         for fname in files:
             rec = cached.get(fname)
             if rec is None:
                 rec = self._footer_key_stats(
-                    self._file_abs(path, fname, span_refs)
+                    os.path.join(path, fname)
                 )
                 misses[fname] = rec
             if stats is not None:
@@ -4309,7 +4056,6 @@ class KeyedTableStore:
 
         fpp = self._bloom_fpp(spec)
         rows_known = dict(rows_by_file or {})
-        bloom_refs = self._span_refs(gen_path)
         spans = None
         params: dict[str, tuple[int, int]] = {}
         for fname in files:
@@ -4322,7 +4068,7 @@ class KeyedTableStore:
             if rows is None:
                 try:
                     rows = pq.read_metadata(
-                        self._file_abs(gen_path, fname, bloom_refs)
+                        os.path.join(gen_path, fname)
                     ).num_rows
                 except Exception:
                     continue  # unreadable: no sidecar, file stays a candidate
@@ -4345,7 +4091,7 @@ class KeyedTableStore:
             for fname, (rows, (m, k)) in params.items():
                 try:
                     col = pq.read_table(
-                        self._file_abs(gen_path, fname, bloom_refs),
+                        os.path.join(gen_path, fname),
                         columns=[column],
                     ).column(0)
                 except Exception:
@@ -4377,7 +4123,7 @@ class KeyedTableStore:
         src = (
             self.spark.read.schema(T.StructType([key_field]))
             .parquet(
-                *[self._file_abs(gen_path, f, bloom_refs) for f in params]
+                *[os.path.join(gen_path, f) for f in params]
             )
             .select(F.input_file_name().alias("_f"), key_col.alias("_k"))
         )
@@ -4654,10 +4400,9 @@ class KeyedTableStore:
         import pyarrow.parquet as pq
 
         cached = None
-        refs = self._span_refs(path)
         lo = hi = None
         for fname in files:
-            full = self._file_abs(path, fname, refs)
+            full = os.path.join(path, fname)
             rec = stats.get(fname) if stats is not None else None
             if rec is None:
                 if cached is None:  # load the manifest at most once
@@ -4704,7 +4449,6 @@ class KeyedTableStore:
         file — ``rows`` is ``md.num_rows``, exact regardless of the
         min/max ``exact`` flag — with live footer reads for the rest."""
         cached = self._load_span_stats(path)
-        refs = self._span_refs(path)
         total = 0
         for fname in self._data_files(path):
             rec = cached.get(fname)
@@ -4712,7 +4456,7 @@ class KeyedTableStore:
                 rec[2]
                 if rec is not None
                 else self._footer_row_count_file(
-                    self._file_abs(path, fname, refs)
+                    os.path.join(path, fname)
                 )
             )
         return total
@@ -4886,9 +4630,8 @@ class KeyedTableStore:
         if affected:
             lo, hi = self._key_span(path, affected, stats=footer_stats)
             in_span = F.col(ROW_KEY).between(F.lit(lo), F.lit(hi))
-            mrefs = self._span_refs(path)
             sub = self.spark.read.schema(schema).parquet(
-                *[self._file_abs(path, f, mrefs) for f in affected]
+                *[os.path.join(path, f) for f in affected]
             )
             if drop_keys is not None:
                 # batched mutate(): deleted keys leave the affected
@@ -5027,56 +4770,47 @@ class KeyedTableStore:
         type."""
         spec = self.registry.get(qualified_name)
         self._require_column(spec, check_col)
+        self._check_put_row(spec, check_key, row)
         idx = [f.name for f in spec.schema().fields].index(check_col)
 
-        def predicate(cur_row, present):
-            return (cur_row[idx] if present else None) == expected
+        def put(cur_row, present):
+            if (cur_row[idx] if present else None) != expected:
+                return None
+            return True, row
 
-        return self._conditional_put(
-            qualified_name, check_key, row, predicate, async_index
-        )
-
-    def _row_cas_put(
-        self, qualified_name: str, key, expected_row, row: dict,
-        async_index: bool = False,
-    ) -> bool:
-        """Apply the single-row Put iff the CURRENT WHOLE row equals
-        ``expected_row`` (a tuple of every schema column, or ``None`` =
-        row absent).  The primitive under :meth:`increment` /
-        :meth:`append_cell`: a cell-level check would let a concurrent
-        write to a SIBLING qualifier slip between the read and the
-        put and be silently overwritten by the stale full-row write —
-        the whole-row comparison makes the read-modify-write atomic
-        over the entire row, matching HBase's single-row atomicity."""
-
-        def predicate(cur_row, present):
-            return (tuple(cur_row) if present else None) == expected_row
-
-        return self._conditional_put(
-            qualified_name, key, row, predicate, async_index
-        )
+        return self._conditional_put(qualified_name, check_key, put, async_index)
 
     def _conditional_put(
-        self, qualified_name: str, key, row: dict, predicate,
-        async_index: bool,
-    ) -> bool:
+        self, qualified_name: str, key, put, async_index: bool,
+        attempts: int = 8,
+    ):
         """The shared conditional-Put engine: resolve ONE generation,
         point-read the key's current row from it (span + Bloom
-        candidate files), ask ``predicate(current_row, present)``, and
-        on pass apply the single-row merge whose swap names that same
-        generation as its CAS base — a concurrent commit between check
-        and flip re-runs the whole attempt, check included."""
-        incoming, keys = self._conditional_row(qualified_name, key, row)
+        candidate files), and ask ``put(current_row, present)`` for
+        ``(result, row)`` — the Put's columns — or ``None`` to refuse
+        (the call then returns False).  The single-row merge's swap
+        names that same generation as its CAS base, so a concurrent
+        commit between the read and the flip re-runs the whole
+        attempt, read included; after ``attempts`` lost races it raises
+        :class:`ConcurrentWriteConflictError`.  Returns ``result``."""
         spec = self.registry.get(qualified_name)
         schema = spec.schema()
+        names = [f.name for f in schema.fields]
 
         def attempt():
             path = self.table_path(spec)
             stats: dict = {}
             files = self._candidate_files(spec, path, (key, key), None, stats)
             cur_row, home = self._point_row(spec, path, files, key)
-            if not predicate(cur_row, home is not None):
+            decided = put(cur_row, home is not None)
+            if decided is None:
                 return False, False, None
+            result, row = decided
+            full = {**row, ROW_KEY: key}
+            incoming = self._local_frame(
+                [tuple(full.get(c) for c in names)], schema
+            )
+            keys = incoming.select(ROW_KEY)
             # the check read located the key's one row (or proved it
             # absent: the insert-style checkAndPut appends a fresh run)
             affected = {} if home is None else {home: 1}
@@ -5086,9 +4820,9 @@ class KeyedTableStore:
                 batch_span=(key, key),
                 footer_stats=stats, n_incoming=1,
             )
-            return True, True, changed
+            return result, True, changed
 
-        return self._commit(qualified_name, attempt, async_index)
+        return self._commit(qualified_name, attempt, async_index, attempts)
 
     def check_and_delete(
         self,
@@ -5105,11 +4839,7 @@ class KeyedTableStore:
         success, exactly like HBase deleting a row that isn't there)."""
         spec = self.registry.get(qualified_name)
         self._require_column(spec, check_col)
-        if check_key is None:
-            raise ValueError(
-                f"{qualified_name}: conditional mutations need a non-NULL "
-                "row key"
-            )
+        self._check_put_row(spec, check_key, {})
         cond = F.col(ROW_KEY) == F.lit(check_key)
         idx = [f.name for f in spec.schema().fields].index(check_col)
 
@@ -5150,14 +4880,14 @@ class KeyedTableStore:
         """HBase ``Table.increment``: atomically add ``delta`` to one
         numeric cell and return the new value.  An absent row/cell
         starts from 0, exactly like HBase's Increment on a missing
-        counter.  Rides :meth:`_cas_read_modify_write` — the CAS
-        compares the WHOLE previous row, so a concurrent write to any
-        sibling qualifier retries instead of being overwritten (HBase
-        single-row atomicity), and no concurrent increment is lost
-        (``test_concurrent_cas_counters_lose_no_update``)."""
-        return self._cas_read_modify_write(
-            qualified_name, key, col,
-            lambda cur: (cur or 0) + delta, "increment", retries,
+        counter.  Rides :meth:`_read_modify_write`: the new row is
+        built from the attempt's own point read, so a concurrent write
+        to any qualifier of the row re-runs the attempt instead of
+        being overwritten (HBase single-row atomicity), and no
+        concurrent increment is lost.  ``retries`` is the number of
+        attempts before :class:`ConcurrentWriteConflictError`."""
+        return self._read_modify_write(
+            qualified_name, key, col, lambda cur: (cur or 0) + delta, retries
         )
 
     def append_cell(
@@ -5170,45 +4900,36 @@ class KeyedTableStore:
     ):
         """HBase ``Table.append``: atomically append ``value`` to one
         string/binary cell and return the new value (absent cell =
-        start from the value itself).  Same whole-row CAS loop as
+        start from the value itself).  Same read-modify-write as
         :meth:`increment`."""
-        return self._cas_read_modify_write(
+        return self._read_modify_write(
             qualified_name, key, col,
-            lambda cur: value if cur is None else cur + value,
-            "append", retries,
+            lambda cur: value if cur is None else cur + value, retries,
         )
 
-    def _cas_read_modify_write(
-        self, qualified_name: str, key, col: str, combine, op: str,
-        retries: int,
+    def _read_modify_write(
+        self, qualified_name: str, key, col: str, combine, retries: int
     ):
-        """Optimistic single-cell read-modify-write: snapshot the whole
-        row, compute ``combine(current_cell)``, and apply through
-        :meth:`_row_cas_put` — which refuses unless the ENTIRE row is
-        still the snapshot, so concurrent writes to ANY qualifier of
-        the row retry here rather than being clobbered by the stale
-        full-row put."""
+        """Single-cell read-modify-write as one conditional Put: the
+        attempt's point read supplies the whole current row, ``col``
+        becomes ``combine(current_cell)``, and every other qualifier
+        is written back as read — the generation CAS makes the read and
+        the write one atomic step over the entire row."""
         spec = self.registry.get(qualified_name)
         self._require_column(spec, col)
+        self._check_put_row(spec, key, {})
+        if retries < 1:
+            raise ValueError(f"retries must be at least 1, got {retries}")
         names = [f.name for f in spec.schema().fields]
-        for _ in range(retries):
-            rows = self.get(qualified_name, [key]).collect()
-            if len(rows) > 1:
-                raise ValueError(
-                    f"{qualified_name}: key {key!r} is not unique; "
-                    f"{op} needs unique keys"
-                )
-            snapshot = tuple(rows[0]) if rows else None
-            base = dict(zip(names, rows[0])) if rows else {}
+
+        def put(cur_row, present):
+            base = dict(zip(names, cur_row)) if present else {}
             base.pop(ROW_KEY, None)
-            current = base.get(col)
-            new = combine(current)
-            base[col] = new
-            if self._row_cas_put(qualified_name, key, snapshot, base):
-                return new
-        raise ConcurrentWriteConflictError(
-            f"{qualified_name}: {op} of {key!r} lost the CAS race "
-            f"{retries} times"
+            base[col] = combine(base.get(col))
+            return base[col], base
+
+        return self._conditional_put(
+            qualified_name, key, put, async_index=False, attempts=retries
         )
 
     _MUTATE_OPS = frozenset(
@@ -5314,10 +5035,9 @@ class KeyedTableStore:
             current: dict = {}
             home: dict = {}
             if files:
-                crefs = self._span_refs(path)
                 for r in (
                     self.spark.read.schema(schema)
-                    .parquet(*[self._file_abs(path, f, crefs) for f in files])
+                    .parquet(*[os.path.join(path, f) for f in files])
                     .filter(F.col(ROW_KEY).isin(keys))
                     .select("*", F.input_file_name().alias("__f"))
                     .collect()
@@ -5370,9 +5090,9 @@ class KeyedTableStore:
                 else:
                     # increment/append: read-modify-write of one cell,
                     # full-row rewrite under the BATCH's generation CAS
-                    # (same whole-row atomicity the single-op loop gets
-                    # from _row_cas_put — a concurrent commit re-runs
-                    # the whole attempt, reads included)
+                    # (the same whole-row atomicity a single increment
+                    # gets — a concurrent commit re-runs the whole
+                    # attempt, reads included)
                     cell = cur[col_idx[o["col"]]] if present else None
                     if kind == "increment":
                         new = (cell or 0) + o.get("delta", 1)
@@ -5430,17 +5150,12 @@ class KeyedTableStore:
                 f"(have {names})"
             )
 
-    def _conditional_row(
-        self, qualified_name: str, check_key, row: dict
-    ):
-        """Validate and materialize the single-row Put for the
-        conditional mutations — one literal-backed DataFrame conformed
-        to the declared schema (no checkpoint needed: literal data is
-        deterministic across the CAS retries)."""
-        spec = self.registry.get(qualified_name)
-        schema = spec.schema()
-        names = [f.name for f in schema.fields]
-        unknown = set(row) - set(names)
+    @staticmethod
+    def _check_put_row(spec: TableSpec, check_key, row: dict) -> None:
+        """Refuse a conditional mutation's Put before any read: unknown
+        columns, a NULL checked key, or a Put naming another row."""
+        qualified_name = spec.qualified_name
+        unknown = set(row) - {f.name for f in spec.schema().fields}
         if unknown:
             raise ValueError(
                 f"{qualified_name}: unknown Put columns {sorted(unknown)}"
@@ -5458,9 +5173,6 @@ class KeyedTableStore:
                 "checkAndPut may only mutate the checked row "
                 f"(put key {row[ROW_KEY]!r} != checked key {check_key!r})"
             )
-        full = {**row, ROW_KEY: check_key}
-        incoming = self._local_frame([tuple(full.get(c) for c in names)], schema)
-        return incoming, incoming.select(ROW_KEY)
 
     def _point_row(
         self, spec: TableSpec, path: str, files: list[str], key
@@ -5478,10 +5190,9 @@ class KeyedTableStore:
 
         if not files:
             return None, None
-        refs = self._span_refs(path)
         rows = (
             self.spark.read.schema(spec.schema())
-            .parquet(*[self._file_abs(path, f, refs) for f in files])
+            .parquet(*[os.path.join(path, f) for f in files])
             .filter(F.col(ROW_KEY) == F.lit(key))
             .select("*", F.input_file_name().alias("__f"))
             .take(2)
@@ -5524,9 +5235,8 @@ class KeyedTableStore:
             if not files:
                 return {}
             path = self.table_path(spec)
-            refs = self._span_refs(path)
             cur = self.spark.read.schema(spec.schema()).parquet(
-                *[self._file_abs(path, f, refs) for f in files]
+                *[os.path.join(path, f) for f in files]
             )
         else:
             cur = self.read(spec.qualified_name)
@@ -5562,9 +5272,8 @@ class KeyedTableStore:
         locate, rewrite, and the CAS base all name the SAME generation."""
         if path is None:
             path = self.table_path(spec)
-        refs = self._span_refs(path)
         sub = self.spark.read.schema(spec.schema()).parquet(
-            *[self._file_abs(path, f, refs) for f in affected]
+            *[os.path.join(path, f) for f in affected]
         )
         schema = spec.schema()
         out = transform(sub).select(
@@ -5621,16 +5330,6 @@ class KeyedTableStore:
         base = os.path.basename(src_path.rstrip("/"))
         listing = self._data_files(src_path)
         carried = [f for f in listing if f not in rewritten]
-        # manifests-as-listing: the carry becomes a manifest REFERENCE
-        # to the file's ORIGINAL generation (chains flatten here, so a
-        # ref never points at another ref) and link_or_copy is not
-        # called at all — the hot O(files)-per-DML carry is the one
-        # that must not exist on hardlink-less backends
-        carry_refs = None
-        if self.manifest_authority:
-            src_refs = self._span_refs(src_path)
-            carry_refs = {f: src_refs.get(f, base) for f in carried}
-
         def build(staging: str) -> None:
             for i, frame in enumerate(outs):
                 self._writer(frame, spec).mode(
@@ -5639,12 +5338,11 @@ class KeyedTableStore:
             for f in os.listdir(staging):
                 if not f.endswith(".parquet"):
                     os.remove(os.path.join(staging, f))
-            if carry_refs is None:
-                for fname in carried:
-                    self._link_or_copy(
-                        os.path.join(src_path, fname),
-                        os.path.join(staging, fname),
-                    )
+            for fname in carried:
+                self._link_or_copy(
+                    os.path.join(src_path, fname),
+                    os.path.join(staging, fname),
+                )
 
         def base_listing_unchanged() -> None:
             # a concurrent APPEND links files into the live generation
@@ -5665,10 +5363,12 @@ class KeyedTableStore:
             expected_base=base,
             under_lock_check=base_listing_unchanged,
             span_reuse_path=src_path,
-            carried=carry_refs,
         )
 
-    def _commit(self, qualified_name: str, attempt, async_index: bool):
+    def _commit(
+        self, qualified_name: str, attempt, async_index: bool,
+        attempts: int = 8,
+    ):
         """Stage 3, the commit tail of every keyed DML entry point: run
         ``attempt`` — one complete locate + rewrite + CAS flip that
         resolves the table's current generation itself — under
@@ -5682,7 +5382,9 @@ class KeyedTableStore:
         mutation on top of its own committed result (a non-idempotent
         ``c + 1`` UPDATE would double-apply; a DELETE would report 0
         rows).  Returns ``result``."""
-        result, mutated, changed_keys = self._retry_write_conflict(attempt)
+        result, mutated, changed_keys = self._retry_write_conflict(
+            attempt, attempts
+        )
         if mutated:
             self._maintain_indexes(
                 qualified_name, async_index, changed_keys=changed_keys
@@ -6010,9 +5712,8 @@ class KeyedTableStore:
             path = self.table_path(spec)
         if n * 4 >= self._footer_row_count(path):
             return None  # the full rebuild will run anyway
-        refs = self._span_refs(path)
         sub = self.spark.read.schema(spec.schema()).parquet(
-            *[self._file_abs(path, f, refs) for f in affected]
+            *[os.path.join(path, f) for f in affected]
         )
         pin = self._pin_batch(
             selector(sub).select(ROW_KEY), ROW_KEY, stats=False
@@ -6064,9 +5765,8 @@ class KeyedTableStore:
             listing = self._data_files(src)
             n = n_regions
             if target_region_bytes is not None:
-                crefs = self._span_refs(src)
                 total = sum(
-                    os.path.getsize(self._file_abs(src, f, crefs))
+                    os.path.getsize(os.path.join(src, f))
                     for f in listing
                 )
                 n = max(1, -(-total // target_region_bytes))  # ceil
@@ -6116,15 +5816,14 @@ class KeyedTableStore:
             # CAS re-selects the small files against the winner's state
             path = self.table_path(spec)
             small = []
-            mrefs = self._span_refs(path)
             for fname in self._data_files(path):
-                full = self._file_abs(path, fname, mrefs)
+                full = os.path.join(path, fname)
                 if os.path.getsize(full) < small_file_bytes:
                     small.append(fname)
             if len(small) < min_files:
                 return 0
             folded = self.spark.read.schema(spec.schema()).parquet(
-                *[self._file_abs(path, f, mrefs) for f in small]
+                *[os.path.join(path, f) for f in small]
             )
             if spec.split_keys:
                 # pre-split table: fold to one file PER DECLARED REGION
@@ -6328,7 +6027,6 @@ class KeyedTableStore:
         def attempt() -> int:
             path = self.table_path(spec)
             cached = self._load_span_stats(path)
-            srefs = self._span_refs(path)
             straddlers = []
             for fname in self._data_files(path):
                 rec = cached.get(fname)
@@ -6336,7 +6034,7 @@ class KeyedTableStore:
                     lo, hi, rows = rec[0], rec[1], rec[2]
                 else:
                     lo, hi, rows = self._file_key_range(
-                        self._file_abs(path, fname, srefs)
+                        os.path.join(path, fname)
                     )
                 # a file straddles iff it holds keys on BOTH sides of
                 # ANY new boundary: region law [lo_bound, hi_bound)
@@ -6348,7 +6046,7 @@ class KeyedTableStore:
             if not straddlers:
                 return 0
             sub = self.spark.read.schema(spec.schema()).parquet(
-                *[self._file_abs(path, f, srefs) for f in straddlers]
+                *[os.path.join(path, f) for f in straddlers]
             )
             out = self._region_layout(spec, sub)
             self._swap_write_with_carry(spec, out, path, set(straddlers))
@@ -6630,25 +6328,6 @@ class KeyedTableStore:
         self._register_catalog_table(spec)
 
     def _register_catalog_table(self, spec: TableSpec) -> None:
-        if self.manifest_authority:
-            # a session-catalog EXTERNAL table scans its directory —
-            # it would include strays and miss reference-carried
-            # members, and pyspark's catalog path hands a Python
-            # DataSource an empty options map (sqlfront module
-            # docstring), so no catalog TABLE entry can be correct
-            # here.  Dot-qualified SQL still works: the session router
-            # resolves registered ``ns.name`` references to the
-            # membership-aware temp view at dispatch time
-            # (sqlfront.resolve_keyed_dotted_names — the
-            # HBaseSessionCatalog.lookupRelation seam).  Register only
-            # the namespace database so SHOW DATABASES lists it.
-            try:
-                self.spark.sql(
-                    f"CREATE DATABASE IF NOT EXISTS `{spec.namespace}`"
-                )
-            except Exception:
-                pass  # listing convenience only — reads don't need it
-            return
         if not hasattr(self, "_catalog_paths"):
             self._catalog_paths: dict[str, str] = {}
         path = self.table_path(spec)

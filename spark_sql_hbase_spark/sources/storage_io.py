@@ -55,16 +55,17 @@ porting exercise, not a rewrite:
      answer).
    - Object store: same as HDFS — manifests-as-listing; "copy" via
      server-side COPY where genuinely needed.
-   - **Executable today**: ``KeyedTableStore(..., manifest_authority=
-     True)`` runs exactly this mode — generation membership is the
-     span manifest's ``listing`` (stray directory entries are
-     ignored), the hot DML carry records a manifest REFERENCE to the
-     file's original generation (``link_or_copy`` is not called at
-     all on that path), and generation GC is reference-aware
-     (directory-granularity reclamation once no live generation
-     references it).  The POSIX hardlink layout remains the default;
-     the mode is the porting contract's proof that the protocol needs
-     no hardlinks.
+   - The keyed store's own POSIX layout has no manifest mode: a
+     generation's members are its directory's ``*.parquet``.  A port
+     records each generation's member list (and, for carried files,
+     the generation that physically holds them) in its span manifest,
+     reads membership from there, and makes generation GC
+     reference-aware.  A working implementation of that mapping on
+     top of this protocol lived in ``keyed_parquet.py`` (the
+     store's manifest mode) up to commit ``13f2a3e`` and was removed
+     as unused on POSIX.  Its GC reclaimed whole directories, so it
+     kept rewritten files alive until the next compaction: about 1.5x
+     the hardlink layout's space on the kv_write workload.
 
 ``KeyedTableStore`` consumes these through its ``io`` attribute
 (default :class:`LocalPosixIO`), so a deployment backend swaps one

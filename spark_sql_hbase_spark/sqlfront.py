@@ -21,13 +21,7 @@ Read-path note: routed writes are visible to plain ``spark.sql`` because the
 store registers every keyed table in the session catalog as an external
 parquet table inside its namespace database (``pw.test`` resolves
 dot-qualified; ``SHOW DATABASES`` / ``SHOW TABLES`` list namespaces —
-reference ``HBaseSessionCatalog.scala:63-102``).  In manifest-authority
-mode no catalog TABLE can be correct (a directory scan is not the
-membership), so the router itself resolves registered ``ns.name`` — and,
-under ``USE ns``, bare table-position — references to the membership-aware
-temp views at dispatch time (:func:`resolve_keyed_dotted_names`): the same
-seam the reference's ``HBaseSessionCatalog.lookupRelation`` occupies, where
-the session's OWN catalog resolves the name before stock Spark sees it.
+reference ``HBaseSessionCatalog.scala:63-102``).
 
 Why not ``CREATE TABLE ... USING keyedtable`` (the Python DataSource) in
 the session catalog instead?  Tried: DDL works, but on ``INSERT INTO`` a
@@ -197,345 +191,6 @@ _BARE_COUNT_RE = re.compile(
 _USING_KEYED_RE = re.compile(r"\busing\s+keyed(?:table)?\b", re.IGNORECASE)
 _OPTIONS_RE = re.compile(r"\boptions\s*\(", re.IGNORECASE)
 _OPTION_KV_RE = re.compile(r"(\w+)\s*=\s*'([^']*)'")
-
-# dotted reference — optionally session-catalog-qualified
-# (`spark_catalog.ns.name`, mirroring _split_qualified), not part of a
-# longer dotted chain (a three-part `othercat.ns.name` must not resolve
-# its `ns.name` tail) and not a qualified function call (`ns.fn(...)`)
-_SHOW_TABLES_RE = re.compile(
-    rf"^\s*show\s+tables(?:\s+(?:in|from)\s+(?P<ns>{_IDENT}))?\s*$",
-    re.IGNORECASE,
-)
-
-# resolver tokenization: backtick identifier | bare identifier | any
-# other single character (string literals/comments are span-masked
-# before tokens are consumed)
-_TOKEN_RE = re.compile(r"`[^`]+`|[A-Za-z_][\w]*|\S", re.DOTALL)
-
-# keywords that put the scanner in TABLE POSITION (the next identifier
-# chain is a table reference): FROM additionally opens a FROM list at
-# the current paren depth, so commas re-enter table position
-_TABLE_POS_KW = frozenset(
-    {"from", "join", "into", "table", "using", "describe", "desc"}
-)
-# clause keywords that END the FROM list at the current depth (a comma
-# after these is a select/group/order list separator, not a table ref)
-_FROM_END_KW = frozenset(
-    {
-        "where", "group", "having", "order", "limit", "window", "union",
-        "except", "intersect", "select", "qualify", "values", "set",
-        "when", "lateral", "sort", "distribute", "cluster",
-    }
-)
-# bare words after a table reference that mean NO explicit alias was
-# written (so the rewrite must append one to keep `name.col` resolving).
-# TABLESAMPLE and FOR (temporal clause) are deliberately NOT here:
-# Spark's grammar puts them BEFORE the alias, so appending `AS x` ahead
-# of them would be a parse error — the rewrite leaves those references
-# un-aliased instead (qualify columns via an explicit alias if needed)
-_NOT_AN_ALIAS_KW = _TABLE_POS_KW | _FROM_END_KW | frozenset(
-    {
-        "on", "left", "right", "inner", "outer", "full", "cross",
-        "natural", "semi", "anti", "pivot", "unpivot",
-    }
-)
-
-
-def _nonsql_spans(s: str) -> list[tuple[int, int]]:
-    """Half-open spans of string literals and comments — text a name
-    resolver must never rewrite.  Handles ''-doubling and backslash
-    escapes inside quotes, ``--`` line comments and ``/* */`` blocks.
-    Backtick identifiers are NOT masked (they are names)."""
-    spans: list[tuple[int, int]] = []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            j = i + 1
-            while j < n:
-                if s[j] == "\\":
-                    j += 2
-                    continue
-                if s[j] == c:
-                    if j + 1 < n and s[j + 1] == c:  # doubled-quote escape
-                        j += 2
-                        continue
-                    break
-                j += 1
-            spans.append((i, min(j + 1, n)))
-            i = min(j + 1, n)
-        elif s.startswith("--", i):
-            j = s.find("\n", i)
-            j = n if j < 0 else j
-            spans.append((i, j))
-            i = j
-        elif s.startswith("/*", i):
-            j = s.find("*/", i)
-            j = n if j < 0 else j + 2
-            spans.append((i, j))
-            i = j
-        else:
-            i += 1
-    return spans
-
-
-def resolve_keyed_dotted_names(
-    stmt: str,
-    is_keyed,
-    view_of,
-    current_db: str | None = None,
-    bare_shadowed=None,
-) -> str:
-    """Session-boundary name resolution — the PySpark seam where the
-    reference's ``HBaseSessionCatalog.lookupRelation``
-    (``HBaseSessionCatalog.scala:63-102``) resolves ``ns.table``
-    through ITS catalog rather than stock Spark's: rewrite identifier
-    chains in TABLE POSITION (after FROM/JOIN/INTO/TABLE/USING/
-    DESCRIBE, and after commas inside an open FROM list) that name a
-    REGISTERED keyed table into the membership-aware temp-view name.
-    Recognized chains: ``ns.name``, ``spark_catalog.ns.name``, and —
-    with ``current_db`` — a bare ``name`` (the ``USE ns`` flow,
-    reference ``README.md:55``).  When the reference carries no
-    explicit alias, the rewrite appends ``AS `name``` so qualified
-    column references (``name.col``) keep resolving exactly as they
-    would against the catalog.  Table position is tracked by a
-    paren-depth-aware token scan, so a SELECT-list or ON-clause
-    expression like ``alias.col`` is never rewritten even when it
-    textually collides with a registered pair, and string literals /
-    comments never rewrite.  A second pass re-qualifies db-qualified
-    COLUMN references (``ns.name.col``, ``ns.name.*``) of relations the
-    first pass rewrote to the relation's alias, so every POSIX-valid
-    qualifier shape keeps resolving.  Known limit:
-    ``extract(x FROM col)``-style positions rewrite iff
-    ``current_db.col`` is itself a registered table.
-
-    Used by the router in manifest-authority mode, where a session-
-    catalog EXTERNAL table cannot exist (a directory scan would include
-    strays and miss reference-carried members, and pyspark's catalog
-    path hands a Python DataSource an empty options map — see the
-    module docstring).  The temp views read through the store's
-    membership-aware path and are re-registered on every DML, so each
-    statement resolves the CURRENT generation's manifest listing.
-    Driver-side O(statement length), zero storage ops."""
-    spans = _nonsql_spans(stmt)
-
-    # tokenize each UNMASKED segment independently — running the token
-    # regex over the whole string would let a backtick inside a string
-    # literal pair with a later real backtick and swallow everything
-    # between them as one bogus identifier token
-    class _Tok:
-        __slots__ = ("text", "a", "b")
-
-        def __init__(self, text, a, b):
-            self.text, self.a, self.b = text, a, b
-
-        def group(self, _=0):
-            return self.text
-
-        def start(self):
-            return self.a
-
-        def end(self):
-            return self.b
-
-    toks: list[_Tok] = []
-    seg_start = 0
-    for a, b in sorted(spans) + [(len(stmt), len(stmt))]:
-        for m in _TOKEN_RE.finditer(stmt, seg_start, a):
-            toks.append(_Tok(m.group(0), m.start(), m.end()))
-        seg_start = max(seg_start, b)
-
-    def kind(m) -> str:
-        t = m.group(0)
-        if t.startswith("`"):
-            return "tick"
-        if t[0].isalpha() or t[0] == "_":
-            return "word"
-        return t  # single punctuation char
-
-    edits: list[tuple[int, int, str]] = []  # (start, end, replacement)
-    from_open = [False]  # per paren depth: inside an open FROM list?
-    expect_table = False
-    # aliasing the rewrite (`view` AS `name`) is only valid grammar in
-    # RELATION positions (FROM/JOIN/USING/comma), not after INTO/TABLE/
-    # DESCRIBE — there the bare view name stands alone
-    alias_pos = False
-    saw_merge = False
-    pairs_rewritten: set = set()
-    i = 0
-    while i < len(toks):
-        m = toks[i]
-        k = kind(m)
-        if k == "word" and m.group(0).lower() == "merge":
-            saw_merge = True
-        if k == "(":
-            from_open.append(False)
-            expect_table = False
-        elif k == ")":
-            if len(from_open) > 1:
-                from_open.pop()
-        elif k == ",":
-            expect_table = from_open[-1]
-            alias_pos = True
-        elif k == "word" and m.group(0).lower() in _TABLE_POS_KW:
-            kw = m.group(0).lower()
-            if kw == "using" and not saw_merge:
-                # USING names a table only in MERGE (JOIN's USING is
-                # followed by '(' and clears position anyway); in a
-                # fall-through CREATE ... USING <format> the next word
-                # is a datasource format, never a table reference
-                expect_table = False
-            else:
-                if kw == "from":
-                    from_open[-1] = True
-                expect_table = True
-                alias_pos = kw in ("from", "join", "using")
-        elif k == "word" and m.group(0).lower() in _FROM_END_KW:
-            from_open[-1] = False
-            expect_table = False
-        elif expect_table and k in ("word", "tick"):
-            # modifier words between the keyword and the table ref
-            # (DESCRIBE EXTENDED t, INSERT INTO TABLE IF NOT EXISTS …)
-            # keep table position open — unless the word IS a resolvable
-            # bare table or starts a dotted chain
-            if (
-                k == "word"
-                and m.group(0).lower()
-                in ("extended", "formatted", "if", "not", "exists")
-                and not (
-                    i + 1 < len(toks) and kind(toks[i + 1]) == "."
-                )
-                and not (current_db and is_keyed(current_db, m.group(0)))
-            ):
-                i += 1
-                continue
-            # consume the dotted identifier chain
-            parts = [m]
-            j = i + 1
-            while (
-                j + 1 < len(toks)
-                and kind(toks[j]) == "."
-                and kind(toks[j + 1]) in ("word", "tick")
-            ):
-                parts.append(toks[j + 1])
-                j += 2
-            nxt = toks[j] if j < len(toks) else None
-            expect_table = False
-            if nxt is not None and kind(nxt) == "(":
-                i = j  # table-valued function call, not a table ref
-                continue
-            names = [_unquote(p.group(0)) for p in parts]
-            pair = None
-            if len(names) == 1 and current_db:
-                pair = (current_db, names[0])
-            elif len(names) == 2:
-                pair = (names[0], names[1])
-            elif len(names) == 3 and names[0].lower() == "spark_catalog":
-                pair = (names[1], names[2])
-            chain_straddles_mask = any(
-                parts[0].start() < a < parts[-1].end() for a, b in spans
-            )
-            if chain_straddles_mask:
-                # a comment interposed INSIDE the dotted chain
-                # (`ns /* hint */ .name`): rewriting would delete the
-                # comment bytes, violating the never-rewrite property —
-                # leave the pathological chain untouched
-                i = j
-                continue
-            if pair is not None and is_keyed(*pair):
-                # Spark resolution precedence for BARE names: a
-                # same-name relation the caller's catalog already binds
-                # (temp view, or — manifest mode — any user-created
-                # catalog table) wins over the keyed rewrite, exactly
-                # as it would under stock Spark.  Dot-qualified chains
-                # stay router-resolved: the registry IS the authority
-                # for ``ns.name`` (the reference's lookupRelation
-                # seam).  Probed only for keyed-resolvable bare names,
-                # so the catalog round trip is never paid for ordinary
-                # identifiers.
-                if (
-                    len(names) == 1
-                    and bare_shadowed is not None
-                    and bare_shadowed(names[0])
-                ):
-                    i = j
-                    continue
-                rep = f"`{view_of(*pair)}`"
-                # no explicit alias written → append one so `name.col`
-                # qualifiers keep resolving against the rewrite
-                has_alias = nxt is not None and (
-                    kind(nxt) == "tick"
-                    or (
-                        kind(nxt) == "word"
-                        and (
-                            nxt.group(0).lower() == "as"
-                            or nxt.group(0).lower() not in _NOT_AN_ALIAS_KW
-                        )
-                    )
-                )
-                if alias_pos and not has_alias:
-                    rep += f" AS `{pair[1]}`"
-                edits.append((parts[0].start(), parts[-1].end(), rep))
-                pairs_rewritten.add(pair)
-            i = j
-            continue
-        i += 1
-
-    if not edits:
-        return stmt
-
-    # second pass: db-qualified COLUMN references (`ns.name.col`,
-    # `spark_catalog.ns.name.col`, `ns.name.*`) of relations the first
-    # pass rewrote re-qualify to the relation's alias (`name`.col) —
-    # valid POSIX statements stay valid here.  Only pairs actually
-    # rewritten as relations in THIS statement participate, so an
-    # unrelated alias.column chain can never misfire.
-    def q_edit(i0: int, n_parts: int, pair: tuple) -> None:
-        a = toks[i0].start()
-        b = toks[i0 + 2 * (n_parts - 1)].end()
-        if any(not (y <= a or b <= x) for x, y, _ in edits):
-            return  # already inside a relation rewrite
-        edits.append((a, b, f"`{pair[1]}`"))
-
-    for i0 in range(len(toks)):
-        if kind(toks[i0]) not in ("word", "tick"):
-            continue
-        if i0 > 0 and kind(toks[i0 - 1]) == ".":
-            continue  # middle of a longer chain
-        # ns . name . <col-or-*>
-        if (
-            i0 + 3 < len(toks)
-            and kind(toks[i0 + 1]) == "."
-            and kind(toks[i0 + 2]) in ("word", "tick")
-            and kind(toks[i0 + 3]) == "."
-        ):
-            pair = (
-                _unquote(toks[i0].group(0)),
-                _unquote(toks[i0 + 2].group(0)),
-            )
-            if pair in pairs_rewritten:
-                q_edit(i0, 2, pair)
-                continue
-            # spark_catalog . ns . name . <col>
-            if (
-                pair[0].lower() == "spark_catalog"
-                and i0 + 5 < len(toks)
-                and kind(toks[i0 + 4]) in ("word", "tick")
-                and kind(toks[i0 + 5]) == "."
-            ):
-                pair3 = (pair[1], _unquote(toks[i0 + 4].group(0)))
-                if pair3 in pairs_rewritten:
-                    q_edit(i0, 3, pair3)
-
-    out: list[str] = []
-    last = 0
-    for a, b, rep in sorted(edits):
-        out.append(stmt[last:a])
-        out.append(rep)
-        last = b
-    out.append(stmt[last:])
-    return "".join(out)
-
 
 def _split_at_top_level_where(s: str) -> tuple[str, str | None]:
     """Split ``s`` at its first TOP-LEVEL ``WHERE`` keyword — outside
@@ -749,34 +404,11 @@ class KeyedSqlRouter:
     def _is_keyed(self, ns: str, name: str) -> bool:
         return self.store.registry.exists(f"{ns}.{name}")
 
-    def _resolve(self, statement: str) -> str:
-        """Manifest-authority mode: resolve registered ``ns.name``
-        references to their membership-aware temp views before stock
-        Spark parses the statement (see
-        :func:`resolve_keyed_dotted_names`).  POSIX mode passes through
-        untouched — the session catalog's external tables resolve
-        dot-qualified names natively there."""
-        if not getattr(self.store, "manifest_authority", False):
-            return statement
-        try:
-            current_db = self.spark.catalog.currentDatabase()
-        except Exception:
-            current_db = None
-        return resolve_keyed_dotted_names(
-            statement,
-            self._is_keyed,
-            lambda ns, name: self.store._view_name(
-                self.store.registry.get(f"{ns}.{name}")
-            ),
-            current_db=current_db,
-            bare_shadowed=self._catalog_shadows,
-        )
-
     def _source_df(self, source_sql: str) -> DataFrame:
         src = source_sql.strip().rstrip(";").strip()
         if re.match(r"^\(?\s*values\b", src, re.IGNORECASE):
             return self.spark.sql(f"SELECT * FROM {src}")
-        return self.spark.sql(self._resolve(src))
+        return self.spark.sql(src)
 
     def _conform(
         self, df: DataFrame, spec: TableSpec, cols: str | None = None
@@ -815,18 +447,14 @@ class KeyedSqlRouter:
     def _catalog_shadows(self, target: str) -> bool:
         """True when a catalog relation the router did NOT create
         shadows the bare table name under Spark's resolution precedence
-        (r13 review fix, widened per r13 VERDICT item 2): the bare-name
-        fast paths serve the relation a plain ``SELECT *`` would read,
-        so they must defer to ANY same-bare-name binding the user made
-        themselves — a temp view (both storage modes), or, in
-        manifest-authority mode, a permanent catalog table or view (the
-        store owns NO session-catalog entries there, so every catalog
-        hit is user-created).  In POSIX mode a non-temporary hit is the
-        keyed table's OWN external registration (db == namespace), so
-        it is not a shadow.  Qualified ``ns.name`` references stay
-        registry-resolved — the reference's ``lookupRelation`` seam —
-        and ``global_temp.x`` never resolves bare in Spark, so neither
-        reaches this check."""
+        (r13 review fix): the bare-name fast paths serve the relation a
+        plain ``SELECT *`` would read, so they must defer to a
+        same-bare-name temp view the user made themselves.  A
+        non-temporary hit is the keyed table's OWN external
+        registration (db == namespace), so it is not a shadow.
+        Qualified ``ns.name`` references stay registry-resolved — the
+        reference's ``lookupRelation`` seam — and ``global_temp.x``
+        never resolves bare in Spark, so neither reaches this check."""
         bare = _unquote(target)
         if "." in bare:
             return False
@@ -834,21 +462,19 @@ class KeyedSqlRouter:
             t = self.spark.catalog.getTable(bare)
         except Exception:
             return False
-        if t.tableType == "TEMPORARY":
-            return True
-        return bool(getattr(self.store, "manifest_authority", False))
+        return t.tableType == "TEMPORARY"
 
     def _rel(self, ref: str) -> DataFrame:
         """Resolve a router-form table reference — ``(subquery)`` or a
-        (possibly dot-qualified) name — through :meth:`_resolve`, so
-        keyed tables work in both storage modes and plain views/tables
-        pass straight through.  The ONE source-resolution seam shared
+        (possibly dot-qualified) name — through Spark SQL, where keyed
+        tables resolve through their catalog registration and plain
+        views/tables pass straight through.  The ONE source-resolution seam shared
         by every rewriting router form (SIMILARITY JOIN, NEAR
         DUPLICATES) — review fix: inlined copies drift."""
         ref = ref.strip()
         if ref.startswith("("):
-            return self.spark.sql(self._resolve(ref[1:-1]))
-        return self.spark.sql(self._resolve(f"SELECT * FROM {ref}"))
+            return self.spark.sql(ref[1:-1])
+        return self.spark.sql(f"SELECT * FROM {ref}")
 
     def _near_duplicates(self, m) -> DataFrame:
         """``NEAR DUPLICATES`` — the dedup family's SQL surface at the
@@ -871,8 +497,7 @@ class KeyedSqlRouter:
         everything.  Both return ``(id_a, id_b, jac)`` with jac
         rounded to 4 (the shared determinism law), thresholded at
         THRESHOLD (default 0.6) over SHINGLE-gram shingles (default
-        3).  The source resolves through :meth:`_resolve`, so keyed
-        tables work in both storage modes."""
+        3).  The source resolves through :meth:`_rel`."""
         from spark_sql_hbase_spark.operators import dedup
 
         src = self._rel(m.group("src"))
@@ -917,14 +542,13 @@ class KeyedSqlRouter:
         REGISTERED centroid relation — a table/view with columns
         ``(cell, cv)``, e.g. one persisted by
         :func:`~...similarity.persist_ivfpq_model` — resolved through
-        the same :meth:`_resolve` seam as the corpus (no model DDL
+        the same :meth:`_rel` seam as the corpus (no model DDL
         invented); PROBES sets nprobe (default 2).  The model rides a
         broadcast; cell assignment is row-local; the probed pairs
         multiply only the query side — the pinned IVF cost law.
 
-        All three table references resolve through :meth:`_resolve`,
-        so keyed tables work in BOTH storage modes; plain temp views
-        and catalog tables pass straight through.  The plan is
+        All three table references resolve through :meth:`_rel`;
+        plain temp views and catalog tables pass straight through.  The plan is
         whatever the operator builds — broadcast query side,
         corpus-scan cost law, shuffle-free top-k window (the pinned
         ANN shapes)."""
@@ -1264,19 +888,7 @@ class KeyedSqlRouter:
                     raise ValueError(
                         "MERGE over keyed tables supports ON row_key only"
                     )
-                # the source is a bare table fragment, not a statement —
-                # resolve it directly (the position-based resolver needs
-                # a FROM/USING context a fragment doesn't carry)
-                src = m.group("src")
-                if getattr(self.store, "manifest_authority", False):
-                    sns, sname = _split_qualified(src, self.spark)
-                    if self._is_keyed(sns, sname):
-                        src = "`{}`".format(
-                            self.store._view_name(
-                                self.store.registry.get(f"{sns}.{sname}")
-                            )
-                        )
-                src_df = self.spark.table(src)
+                src_df = self.spark.table(m.group("src"))
                 self.store.upsert(f"{ns}.{name}", src_df)
                 return self.spark.sql("SELECT 1 WHERE 1=0")
         elif re.match(r"^\s*merge\b", stmt, re.IGNORECASE):
@@ -1434,36 +1046,7 @@ class KeyedSqlRouter:
                 self.store.drop_namespace(ns, cascade=cascade)
                 return self.spark.sql("SELECT 1 WHERE 1=0")
 
-        if getattr(self.store, "manifest_authority", False):
-            m = _SHOW_TABLES_RE.match(stmt)
-            if m:
-                # manifest mode has no catalog TABLE entries, so SHOW
-                # TABLES lists only temp views — add the registry's
-                # tables for the namespace (the listing the reference's
-                # external catalog serves, HBaseSessionCatalog.scala)
-                try:
-                    ns = (
-                        _unquote(m.group("ns"))
-                        if m.group("ns")
-                        else self.spark.catalog.currentDatabase()
-                    )
-                except Exception:
-                    ns = None
-                base = self.spark.sql(stmt)
-                if ns is None:
-                    return base
-                names = [
-                    q.split(".", 1)[1]
-                    for q in self.store.registry.tables(ns)
-                ]
-                if not names:
-                    return base
-                extra = self.spark.createDataFrame(
-                    [(ns, n, False) for n in names], base.schema
-                )
-                return base.unionByName(extra)
-
-        return self.spark.sql(self._resolve(statement))
+        return self.spark.sql(statement)
 
     def _alter_table(self, ns: str, name: str, rest: str) -> DataFrame:
         """ALTER TABLE over a keyed table (reference ``alterTable`` /
@@ -1514,9 +1097,7 @@ class KeyedSqlRouter:
         # "options (generator='x')") must not inject into the TableSpec
         options = _extract_options(rest[: as_m.start()] if as_m else rest)
         if as_m:  # CTAS — CreateHBaseTableAsSelectCommand.scala:18-88
-            # the CTAS source may itself reference keyed tables
-            # dot-qualified — resolve (manifest mode) before Spark parses
-            query = self.spark.sql(self._resolve(as_m.group("query").strip()))
+            query = self.spark.sql(as_m.group("query").strip())
             cols = [(f.name, f.dataType.simpleString()) for f in query.schema.fields]
             spec = _spec_from_columns(ns, name, cols, options)
             # conform bare names to the spec's cf-qualified layout (by name,

@@ -28,17 +28,24 @@ from pyspark.sql import functions as F
 from spark_sql_hbase_spark.catalog import TableSpec
 from spark_sql_hbase_spark.sources import bloom
 from spark_sql_hbase_spark.sources.keyed_parquet import KeyedTableStore
+from spark_sql_hbase_spark.sources.storage_io import LocalPosixIO
 
 
-@pytest.fixture(scope="module", params=["posix", "manifest"])
-def store(spark, tmp_path_factory, request):
-    # both storage layouts: POSIX hardlink carry (default) and
-    # manifests-as-listing (manifest_authority=True) — the whole suite
-    # must hold in either mode
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory, store_io):
+    # one membership rule (a generation's members are its directory's
+    # parquet files), under both carries of ``store_io``
     wh = str(tmp_path_factory.mktemp("bloom_wh"))
-    return KeyedTableStore(
-        spark, wh, manifest_authority=(request.param == "manifest")
-    )
+    return KeyedTableStore(spark, wh, io=store_io)
+
+
+def _sidecar_identity(store, path):
+    """What a carry preserves: the inode under ``LocalPosixIO``'s
+    hardlink carry, the bytes under a copy carry."""
+    if type(store.io) is LocalPosixIO:
+        return os.stat(path).st_ino
+    with open(path, "rb") as fh:
+        return fh.read()
 
 
 def _make_table(store, name, n=200, key_type="string", props=None):
@@ -239,29 +246,27 @@ def test_sidecars_are_cache_only(store):
 
 def test_selective_dml_carries_sidecars_without_rebuild(store, monkeypatch):
     """A selective DELETE rewrites one region; every carried file's
-    sidecar must ride the hardlink, and only rewritten files rebuild —
-    pinned by forbidding the builder from touching carried names."""
+    sidecar must ride the carry (the same inode under hardlink carry,
+    the same bytes under copy carry), and only rewritten files rebuild
+    — pinned by forbidding the builder from touching carried names."""
     _make_table(store, "t4", n=400)
     path0 = store.table_path(store.registry.get("bl.t4"))
     files0 = store._data_files(path0)
-    inode0 = {
-        bf: os.stat(os.path.join(path0, bloom.BLOOM_DIR, bf)).st_ino
+    sc0 = {
+        bf: _sidecar_identity(store, os.path.join(path0, bloom.BLOOM_DIR, bf))
         for bf in _sidecars(store, "bl.t4")
     }
-    assert inode0
+    assert sc0
     n = store.delete_where("bl.t4", "row_key = 'k0001'")
     assert n == 1
     path1 = store.table_path(store.registry.get("bl.t4"))
     files1 = store._data_files(path1)
-    carried = [f for f in files1 if f in files0 and f + ".bf" in inode0]
+    carried = [f for f in files1 if f in files0 and f + ".bf" in sc0]
     assert carried  # the delete was selective
     for f in carried:
-        assert (
-            os.stat(
-                os.path.join(path1, bloom.BLOOM_DIR, f + ".bf")
-            ).st_ino
-            == inode0[f + ".bf"]
-        )
+        assert _sidecar_identity(
+            store, os.path.join(path1, bloom.BLOOM_DIR, f + ".bf")
+        ) == sc0[f + ".bf"]
     assert _sidecars(store, "bl.t4") == _expected_sidecars(store, path1)
     # deleted key now plans zero files; neighbors still found
     assert store.get("bl.t4", ["k0001"]).collect() == []
@@ -319,10 +324,10 @@ def test_snapshot_restore_and_clone_carry_sidecars(store):
     _make_table(store, "t8", n=200)
     path0 = store.table_path(store.registry.get("bl.t8"))
     bf0 = _expected_sidecars(store, path0)
-    # inode per sidecar, captured BEFORE the source generation is
+    # identity per sidecar, captured BEFORE the source generation is
     # retired (hardlinks keep the inode alive through snapshot/clone)
-    inode0 = {
-        bf: os.stat(os.path.join(path0, bloom.BLOOM_DIR, bf)).st_ino
+    sc0 = {
+        bf: _sidecar_identity(store, os.path.join(path0, bloom.BLOOM_DIR, bf))
         for bf in bf0
     }
     store.snapshot("bl.t8", "t8_snap")
@@ -333,11 +338,11 @@ def test_snapshot_restore_and_clone_carry_sidecars(store):
 
     store.clone_snapshot("t8_snap", "bl.t8c")
     clone_path = store.table_path(store.registry.get("bl.t8c"))
-    # clone inherits the property AND the sidecars (hardlinks, no rebuild)
+    # clone inherits the property AND the sidecars (carried, no rebuild)
     assert store.registry.get("bl.t8c").properties["bloomfilter"] == "ROW"
     for bf in _expected_sidecars(store, clone_path):
-        dst = os.stat(os.path.join(clone_path, bloom.BLOOM_DIR, bf))
-        assert dst.st_ino == inode0[bf]
+        dst = os.path.join(clone_path, bloom.BLOOM_DIR, bf)
+        assert _sidecar_identity(store, dst) == sc0[bf]
     df = store.get("bl.t8c", ["k0111"])
     assert len(df.inputFiles()) < len(store._data_files(clone_path))
     assert df.count() == 1
@@ -660,7 +665,6 @@ def test_sidecars_match_scalar_build(store, monkeypatch, key_type, path):
     )
     store.insert(f"bl.{name}", df, generate_row_key=False)
     gen = store.table_path(spec)
-    refs = store._span_refs(gen)
     checked = 0
     for f in store._data_files(gen):
         if not os.path.exists(bloom.sidecar_path(gen, f)):
@@ -670,7 +674,7 @@ def test_sidecars_match_scalar_build(store, monkeypatch, key_type, path):
         m, k, _bits = bloom.unpack(got)
         want = bytearray((m + 7) >> 3)
         keys = pq.read_table(
-            store._file_abs(gen, f, refs), columns=["row_key"]
+            os.path.join(gen, f), columns=["row_key"]
         ).column(0).to_pylist()
         for v in keys:
             if v is not None:

@@ -21,6 +21,8 @@ exchange drops rewritten-but-unchanged rows.  This suite pins:
 - loud errors: no previous generation / unknown snapshot.
 """
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -31,15 +33,12 @@ from spark_sql_hbase_spark.sources.keyed_parquet import (
 )
 
 
-@pytest.fixture(scope="module", params=["posix", "manifest"])
-def store(spark, tmp_path_factory, request):
-    # both storage layouts: POSIX hardlink carry (default) and
-    # manifests-as-listing (manifest_authority=True) — the whole suite
-    # must hold in either mode
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory, store_io):
+    # one membership rule (a generation's members are its directory's
+    # parquet files), under both carries of ``store_io``
     wh = str(tmp_path_factory.mktemp("cdc_wh"))
-    return KeyedTableStore(
-        spark, wh, manifest_authority=(request.param == "manifest")
-    )
+    return KeyedTableStore(spark, wh, io=store_io)
 
 
 def _mk(store, spark, name, rows, split_keys=None):
@@ -688,20 +687,15 @@ def test_cross_table_snapshot_diff_is_refused(store, spark):
 def test_unconsumed_previous_feed_never_silently_drifts(store, spark):
     """The transient-base contract: a 'previous' feed left unconsumed
     across further rewrites must never SILENTLY return a different
-    diff.  POSIX layout: the base generation is swept, so the read
-    FAILS loudly at action time — the remediation is a snapshot base
-    (read_changes(versus=<snapshot>)).  Manifest-authority layout:
-    reference-aware GC keeps the pinned files' directories alive while
-    live generations reference them, so the feed keeps returning the
-    ORIGINAL pinned diff (immutability), which is the other acceptable
-    outcome — stale-but-exact, never drifted."""
+    diff: the base generation is swept, so the read FAILS loudly at
+    action time — the remediation is a snapshot base
+    (read_changes(versus=<snapshot>))."""
     _mk(store, spark, "trans", [(f"k{i:02d}", i) for i in range(8)])
     store.upsert(
         "cdc.trans",
         spark.createDataFrame([("k01", 100)], "row_key string, `cf:v` long"),
     )
     feed = store.read_changes("cdc.trans", versus="previous")
-    pinned = {("update", "k01", 100)}
     # further rewrites retire the feed's base generation
     store.upsert(
         "cdc.trans",
@@ -711,11 +705,8 @@ def test_unconsumed_previous_feed_never_silently_drifts(store, spark):
         "cdc.trans",
         spark.createDataFrame([("k03", 300)], "row_key string, `cf:v` long"),
     )
-    if store.manifest_authority:
-        assert _changes(feed) == pinned
-    else:
-        with pytest.raises(Exception):
-            feed.collect()
+    with pytest.raises(Exception):
+        feed.collect()
 
 
 def test_apply_changes_refuses_unknown_change_tags(store, spark):
@@ -853,15 +844,14 @@ def test_dml_job_counts_stay_fused(store, spark):
     point pins its batch once as a driver-resident Arrow local relation
     (one bounded collect, no statistics, probe-key or new-run probe
     jobs), and the changefeed itself is one row_key exchange.  Bounds
-    are the measured counts, identical in both storage modes; a
+    are the measured counts; a
     regression to the checkpoint-and-probe batch handling, to the
     stacked-exceptAll feed (9 jobs) or to the pre-fusion sequential
     replay (41+ jobs) fails loudly."""
     sc = spark.sparkContext
-    tag = "man" if store.manifest_authority else "pos"
 
     def jobs(label, fn):
-        label = f"{label}_{tag}"  # group ids accumulate per session
+        label = f"{label}_{uuid.uuid4().hex[:8]}"  # group ids accumulate per session
         sc.setJobGroup(label, label)
         try:
             fn()
@@ -884,8 +874,7 @@ def test_dml_job_counts_stay_fused(store, spark):
     assert n <= 7, f"delete_keys commit grew to {n} jobs"
     feed = store.read_changes("cdc.jobpin", versus="jp_s1")
     replica = KeyedTableStore(
-        store.spark, store.warehouse_dir + "_jp_replica",
-        manifest_authority=store.manifest_authority,
+        store.spark, store.warehouse_dir + "_jp_replica", io=store.io
     )
     store.export_snapshot("jp_s1", replica.warehouse_dir)
     n = jobs("jp_clone", lambda: replica.clone_snapshot("jp_s1", "cdc.jobpin"))
@@ -901,8 +890,9 @@ def test_dml_job_counts_stay_fused(store, spark):
     assert dst.exceptAll(src).unionAll(src.exceptAll(dst)).isEmpty()
 
     # the remaining keyed DML entry points, each on one key (measured
-    # 4 / 4 / 4 / 7 / 3 / 3 / 4 jobs in both storage modes; the
-    # conditional mutations' point read is also their locate)
+    # 4 / 4 / 4 / 7 / 3 / 3 / 3 / 4 jobs; the conditional mutations'
+    # point read is also their locate, and increment builds its row
+    # from that same read)
     def one(label, fn, bound, want):
         got = []
         n = jobs(label, lambda: got.append(fn()))
@@ -923,6 +913,8 @@ def test_dml_job_counts_stay_fused(store, spark):
         "cdc.jobpin", "k060", "cf:v", 60), 3, True)
     one("jp_check_put", lambda: store.check_and_put(
         "cdc.jobpin", "k070", "cf:v", 70, {"cf:v": 7070}), 3, True)
+    one("jp_increment", lambda: store.increment(
+        "cdc.jobpin", "k075", "cf:v", 5), 3, 80)
     one("jp_mutate", lambda: [r["applied"] for r in store.mutate(
         "cdc.jobpin", [
             {"op": "put", "key": "k080", "row": {"cf:v": 8080}},
@@ -932,9 +924,9 @@ def test_dml_job_counts_stay_fused(store, spark):
     got = {r["row_key"]: r["cf:v"] for r in store.read("cdc.jobpin").collect()}
     for k in ("k020", "k030", "k034", "k050", "k060", "k081"):
         assert k not in got, k
-    assert (got["k040"], got["k070"], got["k080"], got["k082"]) == (
-        41, 7070, 8080, 84
-    )
+    assert (
+        got["k040"], got["k070"], got["k075"], got["k080"], got["k082"]
+    ) == (41, 7070, 80, 8080, 84)
 
 
 def test_batch_pin_routes_agree(store, spark, monkeypatch):

@@ -27,15 +27,12 @@ from spark_sql_hbase_spark.catalog import TableSpec
 from spark_sql_hbase_spark.sources.keyed_parquet import KeyedTableStore
 
 
-@pytest.fixture(scope="module", params=["posix", "manifest"])
-def store(spark, tmp_path_factory, request):
-    # both storage layouts: POSIX hardlink carry (default) and
-    # manifests-as-listing (manifest_authority=True) — the whole suite
-    # must hold in either mode
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory, store_io):
+    # one membership rule (a generation's members are its directory's
+    # parquet files), under both carries of ``store_io``
     wh = str(tmp_path_factory.mktemp("cond_wh"))
-    return KeyedTableStore(
-        spark, wh, manifest_authority=(request.param == "manifest")
-    )
+    return KeyedTableStore(spark, wh, io=store_io)
 
 
 def _table(store, name, rows):
@@ -262,25 +259,66 @@ def test_increment_survives_concurrent_compaction(store):
     assert store.read("cd.t13").count() == 2
 
 
-def test_row_cas_refuses_sibling_qualifier_change(store):
-    """The lost-update shape the whole-row CAS exists for: a concurrent
-    write to a SIBLING qualifier (the incremented cell untouched) must
-    fail a stale read-modify-write — a cell-level check would pass it
-    and clobber the sibling."""
+def test_row_cas_refuses_sibling_qualifier_change(store, monkeypatch):
+    """The lost-update shape the whole-row read-modify-write exists
+    for: a concurrent write to a SIBLING qualifier (the incremented
+    cell untouched) that commits between increment's point read and
+    its flip must fail that stale attempt's generation CAS — the retry
+    re-reads and lands without clobbering the sibling."""
     _table(store, "t14", [("a", 1, "hi")])
-    snapshot = tuple(store.get("cd.t14", ["a"]).collect()[0])
-    # "concurrent" writer updates cf:note only; cf:n stays 1
-    assert store.check_and_put(
-        "cd.t14", "a", "cf:note", "hi", {"cf:n": 1, "cf:note": "bye"}
-    )
-    # stale whole-row CAS refuses even though cf:n still matches
-    assert not store._row_cas_put(
-        "cd.t14", "a", snapshot, {"cf:n": 2, "cf:note": "hi"}
-    )
-    assert _cell(store, "cd.t14", "a", "cf:note") == "bye"
-    # the public increment re-reads and lands WITHOUT touching the note
+    real = KeyedTableStore._point_row
+    reads = []
+
+    def racing_read(self, spec, path, files, key):
+        out = real(self, spec, path, files, key)
+        reads.append(out[0])
+        if len(reads) == 1:
+            # "concurrent" writer updates cf:note only; cf:n stays 1
+            monkeypatch.setattr(KeyedTableStore, "_point_row", real)
+            assert store.check_and_put(
+                "cd.t14", "a", "cf:note", "hi", {"cf:n": 1, "cf:note": "bye"}
+            )
+            monkeypatch.setattr(KeyedTableStore, "_point_row", racing_read)
+        return out
+
+    monkeypatch.setattr(KeyedTableStore, "_point_row", racing_read)
     assert store.increment("cd.t14", "a", "cf:n", 4) == 5
+    monkeypatch.undo()
+    # the stale attempt read the old note; the retry read the new one
+    assert [r[2] for r in reads] == ["hi", "bye"]
     assert _cell(store, "cd.t14", "a", "cf:note") == "bye"
+    assert _cell(store, "cd.t14", "a", "cf:n") == 5
+
+
+def test_increment_retries_bound_the_attempts(store, monkeypatch):
+    """``retries`` is the attempt budget: an increment whose every
+    attempt loses the generation CAS raises after exactly that many
+    attempts, and the table is unchanged."""
+    from spark_sql_hbase_spark.sources.keyed_parquet import (
+        ConcurrentWriteConflictError,
+    )
+
+    _table(store, "t15", [("a", 1, "hi")])
+    real = KeyedTableStore._point_row
+    reads = []
+
+    def always_raced(self, spec, path, files, key):
+        reads.append(key)
+        out = real(self, spec, path, files, key)
+        # a "concurrent" commit after every read: a fresh generation
+        monkeypatch.setattr(KeyedTableStore, "_point_row", real)
+        store.compact("cd.t15")
+        monkeypatch.setattr(KeyedTableStore, "_point_row", always_raced)
+        return out
+
+    monkeypatch.setattr(KeyedTableStore, "_point_row", always_raced)
+    with pytest.raises(ConcurrentWriteConflictError):
+        store.increment("cd.t15", "a", "cf:n", 1, retries=3)
+    monkeypatch.undo()
+    assert len(reads) == 3
+    assert _cell(store, "cd.t15", "a", "cf:n") == 1
+    with pytest.raises(ValueError, match="retries"):
+        store.increment("cd.t15", "a", "cf:n", 1, retries=0)
 
 
 # -- batched mutations (HBase Table.batch parity) -------------------------

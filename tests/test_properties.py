@@ -2580,191 +2580,6 @@ def test_versioned_cell_replication_converges(spark, tmp_path_factory, ops):
     src.delete_snapshot("prv_s1")
 
 
-# -- manifest-mode name resolution (sqlfront.resolve_keyed_dotted_names) --
-#
-# The resolver is a quote/comment-aware string rewrite on the session's
-# SQL dispatch path; a bug here either corrupts a statement (rewriting
-# inside a literal) or silently fails to resolve (missing an identifier
-# position).  Properties: (1) literal/comment content is BYTE-IDENTICAL
-# through the resolver no matter what table-like names it contains;
-# (2) every dotted identifier-position reference to a registered pair
-# resolves; (3) non-registered pairs never rewrite.
-
-_name_frag = st.text(
-    alphabet="abcdefgh_123", min_size=1, max_size=8
-).filter(lambda s: s[0].isalpha() or s[0] == "_")
-
-
-@st.composite
-def resolver_case(draw):
-    ns = draw(_name_frag)
-    tbl = draw(_name_frag)
-    other_ns = draw(_name_frag.filter(lambda s: s != ns))
-    # no backslash: Spark's lexer treats it as an escape, so a literal
-    # ending in a lone backslash is UNTERMINATED — not a resolver input
-    lit = draw(
-        st.text(
-            alphabet="abc.xyz `/*-'\"", min_size=0, max_size=12
-        ).map(lambda s: s.replace("'", "''"))
-    )
-    return ns, tbl, other_ns, lit
-
-
-@settings(max_examples=40, deadline=None, suppress_health_check=list(HealthCheck))
-@given(resolver_case())
-def test_resolver_rewrites_identifiers_never_literals(case):
-    from spark_sql_hbase_spark.sqlfront import resolve_keyed_dotted_names
-
-    ns, tbl, other_ns, lit = case
-    registered = {(ns, tbl)}
-    view = f"{ns}__{tbl}"
-    stmt = (
-        f"SELECT x, '{lit}', 'ns.{tbl}' AS t1 /* {ns}.{tbl} */ "
-        f"FROM {ns}.{tbl} JOIN {other_ns}.{tbl} USING (x) "
-        f"-- trailing {ns}.{tbl}\n"
-        f"WHERE y = `{ns}`.`{tbl}`.y"
-    )
-    out = resolve_keyed_dotted_names(
-        stmt,
-        lambda a, b: (a, b) in registered,
-        lambda a, b: f"{a}__{b}",
-    )
-    # (1) literal and comment bodies survive byte-identical
-    assert f"'{lit}'" in out
-    assert f"/* {ns}.{tbl} */" in out
-    assert f"-- trailing {ns}.{tbl}\n" in out
-    # (2) the registered FROM reference resolved, aliased back to the
-    # table name so qualified column refs keep working
-    assert f"FROM `{view}` AS `{tbl}`" in out
-    # (3) the non-registered pair is untouched
-    assert f"JOIN {other_ns}.{tbl} " in out
-    # a db-qualified column reference of the rewritten relation
-    # re-qualifies to the relation alias (never to the view's columns
-    # of some unrelated chain)
-    assert f"WHERE y = `{tbl}`.y" in out
-
-
-def test_resolver_table_position_only():
-    from spark_sql_hbase_spark.sqlfront import resolve_keyed_dotted_names
-
-    is_keyed = lambda a, b: (a, b) in {("ma", "dq"), ("ma", "t2")}
-    view = lambda a, b: f"{a}__{b}"
-    # review finding: qualified column refs must keep resolving — the
-    # rewrite aliases the view back to the bare table name
-    out = resolve_keyed_dotted_names(
-        "SELECT dq.row_key FROM ma.dq WHERE dq.v > 0", is_keyed, view
-    )
-    assert out == (
-        "SELECT dq.row_key FROM `ma__dq` AS `dq` WHERE dq.v > 0"
-    )
-    # review finding: an alias colliding with a registered pair in a
-    # non-table position must NOT rewrite
-    out = resolve_keyed_dotted_names("SELECT ma.dq FROM other ma", is_keyed, view)
-    assert out == "SELECT ma.dq FROM other ma"
-    # review finding: comma-separated FROM lists resolve every member
-    out = resolve_keyed_dotted_names(
-        "SELECT * FROM dq, t2 WHERE dq.x = t2.x",
-        is_keyed, view, current_db="ma",
-    )
-    assert out == (
-        "SELECT * FROM `ma__dq` AS `dq`, `ma__t2` AS `t2` "
-        "WHERE dq.x = t2.x"
-    )
-    # explicit aliases are preserved, no AS appended
-    out = resolve_keyed_dotted_names(
-        "SELECT a.x FROM ma.dq a JOIN ma.t2 AS b USING (x)", is_keyed, view
-    )
-    assert out == "SELECT a.x FROM `ma__dq` a JOIN `ma__t2` AS b USING (x)"
-    # spark_catalog 3-part form resolves; 3-part with another catalog not
-    out = resolve_keyed_dotted_names(
-        "SELECT * FROM spark_catalog.ma.dq", is_keyed, view
-    )
-    assert out == "SELECT * FROM `ma__dq` AS `dq`"
-    out = resolve_keyed_dotted_names("SELECT * FROM othercat.ma.dq", is_keyed, view)
-    assert out == "SELECT * FROM othercat.ma.dq"
-    # TVFs after FROM are not table refs
-    out = resolve_keyed_dotted_names(
-        "SELECT * FROM range(10)", is_keyed, view, current_db="ma"
-    )
-    assert out == "SELECT * FROM range(10)"
-    # DESCRIBE modifiers keep table position open; command positions
-    # (DESCRIBE/TABLE/INTO) never take the alias — it would be invalid
-    out = resolve_keyed_dotted_names("DESCRIBE EXTENDED ma.dq", is_keyed, view)
-    assert out == "DESCRIBE EXTENDED `ma__dq`"
-    out = resolve_keyed_dotted_names("CACHE TABLE ma.dq", is_keyed, view)
-    assert out == "CACHE TABLE `ma__dq`"
-    # a comma AFTER a join's ON expression re-enters the FROM list
-    out = resolve_keyed_dotted_names(
-        "SELECT * FROM ma.dq t1 LEFT JOIN ma.t2 ON t1.k = t2.k, ma.t2 z",
-        is_keyed, view,
-    )
-    assert out == (
-        "SELECT * FROM `ma__dq` t1 LEFT JOIN `ma__t2` AS `t2` "
-        "ON t1.k = t2.k, `ma__t2` z"
-    )
-    # subqueries resolve at their own depth; outer refs unaffected
-    out = resolve_keyed_dotted_names(
-        "WITH c AS (SELECT * FROM ma.dq) SELECT * FROM c", is_keyed, view
-    )
-    assert out == "WITH c AS (SELECT * FROM `ma__dq` AS `dq`) SELECT * FROM c"
-    # review r11 round 2: TABLESAMPLE/FOR precede the alias slot in the
-    # grammar — the rewrite must NOT inject AS ahead of them
-    out = resolve_keyed_dotted_names(
-        "SELECT * FROM ma.dq TABLESAMPLE (10 PERCENT)", is_keyed, view
-    )
-    assert out == "SELECT * FROM `ma__dq` TABLESAMPLE (10 PERCENT)"
-    # SORT/DISTRIBUTE/CLUSTER BY end the FROM list: their commas are
-    # expression separators, never table refs
-    out = resolve_keyed_dotted_names(
-        "SELECT * FROM dq SORT BY a, t2",
-        is_keyed, view, current_db="ma",
-    )
-    assert out == "SELECT * FROM `ma__dq` AS `dq` SORT BY a, t2"
-    # a comment interposed inside a dotted chain is never deleted
-    stmt = "SELECT * FROM ma /* keep me */ .dq"
-    assert resolve_keyed_dotted_names(stmt, is_keyed, view) == stmt
-    # CREATE ... USING <format> on the fall-through path: the format
-    # word is not a table reference even if a table shares its name
-    out = resolve_keyed_dotted_names(
-        "CREATE TABLE t2x (x INT) USING dq",
-        is_keyed, view, current_db="ma",
-    )
-    assert out == "CREATE TABLE t2x (x INT) USING dq"
-    # ...but MERGE's USING source still resolves
-    out = resolve_keyed_dotted_names(
-        "MERGE INTO other USING ma.dq ON k WHEN MATCHED THEN UPDATE SET *",
-        is_keyed, view,
-    )
-    assert "USING `ma__dq`" in out
-    # db-qualified COLUMN refs of a rewritten relation re-qualify to
-    # the alias — every POSIX-valid qualifier shape keeps resolving
-    out = resolve_keyed_dotted_names(
-        "SELECT ma.dq.*, ma.dq.v FROM ma.dq WHERE ma.dq.v > 1",
-        is_keyed, view,
-    )
-    assert out == (
-        "SELECT `dq`.*, `dq`.v FROM `ma__dq` AS `dq` WHERE `dq`.v > 1"
-    )
-    # ...only for pairs rewritten as relations IN THIS statement
-    out = resolve_keyed_dotted_names(
-        "SELECT ma.t2.v FROM ma.dq", is_keyed, view
-    )
-    assert out == "SELECT ma.t2.v FROM `ma__dq` AS `dq`"
-
-
-def test_resolver_bare_name_needs_table_position():
-    from spark_sql_hbase_spark.sqlfront import resolve_keyed_dotted_names
-
-    out = resolve_keyed_dotted_names(
-        "SELECT t FROM t WHERE t > 0 AND f(t) = t",
-        lambda a, b: (a, b) == ("db", "t"),
-        lambda a, b: f"{a}__{b}",
-        current_db="db",
-    )
-    # only the FROM position resolves; the column/function uses survive
-    assert out == "SELECT t FROM `db__t` AS `t` WHERE t > 0 AND f(t) = t"
-
-
 # ---------------------------------------------------------------------------
 # Round 11: SQ8 quantizer / embedding outliers / TF-IDF cosine / Lloyd loop
 # ---------------------------------------------------------------------------

@@ -31,15 +31,12 @@ from spark_sql_hbase_spark.catalog import TableSpec
 from spark_sql_hbase_spark.sources.keyed_parquet import KeyedTableStore
 
 
-@pytest.fixture(scope="module", params=["posix", "manifest"])
-def store(spark, tmp_path_factory, request):
-    # both storage layouts: POSIX hardlink carry (default) and
-    # manifests-as-listing (manifest_authority=True) — the whole suite
-    # must hold in either mode
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory, store_io):
+    # one membership rule (a generation's members are its directory's
+    # parquet files), under both carries of ``store_io``
     wh = str(tmp_path_factory.mktemp("retention_wh"))
-    return KeyedTableStore(
-        spark, wh, manifest_authority=(request.param == "manifest")
-    )
+    return KeyedTableStore(spark, wh, io=store_io)
 
 
 def _versioned_table(store, name, props=None, n_keys=40, n_versions=6):

@@ -72,17 +72,12 @@ def test_refresh_after_external_write(session):
 # ---------------------------------------------------------------------------
 
 
-@pytest.fixture(params=["posix", "manifest"])
-def sql_session(spark, tmp_path, request):
-    # the SQL surface must be mode-complete: POSIX resolves dot-qualified
-    # names through the session catalog's external tables; manifest-
-    # authority mode through the router's name resolution (VERDICT r10
-    # item 1) — every statement shape below must hold in BOTH
-    sess = EngineSession(
-        spark=spark,
-        warehouse_dir=str(tmp_path / "wh"),
-        manifest_authority=(request.param == "manifest"),
-    )
+@pytest.fixture
+def sql_session(spark, tmp_path, store_io):
+    # dot-qualified names resolve through the session catalog's external
+    # tables; every statement shape below must hold under both carries
+    sess = EngineSession(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    sess.store.io = store_io
     prev = spark.catalog.currentDatabase()
     yield sess
     spark.catalog.setCurrentDatabase(prev)
@@ -185,15 +180,8 @@ def test_sql_unparseable_insert_on_keyed_table_fails_loudly(sql_session):
 def test_analyze_and_describe_keyed_catalog_table(sql_session):
     """Keyed tables are real session-catalog entries: ANALYZE TABLE
     computes CBO stats and DESCRIBE EXTENDED surfaces them (the stats
-    feed Catalyst's join-size estimates at planning time).
-
-    POSIX-layout surface only: catalog CBO stats live on catalog TABLE
-    entries, which manifest-authority mode deliberately has none of
-    (membership is the manifest, not a directory the catalog could
-    scan) — there, AQE's runtime-exact stats serve the same role."""
+    feed Catalyst's join-size estimates at planning time)."""
     sess = sql_session
-    if sess.store.manifest_authority:
-        pytest.skip("catalog CBO stats are a catalog-table (POSIX) surface")
     sess.sql("CREATE TABLE pw.stats_t (row_key string, `cf:v` long) USING keyed")
     sess.sql(
         "insert into pw.stats_t select format_string('%04d', id), id * 3 "
@@ -415,6 +403,48 @@ def test_sql_merge_upsert_and_loud_failure(spark, tmp_path):
             "MERGE INTO mg.t USING __mg_updates ON row_key "
             "WHEN MATCHED THEN UPDATE SET `c:v` = 1"
         )
+
+
+def test_sql_merge_from_keyed_dotted_source(spark, tmp_path):
+    """MERGE INTO ... USING ns.src where the source is itself a keyed
+    table, named dot-qualified: it resolves through its catalog
+    registration, and the target takes the merged rows."""
+    from spark_sql_hbase_spark.session import EngineSession
+
+    sess = EngineSession(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    sess.sql("CREATE TABLE mk.mt (row_key STRING, `cf:v` BIGINT) USING keyed")
+    sess.sql("INSERT INTO mk.mt VALUES ('k1', 1), ('k2', 2)")
+    sess.sql("CREATE TABLE mk.ms (row_key STRING, `cf:v` BIGINT) USING keyed")
+    sess.sql("INSERT INTO mk.ms VALUES ('k2', 22), ('k3', 33)")
+    sess.sql(
+        "MERGE INTO mk.mt USING mk.ms ON row_key "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *"
+    )
+    got = {
+        (r["row_key"], r["cf:v"])
+        for r in sess.sql("SELECT * FROM mk.mt").collect()
+    }
+    assert got == {("k1", 1), ("k2", 22), ("k3", 33)}
+
+
+def test_sql_ctas_from_keyed_dotted_source(spark, tmp_path):
+    """CTAS whose source query reads a keyed table dot-qualified: the
+    new keyed table holds exactly the filtered source rows."""
+    from spark_sql_hbase_spark.session import EngineSession
+
+    sess = EngineSession(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    sess.sql("CREATE TABLE ck.src (row_key STRING, `cf:v` BIGINT) USING keyed")
+    sess.sql("INSERT INTO ck.src VALUES ('k1', 1), ('k2', 2), ('k3', 3)")
+    sess.sql(
+        "CREATE TABLE ck.dst USING keyed AS "
+        "SELECT row_key, `cf:v` FROM ck.src WHERE `cf:v` > 1"
+    )
+    got = {
+        (r["row_key"], r["cf:v"])
+        for r in sess.sql("SELECT * FROM ck.dst").collect()
+    }
+    assert got == {("k2", 2), ("k3", 3)}
 
 
 def test_sql_delete_update_route_and_guards(spark, tmp_path):
@@ -784,64 +814,6 @@ def test_sql_bare_count_defers_to_shadowing_temp_view(spark, tmp_path):
     finally:
         spark.catalog.dropTempView("test")
         spark.catalog.setCurrentDatabase(prev_db)
-
-
-def test_sql_bare_name_defers_to_permanent_catalog_table(spark, tmp_path):
-    """r13 VERDICT item 2: in manifest-authority mode the router owns NO
-    session-catalog entries, so a PERMANENT catalog table sharing a keyed
-    table's bare name is user-created and wins bare-name resolution —
-    for the bare-count fast path AND the resolver's plain-SELECT rewrite
-    alike (the two must read the same relation).  The dot-qualified
-    keyed form stays registry-resolved and keeps the footer count."""
-    from spark_sql_hbase_spark.plans.pushdown import formatted_plan
-    from spark_sql_hbase_spark.session import EngineSession
-    from spark_sql_hbase_spark.sources.fixtures import pw_test_df, pw_test_spec
-
-    sess = EngineSession(
-        spark=spark,
-        warehouse_dir=str(tmp_path / "wh"),
-        manifest_authority=True,
-    )
-    sess.store.create_table(pw_test_spec())
-    sess.store.insert(
-        "pw.test", pw_test_df(spark), overwrite=True, generate_row_key=False
-    )
-    keyed_n = sess.store.read("pw.test").count()
-    cat_n = 3
-    prev_db = spark.catalog.currentDatabase()
-    had_db = spark.catalog.databaseExists("pw")
-    spark.sql("CREATE DATABASE IF NOT EXISTS pw")
-    try:
-        spark.catalog.setCurrentDatabase("pw")
-        pw_test_df(spark).limit(cat_n).write.mode("overwrite").saveAsTable(
-            "pw.test"
-        )
-        assert spark.catalog.getTable("test").tableType != "TEMPORARY"
-        shadowed = sess.sql("SELECT COUNT(*) FROM test")
-        assert "LocalTableScan" not in formatted_plan(shadowed)
-        assert shadowed.collect()[0][0] == cat_n
-        # the plain-SELECT seam reads the SAME relation as the count
-        assert sess.sql("SELECT * FROM test").count() == cat_n
-        # dot-qualified keeps the registry authority + footer count
-        qualified = sess.sql("SELECT COUNT(*) FROM pw.test")
-        assert "LocalTableScan" in formatted_plan(qualified)
-        assert qualified.collect()[0][0] == keyed_n
-        assert sess.sql("SELECT * FROM pw.test").count() == keyed_n
-        # catalog table dropped -> the bare name is keyed again
-        spark.sql("DROP TABLE pw.test")
-        bare = sess.sql("SELECT COUNT(*) FROM test")
-        assert "LocalTableScan" in formatted_plan(bare)
-        assert bare.collect()[0][0] == keyed_n
-        assert sess.sql("SELECT * FROM test").count() == keyed_n
-    finally:
-        # drop only what THIS test created: the database is shared
-        # state other suites' POSIX stores register their tables in
-        # (a bare DROP DATABASE here failed the full battery on the
-        # leftover siblings)
-        spark.sql("DROP TABLE IF EXISTS pw.test")
-        spark.catalog.setCurrentDatabase(prev_db)
-        if not had_db:
-            spark.sql("DROP DATABASE IF EXISTS pw")
 
 
 def test_similarity_join_sql_ivf_model_matches_operator(spark, tmp_path):

@@ -38,24 +38,20 @@ from spark_sql_hbase_spark.catalog import TableSpec
 from spark_sql_hbase_spark.sources.keyed_parquet import KeyedTableStore
 
 
-@pytest.fixture(scope="module", params=["posix", "manifest"])
-def store(spark, tmp_path_factory, request):
-    # both storage layouts: POSIX hardlink carry (default) and
-    # manifests-as-listing (manifest_authority=True) — the whole suite
-    # must hold in either mode
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory, store_io):
+    # one membership rule (a generation's members are its directory's
+    # parquet files), under both carries of ``store_io``
     wh = str(tmp_path_factory.mktemp("split_wh"))
-    return KeyedTableStore(
-        spark, wh, manifest_authority=(request.param == "manifest")
-    )
+    return KeyedTableStore(spark, wh, io=store_io)
 
 
 def _file_ranges(store, spec):
     """[(min_key, max_key, n_rows)] for every data file of the CURRENT
     generation, via the store's own exact footer/fallback reader."""
     path = store.table_path(spec)
-    refs = store._span_refs(path)
     return [
-        store._file_key_range(store._file_abs(path, f, refs))
+        store._file_key_range(os.path.join(path, f))
         for f in store._data_files(path)
     ]
 
