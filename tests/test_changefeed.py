@@ -929,6 +929,77 @@ def test_dml_job_counts_stay_fused(store, spark):
     ) == (41, 7070, 80, 8080, 84)
 
 
+def test_indexed_dml_job_counts_stay_fused(store, spark):
+    """Job-count pins for keyed DML on a table with one covered index:
+    each write below is small enough for the delta route (drop the
+    changed keys' index entries, append their fresh projections), and
+    the replica's feed replay is the changefeed-ship shape.  Bounds are
+    the counts measured before the index decision moved into the commit
+    tail; the index must equal the main table's projection at the end."""
+    sc = spark.sparkContext
+
+    def jobs(label, fn):
+        label = f"{label}_{uuid.uuid4().hex[:8]}"  # group ids accumulate per session
+        sc.setJobGroup(label, label)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup("idle", "idle")
+        return len(sc.statusTracker().getJobIdsForGroup(label))
+
+    _mk(store, spark, "ixpin", [(f"k{i:03d}", i) for i in range(120)])
+    store.snapshot("cdc.ixpin", "ixp_s1")
+    store.create_covered_index("cdc.ixpin", "cdc.ixpin_by_v", "cf:v", key_width=6)
+    replica = KeyedTableStore(
+        store.spark, store.warehouse_dir + "_ixp_replica", io=store.io
+    )
+    store.export_snapshot("ixp_s1", replica.warehouse_dir)
+    replica.clone_snapshot("ixp_s1", "cdc.ixpin")
+    replica.create_covered_index(
+        "cdc.ixpin", "cdc.ixpin_by_v", "cf:v", key_width=6
+    )
+    got = {}
+    got["upsert"] = jobs("ixp_upsert", lambda: store.upsert(
+        "cdc.ixpin",
+        spark.createDataFrame([("k005", 500)], "row_key string, `cf:v` long"),
+    ))
+    got["delete_keys"] = jobs("ixp_delete_keys", lambda: store.delete_keys(
+        "cdc.ixpin", spark.createDataFrame([("k010",)], "row_key string")
+    ))
+    got["delete_where"] = jobs("ixp_delete_where", lambda: store.delete_where(
+        "cdc.ixpin", "row_key = 'k020'"
+    ))
+    got["mutate"] = jobs("ixp_mutate", lambda: store.mutate("cdc.ixpin", [
+        {"op": "increment", "key": "k030", "col": "cf:v", "delta": 2},
+    ]))
+    got["insert"] = jobs("ixp_insert", lambda: store.insert(
+        "cdc.ixpin",
+        spark.createDataFrame(
+            [("y001", 1001), ("y002", 1002)], "row_key string, `cf:v` long"
+        ),
+        generate_row_key=False,
+    ))
+    feed = store.read_changes("cdc.ixpin", versus="ixp_s1")
+    got["apply_changes"] = jobs(
+        "ixp_apply", lambda: replica.apply_changes("cdc.ixpin", feed)
+    )
+    bounds = {
+        "upsert": 19, "delete_keys": 19, "delete_where": 15, "mutate": 16,
+        "insert": 7, "apply_changes": 24,
+    }
+    assert all(got[k] <= bounds[k] for k in bounds), (got, bounds)
+
+    def rows(st, qn, key):
+        return sorted((r[key], r["cf:v"]) for r in st.read(qn).collect())
+
+    main = rows(store, "cdc.ixpin", "row_key")
+    assert dict(main)["k030"] == 32 and "k010" not in dict(main)
+    for st in (store, replica):
+        assert rows(st, "cdc.ixpin", "row_key") == main
+        assert rows(st, "cdc.ixpin_by_v", "i:src_key") == main
+        assert not st.index_is_stale("cdc.ixpin_by_v")
+
+
 def test_batch_pin_routes_agree(store, spark, monkeypatch):
     """The batch pin has two routes — a driver-resident Arrow local
     relation under ``_BLOOM_MERGE_PROBE_MAX`` rows, ``localCheckpoint``
