@@ -229,13 +229,17 @@ class KeyedTableStore:
        :meth:`delete_where`, :meth:`delete_keys`, :meth:`delete_cells`
        and :meth:`update_where` are this stage with their own selector
        and transform.
-    3. Commit tail (:meth:`_commit`): one attempt under the CAS retry,
-       then covered-index maintenance outside it.  Stage 2 ends in it;
+    3. Commit tail (:meth:`_commit`): the one end of every write that
+       changes a table's rows — one attempt under the CAS retry, with
+       the whole covered-index decision around it (stale marker before,
+       delta or rebuild after, outside the retry).  Stage 2 ends in it;
        :meth:`upsert`, :meth:`check_and_put` / :meth:`increment` /
        :meth:`append_cell` (through ``_conditional_put``),
        :meth:`check_and_delete`, :meth:`mutate` and
        :meth:`apply_changes` pass their own attempt bodies (the check
-       read, the batched merge, the fused feed replay).
+       read, the batched merge, the fused feed replay), and so do
+       :meth:`insert`, :meth:`truncate_table` and
+       :meth:`restore_snapshot` with one attempt and no retry.
 
     Membership: a generation's members are exactly its directory's
     ``*.parquet`` files (:meth:`_data_files`).  A rewrite writes the
@@ -662,16 +666,19 @@ class KeyedTableStore:
         """TRUNCATE TABLE (HBase shell ``truncate``): replace the data
         with an empty footprint of the declared schema through the
         staged atomic swap — crash-safe like every other rewrite, and
-        registered covered indexes truncate with it (an empty table's
-        index is empty)."""
+        registered covered indexes truncate with it through the commit
+        tail (an empty table's index is empty)."""
         spec = self.registry.get(qualified_name)
         empty = self.spark.createDataFrame([], spec.schema())
 
-        def build(staging: str) -> None:
-            empty.write.mode("overwrite").parquet(staging)
+        def attempt() -> tuple:
+            self._swap_table_dir(
+                spec,
+                lambda staging: empty.write.mode("overwrite").parquet(staging),
+            )
+            return None, True, None
 
-        self._swap_table_dir(spec, build)
-        self._maintain_indexes(qualified_name, async_index=False)
+        self._commit(qualified_name, attempt, attempts=1)
 
     def exists(self, qualified_name: str) -> bool:
         return self.registry.exists(qualified_name)
@@ -906,7 +913,6 @@ class KeyedTableStore:
         self,
         qualified_name: str,
         changes: DataFrame,
-        async_index: bool = False,
         cells: bool = False,
     ) -> int:
         """Replay a changefeed onto a REPLICA table — the HBase
@@ -1045,15 +1051,10 @@ class KeyedTableStore:
         if cells:
             if s["ins"]:
                 # new version CELLS: pure append (nothing replaced)
-                self.insert(
-                    qualified_name, ins, generate_row_key=False,
-                    async_index=async_index,
-                )
+                self.insert(qualified_name, ins, generate_row_key=False)
             if not s["del"]:
                 return 0
-            return self.delete_cells(
-                qualified_name, dels.select(*cols), async_index=async_index
-            )
+            return self.delete_cells(qualified_name, dels.select(*cols))
         # key granularity: ONE fused locate + merge rewrite + swap
         # commits the puts AND the deletes together (the mutate()
         # drop_keys rewrite applied to a DataFrame feed) instead of an
@@ -1088,29 +1089,10 @@ class KeyedTableStore:
             # cannot see — replay sequentially through the generic
             # paths exactly as before
             if s["n_put"]:
-                self.upsert(qualified_name, puts, async_index=async_index)
-            return self.delete_keys(
-                qualified_name, del_keys, async_index=async_index
-            )
+                self.upsert(qualified_name, puts)
+            return self.delete_keys(qualified_name, del_keys)
         if not pin.n:
             return 0  # empty feed: a true no-op, no stale window
-        indexes = self.registered_indexes(qualified_name)
-        feed_maintenance = bool(indexes) and not async_index
-        if feed_maintenance:
-            # the feed IS the index delta: its rows are the changed
-            # keys' full post-replay state (one-row-per-key table), so
-            # ONE combined incremental pass per index (drop entries for
-            # every feed key, append projections of the put rows)
-            # replaces the generic per-DML maintenance passes.  Same
-            # smallness threshold as the DML capture path; a feed
-            # rewriting most of the table falls back to the generic
-            # full-rebuild route.
-            try:
-                table_rows = self._footer_row_count(self.table_path(spec))
-            except OSError:
-                table_rows = 0  # footer unreadable: the full rebuild
-            n_rows = s["ins"] + s["upd"] + s["del"]
-            feed_maintenance = 0 < n_rows * 4 < table_rows
         # One diff's put/delete key sets are disjoint (read_changes
         # drops a removed row whose key gained rows; n_both == 0) and
         # the puts ride the pinned feed through a plain filter.  An
@@ -1169,34 +1151,25 @@ class KeyedTableStore:
             # whether or not it existed — the sequential replay's count)
             n_deleted = n_del_only + s["n_both"]
             if not affected and not n_alive:
-                # nothing to rewrite or append
-                return n_deleted, not feed_maintenance, None
-            self._upsert_rewrite(
-                spec, qualified_name, puts_alive, None, affected, path,
-                schema, True,  # index maintenance handled below
+                # nothing to rewrite or append: no index pass either
+                return n_deleted, False, None
+            # the feed IS the index delta: its rows are the changed
+            # keys' full post-replay state (one-row-per-key table), so
+            # one pass per index drops the entries of every feed key
+            # and appends the projections of the surviving put rows
+            return n_deleted, True, self._upsert_rewrite(
+                spec, puts_alive,
+                (feed.select(rk), pin.keys, puts_alive, bool(n_alive)),
+                affected, path, schema,
                 batch_span=(
                     (s["put_lo"], s["put_hi"]) if n_alive else None
                 ),
-                footer_stats=stats, n_incoming=n_alive,
+                footer_stats=stats, n_changed=pin.n,
                 drop_keys=del_keys if s["del"] else None,
                 new_run_known_empty=not n_alive,
             )
-            # a large feed (or async) takes the generic maintenance
-            # route of the commit tail — full rebuild, or the loud
-            # stale marker; a small synchronous one its own feed pass
-            return n_deleted, not feed_maintenance, None
 
-        n = self._commit(qualified_name, attempt, async_index)
-        if feed_maintenance:
-            self._maintain_indexes_incremental(
-                indexes,
-                None,
-                feed.select(rk),
-                pin.keys,
-                changed_rows=puts_alive,
-                has_new_rows=bool(n_alive),
-            )
-        return n
+        return self._commit(qualified_name, attempt)
 
     @contextmanager
     def scan_lease(self, qualified_name: str):
@@ -1726,7 +1699,6 @@ class KeyedTableStore:
         overwrite: bool = False,
         generate_row_key: bool | None = None,
         maintain_indexes: bool = True,
-        async_index: bool = False,
     ) -> None:
         """INSERT INTO with pluggable row-key generation.
 
@@ -1743,14 +1715,14 @@ class KeyedTableStore:
         reference's default generator *always* overrides user-supplied
         keys — ``README.md:66``).
 
-        Registered covered indexes stay fresh: an APPEND insert appends
-        the index projection of exactly the inserted batch (O(batch),
-        the same delta-maintenance the streaming dual-write performs),
-        an OVERWRITE insert triggers a full rebuild, and
-        ``async_index=True`` defers with the loud stale marker.
+        Registered covered indexes stay fresh through the commit tail,
+        :meth:`_commit` (one attempt, no retry): an APPEND insert
+        appends the index projection of exactly the inserted batch
+        (O(batch), the same delta-maintenance the streaming dual-write
+        performs), an OVERWRITE insert triggers a full rebuild.
         ``maintain_indexes=False`` is for callers that manage the index
         themselves (the dual-write sink, and the index-append recursion
-        itself).
+        itself); such an insert bypasses the commit tail.
         """
         from spark_sql_hbase_spark.functions.rowkey import resolve
 
@@ -1774,8 +1746,9 @@ class KeyedTableStore:
         cols = [F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
         out = df.select(*cols)
 
-        indexes = self.registered_indexes(qualified_name) if maintain_indexes else {}
-        if indexes and not async_index and not overwrite:
+        if maintain_indexes and not overwrite and self.registered_indexes(
+            qualified_name
+        ):
             # pin the batch: row-key generators are nondeterministic on
             # re-evaluation, and the SAME rows must feed the table write
             # and the index append (batch-sized, not table-sized)
@@ -1783,144 +1756,121 @@ class KeyedTableStore:
 
         # "regions": range-partition by key; "HFiles": sort within partition
         ranged = self._region_layout(spec, out)
-        if overwrite:
-            # full-table replacement rides the same staged generation
-            # swap as every other rewrite — a crash mid-write must not
-            # destroy the previous table state
-            self._swap_table_dir(
-                spec,
-                lambda staging: self._writer(ranged, spec)
-                .mode("overwrite").parquet(staging),
-            )
-        else:
+
+        def attempt() -> tuple:
+            if overwrite:
+                # full-table replacement rides the same staged
+                # generation swap as every other rewrite — a crash
+                # mid-write must not destroy the previous table state
+                self._swap_table_dir(
+                    spec,
+                    lambda staging: self._writer(ranged, spec)
+                    .mode("overwrite").parquet(staging),
+                )
+                return None, True, None
             # append = write the new sorted run OUTSIDE any generation,
             # then hardlink it into the CURRENT generation under the
             # per-table writer lock.  Generation flips take the same
             # lock, so an append can never land in a just-retired
             # directory (where a concurrent rewrite's carry listing
             # would silently drop it) — the Spark write happens
-            # unlocked; only the instant link-in is serialized.
-            root = self.table_root(spec)
-            tmp = os.path.join(root, f".append-{uuid.uuid4().hex[:12]}")
-            try:
-                # the flock-held ``.writing`` marker keeps a concurrent
-                # writer's sweep off the staging for the WHOLE write —
-                # Spark only renames part files into ``tmp`` at task
-                # commit, so the directory's mtime is NOT a liveness
-                # signal while a long write is in flight
-                with self._marker_guard(tmp + ".writing"):
-                    self._writer(ranged, spec).mode("overwrite").parquet(tmp)
-                    parts = [
-                        f for f in os.listdir(tmp) if f.endswith(".parquet")
-                    ]
-                    # footer stats of the freshly written parts, read
-                    # OUTSIDE the lock (same inodes the links share) —
-                    # the sidecar keeps the generation's span manifest
-                    # covering appended files too
-                    part_stats = {}
-                    for fname in parts:
-                        try:
-                            part_stats[fname] = self._footer_key_stats(
-                                os.path.join(tmp, fname)
-                            )
-                        except Exception:
-                            continue  # cache construction never fails a write
-                    # drop zero-row parts before anything links them in:
-                    # the declared-split layout writes one partition per
-                    # region, and Spark emits an empty file for an empty
-                    # region that precedes a populated one — linking
-                    # those would leak one noise file per append (an
-                    # all-empty batch appends nothing: a no-op)
-                    empty = {
-                        f for f, s in part_stats.items() if s[2] == 0
-                    }
-                    if empty:
-                        parts = [f for f in parts if f not in empty]
-                        part_stats = {
-                            f: s for f, s in part_stats.items()
-                            if f not in empty
-                        }
-                    if self._bloom_enabled(spec):
-                        # Bloom sidecars for the appended parts, built
-                        # OUTSIDE the lock against the staging inodes
-                        # (the link-in below carries them by name)
-                        try:
-                            self._build_bloom_files(
-                                spec,
-                                tmp,
-                                parts,
-                                rows_by_file={
-                                    f: s[2] for f, s in part_stats.items()
-                                },
-                            )
-                        except Exception:
-                            pass  # cache only — never fail the append
-                    if self._srckey_bloom_enabled(spec):
-                        # index tables: src-key sidecars for the
-                        # appended entries, same staging discipline
-                        try:
-                            self._build_bloom_files(
-                                spec,
-                                tmp,
-                                parts,
-                                rows_by_file={
-                                    f: s[2] for f, s in part_stats.items()
-                                },
-                                column="i:src_key",
-                                subdir=_bloom.SRCKEY_DIR,
-                            )
-                        except Exception:
-                            pass  # cache only — never fail the append
-                    with self._table_write_lock(root):
-                        path_now = self.table_path(spec)
-                        for fname in parts:
-                            self._link_or_copy(
-                                os.path.join(tmp, fname),
-                                os.path.join(path_now, fname),
-                            )
-                        # under the SAME lock as the link-in so the
-                        # sidecar lands in the same generation the
-                        # files did (a flip between the two would
-                        # orphan it — sound, but the files would fall
-                        # back to live footer reads)
-                        self._write_span_sidecar(path_now, part_stats)
-                        self._maybe_merge_span_sidecars(path_now)
-                        try:
-                            self._carry_bloom_sidecars(tmp, path_now, parts)
-                        except Exception:
-                            pass  # cache only
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
+            # unlocked; only the instant link-in is serialized.  The
+            # index delta appends the batch's projections, dropping
+            # nothing.
+            parts = self._append_run(spec, ranged)
             self.refresh(qualified_name)
+            return None, bool(parts), (None, None, out, True)
 
-        if indexes:
-            if async_index:
-                for iq in indexes:
-                    self._mark_index_stale(iq, True)
-            elif overwrite:
-                self._maintain_indexes(qualified_name, async_index=False)
-            else:
-                for iq, meta in indexes.items():
-                    proj = self.index_projection(
-                        out,
-                        meta["col"],
-                        list(meta["include"]),
-                        meta["key_width"],
-                        meta.get("encoding", "int"),
-                        meta.get("scale"),
-                        guard=True,
-                    )
-                    # hold the stale marker across the append: a guard
-                    # violation mid-append leaves the index LOUDLY stale
-                    # (the main table already holds the batch)
-                    self._mark_index_stale(iq, True)
-                    self.insert(
-                        iq, proj, generate_row_key=False, maintain_indexes=False
-                    )
-                    self._mark_index_stale(iq, False)
+        if maintain_indexes:
+            self._commit(qualified_name, attempt, attempts=1)
+        else:
+            attempt()
         if not overwrite:
             self._maybe_auto_minor_compact(spec)
             self._maybe_auto_split(spec)
+
+    def _append_run(self, spec: TableSpec, ranged: DataFrame) -> list[str]:
+        """Write ``ranged`` as a new sorted run in a private staging
+        directory and link its non-empty parts (span manifest entries
+        and Bloom sidecars with them) into the table's current
+        generation under the writer lock; returns the linked parts."""
+        root = self.table_root(spec)
+        tmp = os.path.join(root, f".append-{uuid.uuid4().hex[:12]}")
+        try:
+            # the flock-held ``.writing`` marker keeps a concurrent
+            # writer's sweep off the staging for the WHOLE write —
+            # Spark only renames part files into ``tmp`` at task
+            # commit, so the directory's mtime is NOT a liveness
+            # signal while a long write is in flight
+            with self._marker_guard(tmp + ".writing"):
+                self._writer(ranged, spec).mode("overwrite").parquet(tmp)
+                parts = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+                # footer stats of the freshly written parts, read
+                # OUTSIDE the lock (same inodes the links share) — the
+                # sidecar keeps the generation's span manifest covering
+                # appended files too; what a damaged or foreign footer
+                # raises leaves its part uncovered
+                part_stats = {}
+                for fname in parts:
+                    try:
+                        part_stats[fname] = self._footer_key_stats(
+                            os.path.join(tmp, fname)
+                        )
+                    except (OSError, ValueError, RuntimeError):
+                        continue  # cache construction never fails a write
+                # drop zero-row parts before anything links them in:
+                # the declared-split layout writes one partition per
+                # region, and Spark emits an empty file for an empty
+                # region that precedes a populated one — linking those
+                # would leak one noise file per append (an all-empty
+                # batch appends nothing: a no-op)
+                empty = {f for f, s in part_stats.items() if s[2] == 0}
+                if empty:
+                    parts = [f for f in parts if f not in empty]
+                    part_stats = {
+                        f: s for f, s in part_stats.items() if f not in empty
+                    }
+                rows_by_file = {f: s[2] for f, s in part_stats.items()}
+                if self._bloom_enabled(spec):
+                    # Bloom sidecars for the appended parts, built
+                    # OUTSIDE the lock against the staging inodes (the
+                    # link-in below carries them by name)
+                    try:
+                        self._build_bloom_files(
+                            spec, tmp, parts, rows_by_file=rows_by_file
+                        )
+                    except Exception:
+                        pass  # cache only — never fail the append
+                if self._srckey_bloom_enabled(spec):
+                    # index tables: src-key sidecars for the appended
+                    # entries, same staging discipline
+                    try:
+                        self._build_bloom_files(
+                            spec, tmp, parts, rows_by_file=rows_by_file,
+                            column="i:src_key", subdir=_bloom.SRCKEY_DIR,
+                        )
+                    except Exception:
+                        pass  # cache only — never fail the append
+                with self._table_write_lock(root):
+                    path_now = self.table_path(spec)
+                    for fname in parts:
+                        self._link_or_copy(
+                            os.path.join(tmp, fname),
+                            os.path.join(path_now, fname),
+                        )
+                    # under the SAME lock as the link-in so the sidecar
+                    # lands in the same generation the files did (a
+                    # flip between the two would orphan it — sound, but
+                    # the files would fall back to live footer reads)
+                    self._write_span_sidecar(path_now, part_stats)
+                    self._maybe_merge_span_sidecars(path_now)
+                    try:
+                        self._carry_bloom_sidecars(tmp, path_now, parts)
+                    except OSError:
+                        pass  # cache only
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        return parts
 
     def _maybe_auto_split(self, spec: TableSpec) -> None:
         """HBase splits a region AUTOMATICALLY when it outgrows
@@ -2252,12 +2202,16 @@ class KeyedTableStore:
         The reference engine indexes only the row key; HBase deployments
         add value-column access via Phoenix global indexes — this is that
         extension on the keyed store.  Consistency contract: the index is
-        REGISTERED on the main table (a table property), and every batch
-        DML (:meth:`upsert` / :meth:`delete_where` / :meth:`update_where`)
-        rebuilds it in the same call — or marks it STALE under
-        ``async_index=True`` (Phoenix ASYNC) until :meth:`rebuild_indexes`;
-        streaming ingest keeps it fresh by dual-write
-        (``write_stream_with_index_maintenance``).
+        REGISTERED on the main table (a table property), and every write
+        that changes the main table's rows (:meth:`insert`,
+        :meth:`upsert`, :meth:`delete_where`, :meth:`update_where`, the
+        other DML entry points, truncate, restore and changefeed replay)
+        maintains it in the same call, through the commit tail
+        :meth:`_commit` — by delta for a small change, by rebuild
+        otherwise.  Until that maintenance completes the index reads
+        STALE (:meth:`index_is_stale`); :meth:`rebuild_indexes` catches
+        up after a failed one.  Streaming ingest keeps it fresh by
+        dual-write (``write_stream_with_index_maintenance``).
         Scale: the index build is one range-partitioned key-sorted write
         (same cost class as compaction); the read path replaces a full
         main-table scan + filter with an index range scan bounded by the
@@ -2504,8 +2458,9 @@ class KeyedTableStore:
         }
 
     def index_is_stale(self, index_qualified_name: str) -> bool:
-        """True iff an ``async_index=True`` DML deferred this index's
-        rebuild and :meth:`rebuild_indexes` has not yet run."""
+        """True iff a write changed the main table's rows and this
+        index's maintenance has not completed (it is running, or it
+        failed and :meth:`rebuild_indexes` has not yet run)."""
         return (
             self.registry.get(index_qualified_name).properties.get("stale")
             == "true"
@@ -2513,9 +2468,9 @@ class KeyedTableStore:
 
     def rebuild_indexes(self, qualified_name: str) -> None:
         """Rebuild every covered index registered on the table from its
-        current state (the Phoenix ASYNC catch-up path) and clear their
-        stale markers."""
-        self._maintain_indexes(qualified_name, async_index=False)
+        current state (the catch-up path after a failed maintenance) and
+        clear their stale markers."""
+        self._maintain_indexes(qualified_name, None)
 
     def _mark_index_stale(self, iq: str, stale: bool) -> None:
         ispec = self.registry.get(iq)
@@ -2526,60 +2481,31 @@ class KeyedTableStore:
             self.registry.register(ispec)
 
     def _maintain_indexes(
-        self,
-        qualified_name: str,
-        async_index: bool,
-        changed_keys: tuple | None = None,
+        self, qualified_name: str, delta: tuple | None
     ) -> None:
-        """Post-DML covered-index maintenance (reference analogue: the
-        insert path refreshing dependent metadata after write,
-        ``InsertIntoHBaseTable.scala:110``; semantics: Phoenix global
-        index maintenance).
+        """Covered-index maintenance after a committed write (reference
+        analogue: the insert path refreshing dependent metadata after
+        write, ``InsertIntoHBaseTable.scala:110``; semantics: Phoenix
+        global index maintenance), called by :meth:`_commit` and
+        :meth:`rebuild_indexes`; each index's stale marker is cleared
+        when its maintenance finishes.
 
-        When the caller passes the source keys the DML touched
-        (``changed_keys``: the pinned keys frame and, for a
-        driver-resident pin, its key list — callers apply the pre-swap
-        smallness threshold, ``n·4 < table_rows``, before capturing),
-        maintenance is INCREMENTAL: per index, selectively delete the
-        entries whose ``i:src_key`` is a changed key (the
-        selective-rewrite machinery on the INDEX table), then append
-        the fresh projection of the changed rows (O(batch)).  The
-        locate semi-joins on ``i:src_key`` — a PAYLOAD column, not the
-        index row key, and the value-sorted layout scatters one source
-        key's entries across any file — so index files carry src-key
-        Bloom sidecars (``_bloom-srckey/``, built by every index write
-        path) and the locate SCANS only the files whose sidecar admits
-        a changed key: ~O(affected files) for point DML instead of
-        O(index).  Files without a sidecar stay candidates; batches
-        over ``_BLOOM_MERGE_PROBE_MAX`` keys skip pruning (the scan is
-        worth paying there).  Far below the full rebuild, whose
-        SHUFFLE and WRITE are O(index).  Large changes (or callers without key
-        knowledge) fall back to that full rebuild: ONE index-projection
-        key-sorted rewrite per index (width guard folded into the
-        projection via ``guard=True``).
-
-        ``async_index=True`` skips the work but marks the index STALE
-        so nothing reads it as fresh silently.  The stale marker is
-        also set ACROSS synchronous maintenance: if it dies mid-flight
-        (e.g. a guard violation), the index stays loudly stale instead
-        of silently stale."""
+        With the write's ``delta`` maintenance is INCREMENTAL
+        (:meth:`_maintain_indexes_incremental`); without one — a large
+        change, an index that was stale at entry, or a rebuild — each
+        index is REBUILT: ONE index-projection key-sorted rewrite per
+        index (width guard folded into the projection via
+        ``guard=True``)."""
         indexes = self.registered_indexes(qualified_name)
-        if not indexes:
-            return
-        if async_index:
-            for iq in indexes:
-                self._mark_index_stale(iq, True)
-            return
-        if changed_keys is not None:
+        if delta is not None:
             self._maintain_indexes_incremental(
-                indexes, self.read(qualified_name), *changed_keys
+                indexes, self.read(qualified_name), *delta
             )
             return
         main_spec = self.registry.get(qualified_name)
         main_root = self.table_root(main_spec)
         for iq, meta in indexes.items():
             ispec = self.registry.get(iq)
-            self._mark_index_stale(iq, True)
 
             def rebuild(ispec=ispec, meta=meta) -> None:
                 # re-read the MAIN table PER ATTEMPT (the retry
@@ -2635,28 +2561,38 @@ class KeyedTableStore:
     def _maintain_indexes_incremental(
         self,
         indexes: dict,
-        main: DataFrame | None,
-        changed_keys: DataFrame,
+        main: DataFrame,
+        changed_keys: DataFrame | None,
         probe_keys: list | None,
         changed_rows: DataFrame | None = None,
         has_new_rows: bool | None = None,
     ) -> None:
-        """Delta index maintenance: drop entries for the changed source
-        keys, append projections of those keys' current rows.  Exactly
+        """Delta index maintenance, the write's ``delta`` unpacked:
+        drop the entries whose ``i:src_key`` is a changed key (the
+        selective-rewrite machinery on the INDEX table), append
+        projections of those keys' current rows (O(batch)).  Exactly
         the state a full rebuild would produce — unchanged source rows
         keep their (already correct) entries, and the (value, src_key)
         composite index key makes delete-then-append collision-free.
 
+        The locate semi-joins on ``i:src_key`` — a PAYLOAD column, and
+        the value-sorted layout scatters one source key's entries
+        across any file — so index files carry src-key Bloom sidecars
+        (``_bloom-srckey/``, built by every index write path) and the
+        locate SCANS only the files whose sidecar admits a changed key.
         ``probe_keys`` are the changed keys as the batch pin holds them
         on the driver (``None`` = unknown: no src-key Bloom pruning).
-        A caller that already HOLDS the changed keys' post-DML rows
-        (:meth:`apply_changes` — a key-granularity feed's insert/update
-        rows ARE the keys' full new state) passes them as
-        ``changed_rows`` and skips the main-table semi-join re-read
-        entirely; ``main`` is unused then."""
-        keys = F.broadcast(
-            changed_keys.select(F.col(ROW_KEY).alias("__changed_key"))
-        )
+        A caller that already HOLDS the changed keys' post-write rows
+        passes them as ``changed_rows`` and skips the main-table
+        semi-join re-read entirely (``main`` is unused then): a
+        key-granularity feed's insert/update rows
+        (:meth:`apply_changes`), or an append's batch (:meth:`insert`,
+        whose ``changed_keys`` is ``None``: nothing to drop)."""
+        keys = None
+        if changed_keys is not None:
+            keys = F.broadcast(
+                changed_keys.select(F.col(ROW_KEY).alias("__changed_key"))
+            )
         if changed_rows is None:
             # current (post-DML) rows for the changed keys: the appends.
             # Batch-sized by the incremental threshold; pinned so each
@@ -2678,7 +2614,6 @@ class KeyedTableStore:
             )
         for iq, meta in indexes.items():
             ispec = self.registry.get(iq)
-            self._mark_index_stale(iq, True)
             proj = (
                 self.index_projection(
                     changed_rows,
@@ -2744,7 +2679,9 @@ class KeyedTableStore:
                     return proj is not None
                 return False
 
-            appended = self._retry_write_conflict(drop_and_append)
+            appended = keys is not None and self._retry_write_conflict(
+                drop_and_append
+            )
             if proj is not None and not appended:
                 self.insert(
                     iq, proj, generate_row_key=False, maintain_indexes=False
@@ -4472,9 +4409,7 @@ class KeyedTableStore:
     _BLOOM_DRIVER_BUILD_MAX = 262_144
 
     # -- upsert (MERGE INTO ... UPDATE SET * / INSERT * analogue) ---------
-    def upsert(
-        self, qualified_name: str, df: DataFrame, async_index: bool = False
-    ) -> None:
+    def upsert(self, qualified_name: str, df: DataFrame) -> None:
         """Row-key upsert: rows in ``df`` REPLACE same-key rows in the
         table, new keys append — the ``MERGE INTO ... WHEN MATCHED THEN
         UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` semantics (the one
@@ -4503,11 +4438,11 @@ class KeyedTableStore:
         flips, so a duplicate-key source aborts the swap with the table
         untouched.
 
-        Covered indexes registered on the table are REBUILT in the same
-        call (Phoenix index-maintenance semantics; reference analogue:
-        post-write refresh, ``InsertIntoHBaseTable.scala:110``) unless
-        ``async_index=True``, which skips the rebuild and marks each
-        index STALE until :meth:`rebuild_indexes` runs (Phoenix ASYNC).
+        Covered indexes registered on the table are maintained in the
+        same call (Phoenix index-maintenance semantics; reference
+        analogue: post-write refresh, ``InsertIntoHBaseTable.scala:110``)
+        by the commit tail, :meth:`_commit`: a small batch by delta, a
+        large one by rebuild.
         """
 
         spec = self.registry.get(qualified_name)
@@ -4580,25 +4515,23 @@ class KeyedTableStore:
                     files=candidates,
                 )
             return None, True, self._upsert_rewrite(
-                spec, qualified_name, incoming, (keys, b.keys), affected,
-                path, schema, async_index, batch_span=(b.lo, b.hi),
-                footer_stats=stats, n_incoming=b.n,
+                spec, incoming, (keys, b.keys), affected, path, schema,
+                batch_span=(b.lo, b.hi), footer_stats=stats, n_changed=b.n,
             )
 
-        self._commit(qualified_name, attempt, async_index)
+        self._commit(qualified_name, attempt)
 
     def _upsert_rewrite(
-        self, spec, qualified_name, incoming, changed, affected, path,
-        schema, async_index, batch_span=None, footer_stats=None,
-        n_incoming=None, drop_keys=None, new_run_known_empty=False,
+        self, spec, incoming, changed, affected, path, schema, batch_span,
+        footer_stats, n_changed, drop_keys=None, new_run_known_empty=False,
     ) -> tuple | None:
         """The merge-window rewrite behind :meth:`upsert`, one attempt
         against one resolved generation (``path``/``affected``).
-        Returns ``changed`` — the batch's ``(keys frame, driver-side
-        keys or None)`` — for the caller's index maintenance when the
-        incremental route applies (``None`` = full rebuild / no index),
-        which runs OUTSIDE the CAS retry so an index-side conflict can
-        never replay the already-committed main-table swap.
+        Returns ``changed`` — the write's index delta, e.g. the batch's
+        ``(keys frame, driver-side keys or None)`` — when the
+        ``n_changed`` keys fit :meth:`_index_delta_fits` against the
+        pre-swap rows of ``footer_stats`` (the attempt's candidate
+        stats, one record per data file), else ``None`` (full rebuild).
         ``batch_span`` is the incoming batch's ``(min, max)`` key."""
         from pyspark.sql import Observation, Window
 
@@ -4709,33 +4642,17 @@ class KeyedTableStore:
         else:
             out_new = None
 
-        # incremental-index decision BEFORE the swap (pre-swap footer
-        # total — already in hand from the attempt's candidate-pruning
-        # stats pass, so no footer is re-opened; the batch count rode
-        # the batch-statistics job)
-        changed_keys = None
-        if bool(self.registered_indexes(qualified_name)) and not async_index:
-            n_in = (
-                n_incoming if n_incoming is not None else incoming.count()
-            )
-            total = (
-                sum(rec[2] for rec in footer_stats.values())
-                if footer_stats
-                else self._footer_row_count(path)
-            )
-            if n_in * 4 < total:
-                changed_keys = changed
+        # index route BEFORE the swap: the pre-swap total is in hand from
+        # the attempt's candidate-pruning stats pass (no footer re-read)
+        table_rows = sum(rec[2] for rec in footer_stats.values())
         outs = [o for o in (out_merged, out_new) if o is not None]
-        if not outs:
-            # nothing to rewrite and nothing to append (e.g. a fused
-            # replay whose deletes matched no file and whose puts were
-            # all cancelled): a true no-op, like a DELETE matching
-            # nothing — no new generation
-            return changed_keys
-        self._swap_write_with_carry(
-            spec, outs, path, set(affected), validate=no_source_dups,
-        )
-        return changed_keys
+        if outs:
+            self._swap_write_with_carry(
+                spec, outs, path, set(affected), validate=no_source_dups,
+            )
+        if not self._index_delta_fits(n_changed, table_rows):
+            return None
+        return changed
 
     # -- conditional mutations (HBase checkAndPut / checkAndDelete) -------
     #
@@ -4757,7 +4674,6 @@ class KeyedTableStore:
         check_col: str,
         expected,
         row: dict,
-        async_index: bool = False,
     ) -> bool:
         """Atomically apply a single-row Put iff the current value of
         ``(check_key, check_col)`` equals ``expected`` (``None`` = cell
@@ -4778,11 +4694,10 @@ class KeyedTableStore:
                 return None
             return True, row
 
-        return self._conditional_put(qualified_name, check_key, put, async_index)
+        return self._conditional_put(qualified_name, check_key, put)
 
     def _conditional_put(
-        self, qualified_name: str, key, put, async_index: bool,
-        attempts: int = 8,
+        self, qualified_name: str, key, put, attempts: int = 8
     ):
         """The shared conditional-Put engine: resolve ONE generation,
         point-read the key's current row from it (span + Bloom
@@ -4814,15 +4729,13 @@ class KeyedTableStore:
             # the check read located the key's one row (or proved it
             # absent: the insert-style checkAndPut appends a fresh run)
             affected = {} if home is None else {home: 1}
-            changed = self._upsert_rewrite(
-                spec, qualified_name, incoming, (keys, [key]), affected,
-                path, schema, async_index,
-                batch_span=(key, key),
-                footer_stats=stats, n_incoming=1,
+            delta = self._upsert_rewrite(
+                spec, incoming, (keys, [key]), affected, path, schema,
+                batch_span=(key, key), footer_stats=stats, n_changed=1,
             )
-            return result, True, changed
+            return result, True, delta
 
-        return self._commit(qualified_name, attempt, async_index, attempts)
+        return self._commit(qualified_name, attempt, attempts)
 
     def check_and_delete(
         self,
@@ -4830,7 +4743,6 @@ class KeyedTableStore:
         check_key,
         check_col: str,
         expected,
-        async_index: bool = False,
     ) -> bool:
         """Atomically delete the ``check_key`` row iff the current value
         of ``(check_key, check_col)`` equals ``expected`` — HBase
@@ -4854,9 +4766,8 @@ class KeyedTableStore:
                 return True, False, None  # nothing to delete; check passed
             # the check read located the key's one row
             affected = {home: 1}
-            changed = self._capture_changed_keys(
-                spec, affected, lambda d: d.filter(cond), 1, async_index,
-                path=path,
+            delta = self._capture_changed_keys(
+                spec, affected, lambda d: d.filter(cond), 1, path
             )
             # same NULL-predicate law as delete_where: a NULL-key row
             # in an affected file evaluates cond to NULL, and ~NULL
@@ -4865,9 +4776,9 @@ class KeyedTableStore:
             self._selective_rewrite(
                 spec, affected, lambda d: d.filter(keep), path=path
             )
-            return True, True, changed
+            return True, True, delta
 
-        return self._commit(qualified_name, attempt, async_index)
+        return self._commit(qualified_name, attempt)
 
     def increment(
         self,
@@ -4928,9 +4839,7 @@ class KeyedTableStore:
             base[col] = combine(base.get(col))
             return base[col], base
 
-        return self._conditional_put(
-            qualified_name, key, put, async_index=False, attempts=retries
-        )
+        return self._conditional_put(qualified_name, key, put, retries)
 
     _MUTATE_OPS = frozenset(
         {"put", "check_put", "delete", "check_delete", "increment", "append"}
@@ -4940,7 +4849,6 @@ class KeyedTableStore:
         self,
         qualified_name: str,
         ops: list[dict],
-        async_index: bool = False,
     ) -> list[dict]:
         """HBase ``Table.batch()`` parity: fold N INDEPENDENT single-row
         mutations into ONE locate + rewrite + generation-CAS commit —
@@ -5131,16 +5039,15 @@ class KeyedTableStore:
                 if incoming_keys
                 else None
             )
-            changed = self._upsert_rewrite(
-                spec, qualified_name, incoming, (keys_df, changed_keys),
-                affected, path, schema, async_index,
-                batch_span=span, footer_stats=stats,
-                n_incoming=len(changed_keys),
+            delta = self._upsert_rewrite(
+                spec, incoming, (keys_df, changed_keys), affected, path,
+                schema, batch_span=span, footer_stats=stats,
+                n_changed=len(changed_keys),
                 drop_keys=drop_df, new_run_known_empty=not incoming_keys,
             )
-            return results, True, changed
+            return results, True, delta
 
-        return self._commit(qualified_name, attempt, async_index)
+        return self._commit(qualified_name, attempt)
 
     def _require_column(self, spec: TableSpec, col: str) -> None:
         names = [f.name for f in spec.schema().fields]
@@ -5365,35 +5272,56 @@ class KeyedTableStore:
             span_reuse_path=src_path,
         )
 
-    def _commit(
-        self, qualified_name: str, attempt, async_index: bool,
-        attempts: int = 8,
-    ):
-        """Stage 3, the commit tail of every keyed DML entry point: run
-        ``attempt`` — one complete locate + rewrite + CAS flip that
-        resolves the table's current generation itself — under
-        :meth:`_retry_write_conflict`, then maintain the covered
-        indexes when it reports a mutation.  ``attempt`` returns
-        ``(result, mutated, changed_keys)``; ``changed_keys`` is the
-        pre-swap capture for incremental maintenance (``None`` = full
-        rebuild).  Index maintenance runs OUTSIDE the retry: the
-        main-table swap is committed at that point, and replaying the
-        attempt because the INDEX hit a conflict would re-apply the
+    def _commit(self, qualified_name: str, attempt, attempts: int = 8):
+        """Stage 3, the commit tail of every write that changes a keyed
+        table's rows (the DML entry points, :meth:`insert`,
+        :meth:`truncate_table`, :meth:`restore_snapshot` and
+        :meth:`apply_changes`): run ``attempt`` — one complete write
+        that resolves the table's current generation itself — under
+        :meth:`_retry_write_conflict`, and own the whole covered-index
+        decision around it.  ``attempt`` returns ``(result, mutated,
+        delta)``; ``delta`` is the change's index delta for
+        :meth:`_maintain_indexes_incremental` (``None`` = full rebuild).
+
+        Every registered index is marked stale BEFORE the attempt, so a
+        raise anywhere after the flip leaves it loudly stale (so does a
+        raise before the flip: the tail cannot tell the two apart, and
+        the next write's rebuild is the safe answer).  An attempt that
+        reports no mutation clears the markers it set; a mutation takes
+        the delta route only when every index was fresh at entry (a
+        stale index missed an earlier change that no delta repairs),
+        otherwise the full rebuild.  Maintenance clears each index's
+        marker when it finishes, and runs OUTSIDE the retry:
+        the main-table swap is committed at that point, and replaying
+        the attempt because the INDEX hit a conflict would re-apply the
         mutation on top of its own committed result (a non-idempotent
         ``c + 1`` UPDATE would double-apply; a DELETE would report 0
         rows).  Returns ``result``."""
-        result, mutated, changed_keys = self._retry_write_conflict(
-            attempt, attempts
-        )
-        if mutated:
+        indexes = self.registered_indexes(qualified_name)
+        fresh = [iq for iq in indexes if not self.index_is_stale(iq)]
+        for iq in fresh:
+            self._mark_index_stale(iq, True)
+        result, mutated, delta = self._retry_write_conflict(attempt, attempts)
+        if not mutated:
+            for iq in fresh:
+                self._mark_index_stale(iq, False)
+        elif indexes:
             self._maintain_indexes(
-                qualified_name, async_index, changed_keys=changed_keys
+                qualified_name, delta if len(fresh) == len(indexes) else None
             )
         return result
 
+    @staticmethod
+    def _index_delta_fits(n: int, table_rows: int) -> bool:
+        """The one delta-route threshold: a write changing ``n`` keys of
+        a table that held ``table_rows`` rows before its swap maintains
+        the covered indexes by delta when ``n·4 < table_rows``; a
+        larger change rebuilds them (the delta's drop and append then
+        cost about as much as the rebuild's one sorted rewrite)."""
+        return 0 < n * 4 < table_rows
+
     def _selective_commit(
-        self, spec: TableSpec, span, keys, selector, transform,
-        async_index: bool,
+        self, spec: TableSpec, span, keys, selector, transform
     ) -> int:
         """Stage 2, the selective commit behind :meth:`delete_where`,
         :meth:`delete_keys`, :meth:`delete_cells` and
@@ -5416,13 +5344,13 @@ class KeyedTableStore:
             if not affected:
                 return 0, False, None
             n = sum(affected.values())
-            changed_keys = self._capture_changed_keys(
-                spec, affected, selector, n, async_index, path=path
+            delta = self._capture_changed_keys(
+                spec, affected, selector, n, path
             )
             self._selective_rewrite(spec, affected, transform, path=path)
-            return n, True, changed_keys
+            return n, True, delta
 
-        return self._commit(spec.qualified_name, attempt, async_index)
+        return self._commit(spec.qualified_name, attempt)
 
     def _pin_batch(
         self, batch: DataFrame, key: str, flags=(), stats: bool = True
@@ -5486,9 +5414,7 @@ class KeyedTableStore:
             schema,
         )
 
-    def delete_where(
-        self, qualified_name: str, condition: str, async_index: bool = False
-    ) -> int:
+    def delete_where(self, qualified_name: str, condition: str) -> int:
         """DELETE FROM the keyed table: rows matching the SQL
         ``condition`` are removed by a SELECTIVE key-sorted rewrite —
         one pushdown scan locates the files containing matches, only
@@ -5502,9 +5428,8 @@ class KeyedTableStore:
         unconstrained one over the whole generation.  A DELETE
         matching nothing is free: no rewrite, no generation swap.
         Returns the number of rows deleted (the locating scan's exact
-        per-file match counts).  Registered covered indexes are rebuilt
-        (or marked stale under ``async_index=True``) — see
-        :meth:`upsert`."""
+        per-file match counts).  Registered covered indexes are
+        maintained in the same call — see :meth:`upsert`."""
         spec = self.registry.get(qualified_name)
         # SQL DELETE law: only rows where the predicate is TRUE go; a
         # NULL predicate must KEEP the row (NOT(NULL) is NULL and would
@@ -5516,12 +5441,9 @@ class KeyedTableStore:
             self._rowkey_points(condition),
             lambda df: df.filter(hit),
             lambda df: df.filter(~hit),
-            async_index,
         )
 
-    def delete_keys(
-        self, qualified_name: str, keys: DataFrame, async_index: bool = False
-    ) -> int:
+    def delete_keys(self, qualified_name: str, keys: DataFrame) -> int:
         """DELETE by key batch — the HBase ``table.delete(List<Delete>)``
         client surface (and the replay path for changefeed deletes,
         :meth:`apply_changes`).  ``keys`` is a DataFrame carrying a
@@ -5577,12 +5499,9 @@ class KeyedTableStore:
             spec, b.span, b.keys,
             lambda df: df.join(kdf, match, "left_semi"),
             lambda df: df.join(kdf, match, "left_anti"),
-            async_index,
         )
 
-    def delete_cells(
-        self, qualified_name: str, rows: DataFrame, async_index: bool = False
-    ) -> int:
+    def delete_cells(self, qualified_name: str, rows: DataFrame) -> int:
         """DELETE exact CELLS — full-row-identity deletes, the HBase
         ``Delete.addColumn(cf, q, ts)`` (delete ONE version cell)
         analogue and the replay path for CELL-granularity changefeed
@@ -5644,7 +5563,6 @@ class KeyedTableStore:
             spec, b.span, b.keys,
             lambda df: df.join(probe, cond, "left_semi"),
             lambda df: df.exceptAll(aligned),
-            async_index,
         )
 
     def update_where(
@@ -5652,7 +5570,6 @@ class KeyedTableStore:
         qualified_name: str,
         assignments: dict[str, str],
         condition: str,
-        async_index: bool = False,
     ) -> int:
         """UPDATE the keyed table: SQL-expression ``assignments``
         applied to rows matching ``condition`` by the same SELECTIVE
@@ -5663,9 +5580,8 @@ class KeyedTableStore:
         keys must be existing non-key columns (the row key is
         immutable — HBase semantics: changing the key is a delete +
         put, i.e. :meth:`delete_where` + :meth:`insert`).  Returns the
-        number of rows updated.  Registered covered indexes are rebuilt
-        (or marked stale under ``async_index=True``) — see
-        :meth:`upsert`."""
+        number of rows updated.  Registered covered indexes are
+        maintained in the same call — see :meth:`upsert`."""
         spec = self.registry.get(qualified_name)
         cols = [f.name for f in spec.schema().fields]
         for col in assignments:
@@ -5693,24 +5609,19 @@ class KeyedTableStore:
             self._rowkey_points(condition),
             lambda df: df.filter(cond),
             apply_assignments,
-            async_index,
         )
 
     def _capture_changed_keys(
-        self, spec: TableSpec, affected: dict, selector, n: int,
-        async_index: bool, path: str | None = None,
+        self, spec: TableSpec, affected: dict, selector, n: int, path: str
     ) -> tuple | None:
         """Pin the source keys a DELETE/UPDATE touches BEFORE the swap
         (afterwards the deleted rows are gone) — but only when an index
-        actually needs them, the change is small enough that the
-        incremental path will be chosen, and the maintenance is
-        synchronous.  Keys-only and batch-bounded by that threshold;
-        returns the pin's ``(frame, keys)``."""
-        if async_index or not self.registered_indexes(spec.qualified_name):
+        needs them and the change fits :meth:`_index_delta_fits`.
+        Keys-only and batch-bounded by that threshold; returns the
+        pin's ``(frame, keys)``, the write's index delta."""
+        if not self.registered_indexes(spec.qualified_name):
             return None
-        if path is None:
-            path = self.table_path(spec)
-        if n * 4 >= self._footer_row_count(path):
+        if not self._index_delta_fits(n, self._footer_row_count(path)):
             return None  # the full rebuild will run anyway
         sub = self.spark.read.schema(spec.schema()).parquet(
             *[os.path.join(path, f) for f in affected]
@@ -6252,7 +6163,7 @@ class KeyedTableStore:
         metadata-only, crash-safe, and readers never observe a partial
         state.  The snapshot itself is untouched (restores can repeat).
         Covered indexes registered on the table are rebuilt to match
-        the restored state."""
+        the restored state, through the commit tail."""
         saved = self._read_snapshot_spec(snapshot_name)
         if saved["qualified_name"] != qualified_name:
             raise ValueError(
@@ -6261,12 +6172,16 @@ class KeyedTableStore:
                 "use clone_snapshot to materialize it elsewhere"
             )
         sdir = self._snapshot_dir(snapshot_name)
-        self._swap_table_dir(
-            self.registry.get(qualified_name),
-            lambda staging: self._link_snapshot(sdir, staging),
-            span_reuse_path=sdir,
-        )
-        self._maintain_indexes(qualified_name, async_index=False)
+
+        def attempt() -> tuple:
+            self._swap_table_dir(
+                self.registry.get(qualified_name),
+                lambda staging: self._link_snapshot(sdir, staging),
+                span_reuse_path=sdir,
+            )
+            return None, True, None
+
+        self._commit(qualified_name, attempt, attempts=1)
 
     def clone_snapshot(
         self, snapshot_name: str, new_qualified_name: str

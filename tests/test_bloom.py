@@ -521,6 +521,30 @@ def test_get_falls_back_only_on_damaged_footers(store, monkeypatch):
     assert store.get("bl.tdmg", ["k0011"]).collect()[0]["cf:v"] == 77
 
 
+def test_append_sidecar_carry_surfaces_non_os_errors(store, monkeypatch):
+    """An append's sidecar carry only stats, creates directories and
+    links, so only an ``OSError`` there is a degraded cache (the parts
+    stay uncovered and probe as candidates); any other error in it is a
+    bug and surfaces from ``insert``."""
+    _make_table(store, "tcarry", n=50)
+    batch = store.spark.createDataFrame(
+        [("k9001", 1)], "row_key string, `cf:v` int"
+    )
+
+    def fail_with(exc):
+        def carry(self, src, dst, files):
+            raise exc
+
+        monkeypatch.setattr(KeyedTableStore, "_carry_bloom_sidecars", carry)
+
+    fail_with(OSError("link refused"))
+    store.insert("bl.tcarry", batch, generate_row_key=False)
+    assert store.get("bl.tcarry", ["k9001"]).collect()[0]["cf:v"] == 1
+    fail_with(AttributeError("carry bug"))
+    with pytest.raises(AttributeError, match="carry bug"):
+        store.insert("bl.tcarry", batch, generate_row_key=False)
+
+
 def test_uppercase_property_key_enables_blooms(store):
     """HBase spells the attribute BLOOMFILTER; the property lookup is
     case-insensitive so the conventional spelling works."""

@@ -838,6 +838,42 @@ def test_apply_changes_empty_feed_is_true_noop_on_indexed_table(store, spark):
     assert sorted(map(tuple, store.read("cdc.noop_src_by_v").collect())) == before
 
 
+def test_apply_changes_noop_replay_runs_no_index_pass(store, spark, monkeypatch):
+    """A feed whose deletes match no row and that has no puts changes
+    nothing, so it must run no index pass at all: neither a rebuild
+    (a feed large for the table) nor the delta pass with its index
+    locate (a small one)."""
+    _mk(store, spark, "noop_rep", [(f"n{i:03d}", i) for i in range(40)])
+    store.create_covered_index(
+        "cdc.noop_rep", "cdc.noop_rep_by_v", "cf:v", key_width=6
+    )
+    before = sorted(map(tuple, store.read("cdc.noop_rep_by_v").collect()))
+    touched = []
+    for name in (
+        "_sorted_rewrite", "_locate_affected_files",
+        "_maintain_indexes_incremental",
+    ):
+        orig = getattr(KeyedTableStore, name)
+
+        def spy(self, first, *a, _orig=orig, _name=name, **kw):
+            touched.append(getattr(first, "qualified_name", _name))
+            return _orig(self, first, *a, **kw)
+
+        monkeypatch.setattr(KeyedTableStore, name, spy)
+    for n_absent in (1, 20):  # the delta route, then the rebuild route
+        feed = spark.createDataFrame(
+            [(f"zz{i:03d}", i, "delete") for i in range(n_absent)],
+            "row_key string, `cf:v` long, change string",
+        )
+        assert store.apply_changes("cdc.noop_rep", feed) == 0
+    monkeypatch.undo()
+    assert not {"cdc.noop_rep_by_v", "_maintain_indexes_incremental"} & set(
+        touched
+    ), touched
+    assert not store.index_is_stale("cdc.noop_rep_by_v")
+    assert sorted(map(tuple, store.read("cdc.noop_rep_by_v").collect())) == before
+
+
 def test_dml_job_counts_stay_fused(store, spark):
     """Job-count pins for the fused commit machinery: the changefeed
     replay is ONE locate+rewrite+swap commit, and every batch entry

@@ -16,7 +16,7 @@ import inspect
 
 from spark_sql_hbase_spark.sources import keyed_parquet
 
-_MAX_BROAD_HANDLERS = 25
+_MAX_BROAD_HANDLERS = 23
 _BROAD = {"Exception", "BaseException"}
 
 

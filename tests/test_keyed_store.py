@@ -836,14 +836,29 @@ def test_batch_dml_maintains_covered_index(spark, tmp_path):
     assert not st.index_is_stale("r6.by_grp")
 
 
-def test_async_dml_marks_index_stale_and_rebuild_clears(spark, tmp_path):
-    """async_index=True defers the rebuild (Phoenix ASYNC) but must mark
-    the index STALE loudly; rebuild_indexes() catches up and clears."""
+def test_failed_index_maintenance_marks_stale_and_rebuild_clears(
+    spark, tmp_path, monkeypatch
+):
+    """A write whose index maintenance fails after the main table's
+    flip leaves the index STALE loudly; rebuild_indexes() catches up
+    and clears."""
     st = _mk_plain_table(spark, tmp_path)
     st.create_covered_index(
         "r6.t", "r6.by_grp", index_col="c:grp", include=["c:val"], key_width=4
     )
-    st.delete_where("r6.t", "`c:grp` = 1", async_index=True)
+    orig = KeyedTableStore._sorted_rewrite
+
+    def failing(self, spec, df, **kw):
+        if spec.qualified_name == "r6.by_grp":
+            raise RuntimeError("index rewrite failed (injected)")
+        return orig(self, spec, df, **kw)
+
+    monkeypatch.setattr(KeyedTableStore, "_sorted_rewrite", failing)
+    # 10 of 40 rows: too large for the delta, so the index is rebuilt
+    with pytest.raises(RuntimeError, match="injected"):
+        st.delete_where("r6.t", "`c:grp` = 1")
+    monkeypatch.undo()
+    assert st.read("r6.t").count() == 30  # the main table committed
     assert st.index_is_stale("r6.by_grp")
     # stale index still holds the PRE-DML rows (10 deleted mains linger)
     assert st.read("r6.by_grp").count() == 40
@@ -1088,7 +1103,7 @@ def test_fixed_point_lookup_half_boundary_matches_stored_keys(spark, tmp_path):
 def test_insert_maintains_covered_index_incrementally(spark, tmp_path):
     """Review fix: plain INSERT on an indexed table appends the index
     projection of exactly the inserted batch — index-only reads see the
-    new rows; async_index defers with the stale marker."""
+    new rows."""
     st = _mk_plain_table(spark, tmp_path)
     st.create_covered_index(
         "r6.t", "r6.by_grp", index_col="c:grp", include=["c:val"], key_width=4
@@ -1106,19 +1121,6 @@ def test_insert_maintains_covered_index_incrementally(spark, tmp_path):
     }
     assert got == {"50000001", "50000002"}
     assert not st.index_is_stale("r6.by_grp")
-    # async insert defers but marks stale
-    st.insert(
-        "r6.t",
-        spark.createDataFrame(
-            [("60000001", 8, 3.0)], "row_key string, `c:grp` long, `c:val` double"
-        ),
-        generate_row_key=False,
-        async_index=True,
-    )
-    assert st.index_is_stale("r6.by_grp")
-    assert st.read("r6.by_grp").count() == 42  # not yet appended
-    st.rebuild_indexes("r6.t")
-    assert st.read("r6.by_grp").count() == 43
     # overwrite insert triggers a full rebuild
     st.insert("r6.t", batch, overwrite=True, generate_row_key=False)
     assert st.read("r6.by_grp").count() == 2
@@ -1591,10 +1593,28 @@ def test_swap_protocol_crash_at_every_step(spark, tmp_path, monkeypatch, crash_a
     atomic rename, (c) after the flip before the sweep.  At every crash
     point the table must stay readable and complete — pre-DML state for
     (a)/(b), post-DML state for (c) — and the next successful rewrite
-    must converge the directory back to exactly {current, previous}."""
+    must converge the directory back to exactly {current, previous}.
+    The table's covered index spans main flip → index maintenance: it
+    is untouched by (a)/(b), reads stale after (c), and the next small
+    write repairs it by rebuild, never by a delta that would clear the
+    marker over the entries the crashed write left behind."""
     st = _mk_plain_table(spark, tmp_path, ns="cr", name="t", n=30)
+    st.create_covered_index("cr.t", "cr.by_grp", "c:grp",
+                            include=["c:val"], key_width=4)
     spec = st.registry.get("cr.t")
     before = sorted(map(tuple, st.read("cr.t").collect()))
+    index_before = sorted(map(tuple, st.read("cr.by_grp").collect()))
+
+    def index_matches_main():
+        main = sorted(
+            (r["row_key"], r["c:grp"], r["c:val"])
+            for r in st.read("cr.t").collect()
+        )
+        idx = sorted(
+            (r["i:src_key"], r["c:grp"], r["c:val"])
+            for r in st.read("cr.by_grp").collect()
+        )
+        return idx == main
 
     boom = RuntimeError("injected crash")
     if crash_at == "build":
@@ -1636,10 +1656,33 @@ def test_swap_protocol_crash_at_every_step(spark, tmp_path, monkeypatch, crash_a
 
     after = sorted(map(tuple, st.read("cr.t").collect()))
     if crash_at == "post_flip":
-        # the flip happened: the DML is APPLIED (crash only hit cleanup)
+        # the flip happened: the DML is APPLIED (crash only hit cleanup),
+        # and the index maintenance it never reached reads as stale
         assert after == [r for r in before if r[1] != 1]
+        assert st.index_is_stale("cr.by_grp")
     else:
         assert after == before
+    assert sorted(map(tuple, st.read("cr.by_grp").collect())) == index_before
+    # a one-key upsert (a delta-sized write) leaves the index equal to
+    # the main table's projection; after the flip crash it must take
+    # the full route
+    rebuilt = []
+    orig_sr = KeyedTableStore._sorted_rewrite
+
+    def spy(self, spc, df, **kw):
+        rebuilt.append(spc.qualified_name)
+        return orig_sr(self, spc, df, **kw)
+
+    monkeypatch.setattr(KeyedTableStore, "_sorted_rewrite", spy)
+    st.upsert("cr.t", spark.createDataFrame(
+        [("00000002", 3, 99.0)], "row_key string, `c:grp` long, `c:val` double"
+    ))
+    monkeypatch.undo()
+    if crash_at == "post_flip":
+        assert "cr.by_grp" in rebuilt, rebuilt
+    assert index_matches_main()
+    assert not st.index_is_stale("cr.by_grp")
+    after = sorted(map(tuple, st.read("cr.t").collect()))
     # recovery: the next rewrite succeeds and converges the layout
     st.compact("cr.t", n_regions=2)
     assert len(st.read("cr.t").collect()) == len(after)
@@ -1649,6 +1692,9 @@ def test_swap_protocol_crash_at_every_step(spark, tmp_path, monkeypatch, crash_a
     assert gens == {man["current"], man["previous"]} - {None}
     # the crashed flip's temp manifest is swept with the rest
     assert not os.path.exists(os.path.join(root, "._GENERATION.crashed"))
+    st.rebuild_indexes("cr.t")
+    assert not st.index_is_stale("cr.by_grp")
+    assert index_matches_main()
 
 
 def test_selective_dml_after_add_columns(spark, tmp_path):
