@@ -874,6 +874,18 @@ def test_apply_changes_noop_replay_runs_no_index_pass(store, spark, monkeypatch)
     assert sorted(map(tuple, store.read("cdc.noop_rep_by_v").collect())) == before
 
 
+def _count_jobs(spark, label, fn):
+    """Spark jobs ``fn()`` runs, counted through a job group of its own."""
+    sc = spark.sparkContext
+    label = f"{label}_{uuid.uuid4().hex[:8]}"  # group ids accumulate per session
+    sc.setJobGroup(label, label)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("idle", "idle")
+    return len(sc.statusTracker().getJobIdsForGroup(label))
+
+
 def test_dml_job_counts_stay_fused(store, spark):
     """Job-count pins for the fused commit machinery: the changefeed
     replay is ONE locate+rewrite+swap commit, and every batch entry
@@ -884,16 +896,8 @@ def test_dml_job_counts_stay_fused(store, spark):
     regression to the checkpoint-and-probe batch handling, to the
     stacked-exceptAll feed (9 jobs) or to the pre-fusion sequential
     replay (41+ jobs) fails loudly."""
-    sc = spark.sparkContext
-
     def jobs(label, fn):
-        label = f"{label}_{uuid.uuid4().hex[:8]}"  # group ids accumulate per session
-        sc.setJobGroup(label, label)
-        try:
-            fn()
-        finally:
-            sc.setJobGroup("idle", "idle")
-        return len(sc.statusTracker().getJobIdsForGroup(label))
+        return _count_jobs(spark, label, fn)
 
     _mk(store, spark, "jobpin", [(f"k{i:03d}", i) for i in range(120)])
     store.snapshot("cdc.jobpin", "jp_s1")
@@ -972,16 +976,8 @@ def test_indexed_dml_job_counts_stay_fused(store, spark):
     the replica's feed replay is the changefeed-ship shape.  Bounds are
     the counts measured before the index decision moved into the commit
     tail; the index must equal the main table's projection at the end."""
-    sc = spark.sparkContext
-
     def jobs(label, fn):
-        label = f"{label}_{uuid.uuid4().hex[:8]}"  # group ids accumulate per session
-        sc.setJobGroup(label, label)
-        try:
-            fn()
-        finally:
-            sc.setJobGroup("idle", "idle")
-        return len(sc.statusTracker().getJobIdsForGroup(label))
+        return _count_jobs(spark, label, fn)
 
     _mk(store, spark, "ixpin", [(f"k{i:03d}", i) for i in range(120)])
     store.snapshot("cdc.ixpin", "ixp_s1")
