@@ -2581,7 +2581,14 @@ class KeyedTableStore:
         (``_bloom-srckey/``, built by every index write path) and the
         locate SCANS only the files whose sidecar admits a changed key.
         ``probe_keys`` are the changed keys as the batch pin holds them
-        on the driver (``None`` = unknown: no src-key Bloom pruning).
+        on the driver (``None`` = unknown: no src-key Bloom pruning, and
+        no broadcast hint on the unbounded key frame).  A DENSE probe —
+        at least ``_DENSE_KEYS_PER_FILE`` keys per Bloom survivor file —
+        skips the locate and rewrites every survivor (sound: the
+        anti-join drops nothing from a false-positive file); when that
+        rewrite carries no index file, the appended projections fold
+        into it (:meth:`_selective_rewrite`), so the index keeps its
+        file count.
         A caller that already HOLDS the changed keys' post-write rows
         passes them as ``changed_rows`` and skips the main-table
         semi-join re-read entirely (``main`` is unused then): a
@@ -2590,9 +2597,12 @@ class KeyedTableStore:
         whose ``changed_keys`` is ``None``: nothing to drop)."""
         keys = None
         if changed_keys is not None:
-            keys = F.broadcast(
-                changed_keys.select(F.col(ROW_KEY).alias("__changed_key"))
-            )
+            keys = changed_keys.select(F.col(ROW_KEY).alias("__changed_key"))
+            if probe_keys is not None:
+                # the batch pin bounds the key set (the driver holds
+                # it), so the broadcast is bounded too; an over-cap set
+                # is left to AQE's join choice
+                keys = F.broadcast(keys)
         if changed_rows is None:
             # current (post-DML) rows for the changed keys: the appends.
             # Batch-sized by the incremental threshold; pinned so each
@@ -2655,15 +2665,30 @@ class KeyedTableStore:
                     ]
                     if not ifiles:
                         return False
-                affected = self._locate_affected_files(
-                    ispec,
-                    lambda d: d.join(
-                        keys,
-                        F.col("`i:src_key`") == F.col("__changed_key"),
-                        "left_semi",
-                    ),
-                    files=ifiles,
-                )
+                if (
+                    probe_keys is not None
+                    and len(probe_keys)
+                    >= self._DENSE_KEYS_PER_FILE * len(ifiles)
+                ):
+                    # a DENSE probe: the locate would mark (almost)
+                    # every survivor affected — rewrite them directly;
+                    # the anti-join drops nothing from a file holding
+                    # none of the keys
+                    affected = dict.fromkeys(ifiles, 0)
+                else:
+                    # an over-cap key frame may not broadcast: tag each
+                    # row with its file before the join
+                    affected = self._locate_affected_files(
+                        ispec,
+                        lambda d: d.withColumn(
+                            "__f", F.input_file_name()
+                        ).join(
+                            keys,
+                            F.col("`i:src_key`") == F.col("__changed_key"),
+                            "left_semi",
+                        ),
+                        files=ifiles,
+                    )
                 if affected:
                     self._selective_rewrite(
                         ispec,
@@ -3353,6 +3378,15 @@ class KeyedTableStore:
         n = n_regions or self._n_regions(spec)
         return df.repartitionByRange(n, ROW_KEY).sortWithinPartitions(ROW_KEY)
 
+    @staticmethod
+    def _conform(schema, df: DataFrame) -> DataFrame:
+        """``df`` as the declared ``schema``: its columns in declared
+        order, each cast to its declared type."""
+        return df.select(
+            *[F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
+              for f in schema.fields]
+        )
+
     def _sorted_rewrite(
         self,
         spec: TableSpec,
@@ -3370,11 +3404,9 @@ class KeyedTableStore:
         every FULL-table rewrite (compaction, truncate, version GC);
         the DML paths ride the selective variants instead
         (:meth:`_selective_rewrite`, :meth:`upsert`)."""
-        schema = spec.schema()
-        out = df.select(
-            *[F.col(f"`{f.name}`").cast(f.dataType).alias(f.name) for f in schema.fields]
+        out = self._region_layout(
+            spec, self._conform(spec.schema(), df), n_regions=n_regions
         )
-        out = self._region_layout(spec, out, n_regions=n_regions)
         self._atomic_swap_write(
             spec, out, validate=validate, expected_base=expected_base,
             under_lock_check=under_lock_check,
@@ -4403,6 +4435,13 @@ class KeyedTableStore:
     # larger batches rely on span pruning + the distributed locate
     _BLOOM_MERGE_PROBE_MAX = 4096
 
+    # a pinned probe of at least this many keys per candidate file is
+    # DENSE: a locate scan would almost surely mark every candidate
+    # affected, so upsert and the index delta skip it and rewrite the
+    # candidates directly (sound: the merge window and the index
+    # anti-join leave an unmatched file's rows untouched)
+    _DENSE_KEYS_PER_FILE = 64
+
     # a bloom build whose files total at most this many rows runs
     # driver-side (bounded pyarrow key reads, no Spark job); above it,
     # the two-stage distributed build runs
@@ -4498,15 +4537,16 @@ class KeyedTableStore:
             ):
                 # every file intersects the batch span and the table is
                 # no larger than its region fan-out (a toy or freshly-
-                # compacted layout); if the batch is also DENSE (>= 64
-                # keys per file) a locate scan would almost surely mark
-                # every file affected anyway — skip the job and treat
-                # all candidates as affected (the merge window leaves
-                # unmatched rows untouched, so the result is identical).
+                # compacted layout); if the batch is also DENSE
+                # (``_DENSE_KEYS_PER_FILE``) a locate scan would almost
+                # surely mark every file affected anyway — skip the job
+                # and treat all candidates as affected (the merge window
+                # leaves unmatched rows untouched, so the result is
+                # identical).
                 # A small batch still locates, keeping region-confined
                 # MERGE O(affected); at scale files exceed the region
                 # fan-out and this never triggers.
-                if b.n >= 64 * len(stats):
+                if b.n >= self._DENSE_KEYS_PER_FILE * len(stats):
                     affected = candidates
             if affected is None:
                 affected = self._locate_affected_files(
@@ -4532,14 +4572,20 @@ class KeyedTableStore:
         ``n_changed`` keys fit :meth:`_index_delta_fits` against the
         pre-swap rows of ``footer_stats`` (the attempt's candidate
         stats, one record per data file), else ``None`` (full rebuild).
-        ``batch_span`` is the incoming batch's ``(min, max)`` key."""
-        from pyspark.sql import Observation, Window
+        ``batch_span`` is the incoming batch's ``(min, max)`` key.
 
-        def conform(df: DataFrame) -> DataFrame:
-            return df.select(
-                *[F.col(f"`{f.name}`").cast(f.dataType).alias(f.name)
-                  for f in schema.fields]
-            )
+        Layout.  When the rewrite CARRIES NOTHING (every file of the
+        generation is affected or holds no rows,
+        :meth:`_carries_nothing`) every incoming row merges in the one
+        range exchange over ``len(affected)`` partitions: no carried
+        file's span needs keeping clear, so a dense rewrite keeps its
+        file count.
+        Otherwise the batch splits at the affected span and its new
+        keys outside it write a run of their own: at most one sorted
+        file per side of the span when the driver holds the batch's
+        keys (``changed[1]``) and the table declares no split keys,
+        else the table's region layout."""
+        from pyspark.sql import Observation, Window
 
         observations: list[Observation] = []
 
@@ -4551,18 +4597,10 @@ class KeyedTableStore:
                         "deduplicate the source first"
                     )
 
-        # split the batch at the affected files' key span: keys inside
-        # it merge with those files; keys OUTSIDE become their own
-        # fresh sorted run — folding a far-away new key into the
-        # rewritten region file would widen that file's min/max range
-        # across the keyspace, wrecking pruning and re-marking it
-        # "affected" for every later DML.  (A key can only MATCH inside
-        # the span, so the split cannot separate a duplicate pair or
-        # orphan a match; span bounds come from the same footer stats
-        # region pruning trusts.)
+        listing = self._data_files(path)
+        new_run_known = batch_span is not None
+        lo = hi = None
         if affected:
-            lo, hi = self._key_span(path, affected, stats=footer_stats)
-            in_span = F.col(ROW_KEY).between(F.lit(lo), F.lit(hi))
             sub = self.spark.read.schema(schema).parquet(
                 *[os.path.join(path, f) for f in affected]
             )
@@ -4573,8 +4611,42 @@ class KeyedTableStore:
                 # keys never match an anti-join probe, so NULL-key rows
                 # are kept (same law as delete_where)
                 sub = sub.join(F.broadcast(drop_keys), ROW_KEY, "left_anti")
+            if self._carries_nothing(path, listing, affected, footer_stats):
+                # no row is carried: fold every incoming row into the
+                # merge (no new-key run beside it)
+                merge_in, new_run = incoming, None
+            else:
+                # split the batch at the affected files' key span: keys
+                # inside it merge with those files; keys OUTSIDE become
+                # their own fresh sorted run — folding a far-away new
+                # key into the rewritten region file would widen that
+                # file's min/max range across a CARRIED file's keyspace,
+                # wrecking pruning and re-marking it "affected" for
+                # every later DML.  (A key can only MATCH inside the
+                # span, so the split cannot separate a duplicate pair
+                # or orphan a match; span bounds come from the same
+                # footer stats region pruning trusts.)
+                lo, hi = self._key_span(path, affected, stats=footer_stats)
+                in_span = F.col(ROW_KEY).between(F.lit(lo), F.lit(hi))
+                merge_in = incoming.filter(in_span)
+                new_run = incoming.filter(~in_span)
+                # the batch's min and max are batch keys, so
+                # ~between(lo, hi) is empty exactly when both sit inside
+                # the affected span — decided driver-side instead of by
+                # a take(1) job (sound: for str/bytes Python ordering
+                # equals Spark's UTF8String/Binary byte ordering because
+                # UTF-8 preserves code-point order; other or mixed types
+                # keep the take(1))
+                new_run_known = (
+                    batch_span is not None
+                    and type(batch_span[0]) is type(lo)
+                    and type(batch_span[1]) is type(hi)
+                    and isinstance(lo, (str, bytes, int))
+                )
+                if new_run_known and lo <= batch_span[0] and batch_span[1] <= hi:
+                    new_run = None
             tagged = sub.withColumn("__src", F.lit(0)).unionByName(
-                incoming.filter(in_span).withColumn("__src", F.lit(1))
+                merge_in.withColumn("__src", F.lit(1))
             )
             # range-partition BEFORE the window: RangePartitioning
             # clusters equal keys, satisfying the window's distribution
@@ -4590,7 +4662,7 @@ class KeyedTableStore:
             obs = Observation()
             observations.append(obs)
             merged = merged.observe(obs, F.max("__n_src").alias("max_src_per_key"))
-            out_merged = conform(merged.drop("__src", "__n_src"))
+            out_merged = self._conform(schema, merged.drop("__src", "__n_src"))
             if spec.split_keys:
                 # pre-split table: affected files from non-adjacent
                 # regions would fold into boundary-straddling files
@@ -4601,28 +4673,12 @@ class KeyedTableStore:
                 out_merged = self._region_layout(spec, out_merged)
             else:
                 out_merged = out_merged.sortWithinPartitions(ROW_KEY)
-            new_run = incoming.filter(~in_span)
-            # the batch's min and max are batch keys, so ~between(lo,
-            # hi) is empty exactly when both sit inside the affected
-            # span — decided driver-side instead of by a take(1) job
-            # (sound: for str/bytes Python ordering equals Spark's
-            # UTF8String/Binary byte ordering because UTF-8 preserves
-            # code-point order; other or mixed types keep the take(1))
-            new_run_known = (
-                batch_span is not None
-                and type(batch_span[0]) is type(lo)
-                and type(batch_span[1]) is type(hi)
-                and isinstance(lo, (str, bytes, int))
-            )
-            if new_run_known and lo <= batch_span[0] and batch_span[1] <= hi:
-                new_run = None
         else:
             # every incoming key is new: the "merge" is a pure append of
             # one fresh sorted run (still through the atomic swap); a
             # known batch span means a non-empty batch
             out_merged = None
             new_run = incoming
-            new_run_known = batch_span is not None
         if new_run_known_empty:
             # caller proved the incoming batch is empty (a fused replay
             # whose puts were all cancelled by deletes)
@@ -4634,11 +4690,31 @@ class KeyedTableStore:
             new_counted = new_run.withColumn(
                 "__n_src", F.count(F.lit(1)).over(w2)
             ).observe(obs2, F.max("__n_src").alias("max_src_per_key"))
-            # same region-count fan-out every append batch gets from
-            # insert(): a large all-new batch must not serialize through
-            # one partition; empty range partitions write no files, so
-            # small batches still produce a compact run
-            out_new = self._region_layout(spec, conform(new_counted.drop("__n_src")))
+            out_new = self._conform(schema, new_counted.drop("__n_src"))
+            if changed[1] is None or spec.split_keys:
+                # a batch over the pin cap gets the region-count fan-out
+                # every append batch gets from insert(), so it does not
+                # serialize through one partition; a declared-split
+                # table routes its new keys by its boundaries
+                out_new = self._region_layout(spec, out_new)
+            else:
+                # a driver-resident batch (at most
+                # ``_BLOOM_MERGE_PROBE_MAX`` rows) writes ONE sorted
+                # file per side of the affected span: each side maps to
+                # its own shuffle partition through the probed hash
+                # tokens (no sampling job), an empty side writes no
+                # file, and no file straddles the span
+                side = (
+                    F.lit(0) if hi is None
+                    else (F.col(ROW_KEY) > F.lit(hi)).cast("int")
+                )
+                toks = self._partition_tokens(2)
+                token = F.element_at(
+                    F.array(*[F.lit(int(t)) for t in toks]), side + F.lit(1)
+                ).cast("int")
+                out_new = out_new.repartition(
+                    1 if hi is None else 2, token
+                ).sortWithinPartitions(ROW_KEY)
         else:
             out_new = None
 
@@ -4649,6 +4725,7 @@ class KeyedTableStore:
         if outs:
             self._swap_write_with_carry(
                 spec, outs, path, set(affected), validate=no_source_dups,
+                listing=listing,
             )
         if not self._index_delta_fits(n_changed, table_rows):
             return None
@@ -5135,7 +5212,12 @@ class KeyedTableStore:
         rewrites that region's files and HARDLINKS the rest (the
         minor-compaction discipline applied to mutations).  Conditions
         must be deterministic (the locating scan and the rewrite each
-        evaluate them — the standard SQL DML expectation)."""
+        evaluate them — the standard SQL DML expectation).  A selector
+        whose plan may shuffle (a join Spark may not broadcast) tags
+        each scanned row with ``F.input_file_name()`` as ``__f`` BEFORE
+        it joins, since the file name reads empty after an exchange;
+        other selectors leave the name to be read after them, so a
+        filter still pushes into the scan."""
         import urllib.parse
 
         if files is not None:
@@ -5147,9 +5229,12 @@ class KeyedTableStore:
             )
         else:
             cur = self.read(spec.qualified_name)
+        selected = selector(cur)
         rows = (
-            selector(cur)
-            .groupBy(F.input_file_name().alias("__f"))
+            selected.groupBy(
+                "__f" if "__f" in selected.columns
+                else F.input_file_name().alias("__f")
+            )
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
@@ -5174,18 +5259,29 @@ class KeyedTableStore:
         key-sorted rewrite of the affected subset, and the affected
         files' ranges stay disjoint from the carried files' ranges, so
         scans, min/max pruning, and region stats see the same invariants
-        a full rewrite would produce.  Callers that located ``affected``
-        themselves pass the generation ``path`` they located against, so
-        locate, rewrite, and the CAS base all name the SAME generation."""
+        a full rewrite would produce.  ``append`` rows (any keys) are
+        sound in the same way: when the rewrite CARRIES NOTHING (every
+        file of the generation is affected or holds no rows,
+        :meth:`_carries_nothing`) there is no carried range to stay
+        disjoint from, so they fold into the rewrite's one exchange over
+        ``len(affected)`` partitions and the table keeps its file
+        count; otherwise they write a fresh key-sorted run beside it.
+        Callers that located ``affected`` themselves pass the
+        generation ``path`` they located against, so locate, rewrite,
+        and the CAS base all name the SAME generation."""
         if path is None:
             path = self.table_path(spec)
-        sub = self.spark.read.schema(spec.schema()).parquet(
+        listing = self._data_files(path)
+        schema = spec.schema()
+        sub = self.spark.read.schema(schema).parquet(
             *[os.path.join(path, f) for f in affected]
         )
-        schema = spec.schema()
-        out = transform(sub).select(
-            *[F.col(f"`{f.name}`").cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
+        out = self._conform(schema, transform(sub))
+        if append is not None and self._carries_nothing(
+            path, listing, affected
+        ):
+            out = out.unionByName(self._conform(schema, append))
+            append = None
         if spec.split_keys:
             # keep every rewritten file inside ONE declared region — a
             # joint sampled repartition of files from non-adjacent
@@ -5205,22 +5301,40 @@ class KeyedTableStore:
             # drop rows AND add rows (incremental index maintenance)
             # pays one swap instead of a swap followed by an append
             outs.append(
-                self._region_layout(
-                    spec,
-                    append.select(
-                        *[
-                            F.col(f"`{f.name}`").cast(f.dataType)
-                            .alias(f.name)
-                            for f in schema.fields
-                        ]
-                    ),
-                )
+                self._region_layout(spec, self._conform(schema, append))
             )
-        self._swap_write_with_carry(spec, outs, path, set(affected))
+        self._swap_write_with_carry(
+            spec, outs, path, set(affected), listing=listing
+        )
+
+    def _carries_nothing(
+        self, path: str, listing: list, affected, stats: dict | None = None
+    ) -> bool:
+        """Whether a rewrite of ``affected`` leaves no ROW of generation
+        ``path`` to carry: every other file of ``listing`` (the listing
+        the carry uses) holds zero rows, like a fresh table's schema
+        anchor, which the swap scrubs anyway (:meth:`_scrub_empty_parts`).
+        Row counts come from ``stats``, else the span manifest, else
+        the file's footer; the check stops at the first file with
+        rows."""
+        manifest = None
+        for fname in listing:
+            if fname in affected:
+                continue
+            rec = (stats or {}).get(fname)
+            if rec is None:
+                if manifest is None:
+                    manifest = self._load_span_stats(path)
+                rec = manifest.get(fname) or self._footer_key_stats(
+                    os.path.join(path, fname)
+                )
+            if rec[2]:
+                return False
+        return True
 
     def _swap_write_with_carry(
         self, spec: TableSpec, out, src_path: str,
-        rewritten: set, validate=None,
+        rewritten: set, validate=None, listing: list | None = None,
     ) -> None:
         """Write ``out`` (one DataFrame, or a list written in order —
         first overwrite, rest append) into a new generation and carry
@@ -5232,10 +5346,13 @@ class KeyedTableStore:
         this rewrite READ, so it is also the CAS base: a concurrent
         writer committing between the caller's locate and this flip
         makes the flip fail loudly instead of silently dropping that
-        writer's files from the carry."""
+        writer's files from the carry.  ``listing`` is ``src_path``'s
+        data files when the caller already listed them to shape
+        ``out``."""
         outs = [out] if isinstance(out, DataFrame) else list(out)
         base = os.path.basename(src_path.rstrip("/"))
-        listing = self._data_files(src_path)
+        if listing is None:
+            listing = self._data_files(src_path)
         carried = [f for f in listing if f not in rewritten]
         def build(staging: str) -> None:
             for i, frame in enumerate(outs):

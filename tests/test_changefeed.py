@@ -891,8 +891,9 @@ def test_dml_job_counts_stay_fused(store, spark):
     replay is ONE locate+rewrite+swap commit, and every batch entry
     point pins its batch once as a driver-resident Arrow local relation
     (one bounded collect, no statistics, probe-key or new-run probe
-    jobs), and the changefeed itself is one row_key exchange.  Bounds
-    are the measured counts; a
+    jobs; its new keys are laid out by side of the affected span, with
+    no range-sampling job), and the changefeed itself is one row_key
+    exchange.  Bounds are the measured counts; a
     regression to the checkpoint-and-probe batch handling, to the
     stacked-exceptAll feed (9 jobs) or to the pre-fusion sequential
     replay (41+ jobs) fails loudly."""
@@ -907,7 +908,7 @@ def test_dml_job_counts_stay_fused(store, spark):
             [("k005", 500), ("x900", 900)], "row_key string, `cf:v` long"
         ),
     ))
-    assert n <= 10, f"upsert commit grew to {n} jobs"
+    assert n <= 9, f"upsert commit grew to {n} jobs"
     n = jobs("jp_delete", lambda: store.delete_keys(
         "cdc.jobpin", spark.createDataFrame([("k010",)], "row_key string")
     ))
@@ -923,7 +924,7 @@ def test_dml_job_counts_stay_fused(store, spark):
     n = jobs("jp_feed", lambda: feed.collect())
     assert n <= 2, f"collecting the changefeed grew to {n} jobs"
     n = jobs("jp_apply", lambda: replica.apply_changes("cdc.jobpin", feed))
-    assert n <= 13, f"apply_changes replay grew to {n} jobs"
+    assert n <= 12, f"apply_changes replay grew to {n} jobs"
     # and the replay converged (the pin must never trade correctness)
     src = store.read("cdc.jobpin")
     dst = replica.read("cdc.jobpin")
@@ -974,8 +975,9 @@ def test_indexed_dml_job_counts_stay_fused(store, spark):
     each write below is small enough for the delta route (drop the
     changed keys' index entries, append their fresh projections), and
     the replica's feed replay is the changefeed-ship shape.  Bounds are
-    the counts measured before the index decision moved into the commit
-    tail; the index must equal the main table's projection at the end."""
+    the measured counts (the replay's new key writes its run without a
+    range-sampling job); the index must equal the main table's
+    projection at the end."""
     def jobs(label, fn):
         return _count_jobs(spark, label, fn)
 
@@ -1017,7 +1019,7 @@ def test_indexed_dml_job_counts_stay_fused(store, spark):
     )
     bounds = {
         "upsert": 19, "delete_keys": 19, "delete_where": 15, "mutate": 16,
-        "insert": 7, "apply_changes": 24,
+        "insert": 7, "apply_changes": 23,
     }
     assert all(got[k] <= bounds[k] for k in bounds), (got, bounds)
 
@@ -1114,3 +1116,267 @@ def test_batch_pin_routes_agree(store, spark, monkeypatch):
     assert small[5] == small[7]  # the replica converged
     assert small[:2] == [None, 2] and small[2] == 2
     assert [r["applied"] for r in small[3]] == [True] * 6
+
+
+def _index_matches_rebuild(st, qn, iq):
+    """The covered index ``iq`` holds exactly the rows a rebuild from
+    ``qn``'s current state would write (:meth:`rebuild_indexes` writes
+    ``index_projection`` of the main table)."""
+    meta = st.registered_indexes(qn)[iq]
+    proj = st.index_projection(
+        st.read(qn), meta["col"], list(meta["include"]), meta["key_width"],
+        meta.get("encoding", "int"), meta.get("scale"),
+    )
+    cols = ["row_key", "i:src_key", "cf:v"]
+
+    def rows(df):
+        return sorted(
+            (tuple(r) for r in df.select(*[f"`{c}`" for c in cols]).collect()),
+            key=repr,
+        )
+
+    return rows(st.read(iq)) == rows(proj)
+
+
+def test_dense_ships_keep_replica_and_index_file_counts(store, spark):
+    """A ship that touches every file of the replica and of its covered
+    index rewrites without carrying anything, so the feed's new keys and
+    the index's fresh entries fold into that one rewrite: the replica's
+    and the index's file counts never exceed their counts after the
+    first ship (before the fold they grew by ``DEFAULT_REGIONS`` files
+    per ship).  After every ship both indexes equal a rebuild.  Also
+    pins the jobs of one dense ``upsert`` (source) and one dense
+    ``apply_changes`` (replica, index delta route)."""
+    model = {f"k{i:03d}": i for i in range(120)}
+    _mk(store, spark, "dense", sorted(model.items()))
+    store.create_covered_index("cdc.dense", "cdc.dense_by_v", "cf:v", key_width=6)
+    store.snapshot("cdc.dense", "dense_s0")
+    replica = KeyedTableStore(
+        store.spark, store.warehouse_dir + "_dense_replica", io=store.io
+    )
+    store.export_snapshot("dense_s0", replica.warehouse_dir)
+    replica.clone_snapshot("dense_s0", "cdc.dense")
+    replica.create_covered_index(
+        "cdc.dense", "cdc.dense_by_v", "cf:v", key_width=6
+    )
+
+    def n_files(st, qn):
+        return len(st._data_files(st.table_path(st.registry.get(qn))))
+
+    snap, first, jobs = "dense_s0", None, {}
+    for s in range(1, 7):
+        # 8 updates spread over the key (and value) range, 4 new keys
+        # above the max with values inside the range, 4 deletes: 16
+        # changed keys of 120 rows, the index delta route
+        puts = {f"k{15 * j + s:03d}": model[f"k{15 * j + s:03d}"] + 1
+                for j in range(8)}
+        puts.update({f"x{s}{j}": 30 * j + s for j in range(4)})
+        dels = [f"k{30 * j + 7 + s:03d}" for j in range(4)]
+        up = spark.createDataFrame(
+            sorted(puts.items()), "row_key string, `cf:v` long"
+        )
+        n = _count_jobs(spark, "dense_upsert", lambda: store.upsert("cdc.dense", up))
+        jobs.setdefault("upsert", n)
+        store.delete_keys(
+            "cdc.dense", spark.createDataFrame([(k,) for k in dels], "row_key string")
+        )
+        model.update(puts)
+        for k in dels:
+            del model[k]
+        feed = store.read_changes("cdc.dense", versus=snap)
+        n = _count_jobs(
+            spark, "dense_apply", lambda: replica.apply_changes("cdc.dense", feed)
+        )
+        jobs.setdefault("apply_changes", n)
+        store.snapshot("cdc.dense", f"dense_s{s}")
+        store.delete_snapshot(snap)
+        snap = f"dense_s{s}"
+        counts = (
+            n_files(replica, "cdc.dense"), n_files(replica, "cdc.dense_by_v"),
+            n_files(store, "cdc.dense"), n_files(store, "cdc.dense_by_v"),
+        )
+        first = first or counts
+        assert all(c <= f for c, f in zip(counts, first)), (s, counts, first)
+        for st in (store, replica):
+            got = {r["row_key"]: r["cf:v"] for r in st.read("cdc.dense").collect()}
+            assert got == model, s
+            assert not st.index_is_stale("cdc.dense_by_v")
+            assert _index_matches_rebuild(st, "cdc.dense", "cdc.dense_by_v"), s
+    assert jobs["upsert"] <= 17 and jobs["apply_changes"] <= 17, jobs
+
+
+def _spans(st, qn):
+    """``{file: (min key, max key)}`` of ``qn``'s current data files."""
+    import os
+
+    path = st.table_path(st.registry.get(qn))
+    return {
+        f: st._file_key_range(os.path.join(path, f))[:2]
+        for f in st._data_files(path)
+    }
+
+
+def test_no_carry_fold_keeps_declared_regions(store, spark):
+    """A rewrite that carries nothing folds the batch's new keys into
+    its one exchange, and on a declared-split table that exchange still
+    routes by the declared boundaries: every file stays inside one
+    region, below the first split and above the last included."""
+    import bisect
+
+    splits = ["k040", "k080"]
+    _mk(store, spark, "fold_split", [(f"k{i:03d}", i) for i in range(120)],
+        split_keys=splits)
+    before = _spans(store, "cdc.fold_split")
+    batch = [(f"k{i:03d}", -i) for i in (5, 45, 95)] + [("a001", 1), ("x001", 2)]
+    store.upsert(
+        "cdc.fold_split", spark.createDataFrame(batch, "row_key string, `cf:v` long")
+    )
+    after = _spans(store, "cdc.fold_split")
+    assert not set(after) & set(before)  # nothing carried
+    assert len(after) == len(before) == 3  # no new-key run beside it
+    for f, (lo, hi) in after.items():
+        assert bisect.bisect_right(splits, lo) == bisect.bisect_right(splits, hi), (
+            f, lo, hi,
+        )
+    got = {r["row_key"]: r["cf:v"] for r in store.read("cdc.fold_split").collect()}
+    assert len(got) == 122 and got["a001"] == 1 and got["k045"] == -45
+
+
+def test_no_carry_fold_refuses_duplicate_source_keys(store, spark):
+    """With every incoming row in the merge window, its ``Observation``
+    sees the new keys too: a duplicate NEW key (or a duplicate matched
+    key) in a batch that touches every file still aborts the swap and
+    leaves the table untouched."""
+    _mk(store, spark, "fold_dup", [(f"k{i:03d}", i) for i in range(120)])
+    qn = "cdc.fold_dup"
+    spec = store.registry.get(qn)
+    rows = sorted(map(tuple, store.read(qn).collect()))
+    gen = store.table_path(spec)
+    touch_all = [(f"k{i:03d}", -i) for i in range(0, 120, 10)]
+    for dup in ([("x001", 1), ("x001", 2)], [("k050", 1), ("k050", 2)]):
+        with pytest.raises(Exception, match="duplicate row_key"):
+            store.upsert(qn, spark.createDataFrame(
+                touch_all + dup, "row_key string, `cf:v` long"
+            ))
+        assert store.table_path(spec) == gen
+        assert sorted(map(tuple, store.read(qn).collect())) == rows
+
+
+def test_driver_resident_new_run_never_straddles_the_affected_span(store, spark):
+    """A driver-resident batch whose new keys sit on both sides of the
+    affected span writes one sorted file per side, and no new file's
+    span reaches into the rewritten files' span."""
+    qn = "cdc.side_run"
+    _mk(store, spark, "side_run", [(f"k{i:03d}", i) for i in range(120)])
+    before = _spans(store, qn)
+    store.upsert(qn, spark.createDataFrame(
+        [("k050", -50), ("a001", 1), ("a002", 2), ("z001", 3), ("z002", 4)],
+        "row_key string, `cf:v` long",
+    ))
+    after = _spans(store, qn)
+    carried = set(before) & set(after)
+    rewritten = [after[f] for f in after if f not in carried]
+    assert len(before) - len(carried) == 1  # only k050's file was rewritten
+    assert len(rewritten) == 3  # the rewritten file + one file per side
+    (a_lo, a_hi) = [s for s in rewritten if s[0] <= "k050" <= s[1]][0]
+    runs = [s for s in rewritten if not s[0] <= "k050" <= s[1]]
+    assert sorted(runs) == [("a001", "a002"), ("z001", "z002")]
+    for lo, hi in runs:
+        assert hi < a_lo or lo > a_hi, (lo, hi, a_lo, a_hi)
+    got = {r["row_key"]: r["cf:v"] for r in store.read(qn).collect()}
+    assert len(got) == 124 and got["k050"] == -50 and got["z002"] == 4
+
+
+def test_dense_index_locate_skip_agrees_with_located_route(
+    store, spark, monkeypatch
+):
+    """The index delta's dense route (rewrite every src-key Bloom
+    survivor, no locate) and its located route leave the same index,
+    equal to a rebuild, on a plain table with NULL cells and on a
+    versioned table whose keys hold several cells."""
+    located = []
+    orig = KeyedTableStore._locate_affected_files
+
+    def spy(self, spec, *a, **kw):
+        located.append(spec.qualified_name)
+        return orig(self, spec, *a, **kw)
+
+    monkeypatch.setattr(KeyedTableStore, "_locate_affected_files", spy)
+
+    def run(tag, per_file):
+        monkeypatch.setattr(KeyedTableStore, "_DENSE_KEYS_PER_FILE", per_file)
+        out = []
+        for versioned in (False, True):
+            name = f"dskip_{tag}_{'v' if versioned else 'p'}"
+            qn, iq = f"cdc.{name}", f"cdc.{name}_by_v"
+            store.create_table(TableSpec(
+                namespace="cdc", name=name, key_type="string",
+                families={"cf": {"v": "long"}},
+                properties={"versions": "3"} if versioned else {},
+            ))
+            cells = [
+                (f"d{i:03d}", None if i % 7 == 3 else i * 10 + c)
+                for i in range(100) for c in range(2 if versioned else 1)
+            ]
+            if not versioned:
+                cells += [(f"d{i:03d}", None) for i in range(100, 200)]
+            store.insert(qn, spark.createDataFrame(
+                cells, "row_key string, `cf:v` long"
+            ), generate_row_key=False)
+            store.create_covered_index(qn, iq, "cf:v", key_width=6)
+            located.clear()
+            if versioned:
+                store.delete_cells(qn, spark.createDataFrame(
+                    [(f"d{i:03d}", i * 10) for i in range(0, 100, 5)],
+                    "row_key string, `cf:v` long",
+                ))
+            else:
+                store.upsert(qn, spark.createDataFrame(
+                    [(f"d{i:03d}", None if i % 3 else i + 5000)
+                     for i in range(0, 200, 5)],
+                    "row_key string, `cf:v` long",
+                ))
+            store.delete_keys(qn, spark.createDataFrame(
+                [(f"d{i:03d}",) for i in range(1, 100, 10)], "row_key string"
+            ))
+            assert not store.index_is_stale(iq)
+            assert _index_matches_rebuild(store, qn, iq), (tag, versioned)
+            out.append((
+                iq in located,
+                sorted(map(tuple, store.read(iq).collect()), key=repr),
+            ))
+        return out
+
+    dense, sparse = run("dense", 1), run("located", 10**9)
+    assert [d for d, _ in dense] == [False, False]  # the skip fired
+    assert [d for d, _ in sparse] == [True, True]  # the locate ran
+    assert [r for _, r in dense] == [r for _, r in sparse]
+
+
+def test_over_cap_index_delta_broadcasts_nothing(store, spark, monkeypatch):
+    """The index delta broadcasts its changed keys only when the batch
+    pin bounds them (the driver holds them); over the pin cap the key
+    frame goes to the join unhinted, and the index still equals a
+    rebuild."""
+    hinted = []
+    orig = F.broadcast
+
+    def spy(df):
+        if "__changed_key" in df.columns:
+            hinted.append(df)
+        return orig(df)
+
+    monkeypatch.setattr(F, "broadcast", spy)
+    for tag, cap in (("under", 4096), ("over", 1)):
+        monkeypatch.setattr(KeyedTableStore, "_BLOOM_MERGE_PROBE_MAX", cap)
+        qn = f"cdc.bcast_{tag}"
+        _mk(store, spark, f"bcast_{tag}", [(f"b{i:03d}", i) for i in range(40)])
+        store.create_covered_index(qn, f"{qn}_by_v", "cf:v", key_width=6)
+        hinted.clear()
+        store.upsert(qn, spark.createDataFrame(
+            [("b003", 300), ("b017", 1700), ("b900", 9)],
+            "row_key string, `cf:v` long",
+        ))
+        assert bool(hinted) == (tag == "under"), tag
+        assert not store.index_is_stale(f"{qn}_by_v")
+        assert _index_matches_rebuild(store, qn, f"{qn}_by_v"), tag
