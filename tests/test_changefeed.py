@@ -21,6 +21,7 @@ exchange drops rewritten-but-unchanged rows.  This suite pins:
 - loud errors: no previous generation / unknown snapshot.
 """
 
+import os
 import uuid
 
 import pytest
@@ -1207,8 +1208,6 @@ def test_dense_ships_keep_replica_and_index_file_counts(store, spark):
 
 def _spans(st, qn):
     """``{file: (min key, max key)}`` of ``qn``'s current data files."""
-    import os
-
     path = st.table_path(st.registry.get(qn))
     return {
         f: st._file_key_range(os.path.join(path, f))[:2]

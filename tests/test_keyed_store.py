@@ -1620,7 +1620,7 @@ def test_swap_protocol_crash_at_every_step(spark, tmp_path, monkeypatch, crash_a
     if crash_at == "build":
         orig = KeyedTableStore._swap_write_with_carry
 
-        def f(self, spc, out, src, rewritten, validate=None):
+        def f(self, spc, out, src, rewritten, validate=None, listing=None):
             def bad_build(staging):
                 os.makedirs(staging, exist_ok=True)  # partial build
                 raise boom
