@@ -1144,8 +1144,9 @@ def test_dense_ships_keep_replica_and_index_file_counts(store, spark):
     index rewrites without carrying anything, so the feed's new keys and
     the index's fresh entries fold into that one rewrite: the replica's
     and the index's file counts never exceed their counts after the
-    first ship (before the fold they grew by ``DEFAULT_REGIONS`` files
-    per ship).  After every ship both indexes equal a rebuild.  Also
+    first ship (a separate new-key run beside the rewrite would add
+    ``DEFAULT_REGIONS`` files per ship).  After every ship both indexes
+    equal a rebuild.  Also
     pins the jobs of one dense ``upsert`` (source) and one dense
     ``apply_changes`` (replica, index delta route)."""
     model = {f"k{i:03d}": i for i in range(120)}
